@@ -495,9 +495,13 @@ object ManifestFileSink {
 
   /** Row-level deletes, merge-on-read. A DELETE commit publishes a normal
     * manifest whose entry lines are DELETION VECTORS instead of data
-    * files: `~dv\t<file>\t<count>\t<p0,p1,...>` — the ROW POSITIONS
-    * (0-based line index, the sink's natural row id: task files are
-    * immutable) deleted from an already-committed file. Readers subtract
+    * files: `~dv\t<file>\t<count>\t<runs>` — the ROW POSITIONS (0-based
+    * line index, the sink's natural row id: task files are immutable)
+    * deleted from an already-committed file, `<count>` of them, written
+    * as comma-separated ascending INCLUSIVE RUNS: `0-39999` retracts a
+    * whole 40,000-row file, `3,7-9` is positions 3, 7, 8 and 9. A bare
+    * position is a one-element run, so the older plain comma list
+    * (`3,7,8,9`) is the same grammar and parses unchanged. Readers subtract
     * the union of visible vectors while scanning (merge-on-read); the
     * data files are never touched, so the delete commit is O(matching
     * rows) metadata and time travel to a pre-delete snapshot still sees
@@ -529,23 +533,92 @@ object ManifestFileSink {
       entriesOf(m).map(e => e._1 -> ddl)
     }.toMap
 
-  /** Deletion vectors listed by ONE manifest: (data file, sorted positions). */
+  /** Deletion vectors listed by ONE manifest: (data file, positions) —
+    * the only decoder of the `<runs>` field. */
   private[sources] def deleteVectorsOf(m: File): Seq[(String, Array[Long])] =
     Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines)
       .filter(_.startsWith(DvPrefix)).map { line =>
         val parts = line.split("\t")
         (parts(1),
-          if (parts.length > 3 && parts(3).nonEmpty) parts(3).split(",").map(_.toLong)
+          if (parts.length > 3) decodeRuns(parts(3))
           else Array.empty[Long])
       }.toSeq
 
-  /** The union of all deletion vectors visible at a snapshot, per file —
-    * what a merge-on-read scan subtracts. */
+  /** Sorted distinct positions as inclusive runs: `0-3,7,9-10`. */
+  private[sources] def encodeRuns(ps: Array[Long]): String = {
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i < ps.length) {
+      var j = i
+      while (j + 1 < ps.length && ps(j + 1) == ps(j) + 1) j += 1
+      if (sb.length > 0) sb.append(',')
+      sb.append(ps(i))
+      if (j > i) sb.append('-').append(ps(j))
+      i = j + 1
+    }
+    sb.toString
+  }
+
+  /** Inverse of [[encodeRuns]]. */
+  private[sources] def decodeRuns(s: String): Array[Long] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    var i = 0
+    while (i < s.length) {
+      var end = s.indexOf(',', i)
+      if (end < 0) end = s.length
+      val dash = s.indexOf('-', i)
+      if (dash >= 0 && dash < end) {
+        var p = s.substring(i, dash).toLong
+        val last = s.substring(dash + 1, end).toLong
+        while (p <= last) { out += p; p += 1 }
+      } else if (end > i) out += s.substring(i, end).toLong
+      i = end + 1
+    }
+    out.result()
+  }
+
+  /** Sort and dedupe in place; returns the distinct prefix. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
+  }
+
+  /** Per-file union of position deltas: sorted, distinct, unboxed. */
+  private[sources] def unionPositions(
+      dvs: Iterable[(String, Array[Long])]): Map[String, Array[Long]] =
+    dvs.groupMap(_._1)(_._2)
+      .map { case (f, ps) => f -> sortedDistinct(Array.concat(ps.toSeq: _*)) }
+
+  /** The union of all deletion vectors listed by `ms`, per file — what a
+    * merge-on-read scan of that manifest set subtracts. */
+  private[sources] def deleteVectorsIn(ms: Seq[File]): Map[String, Array[Long]] =
+    unionPositions(ms.flatMap(deleteVectorsOf))
+
+  /** The union of all deletion vectors visible at a snapshot, per file. */
   private[sources] def deleteVectors(
       path: String, asOf: Option[String] = None): Map[String, Array[Long]] =
-    snapshot(path, asOf).flatMap(deleteVectorsOf)
-      .groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
-      .map { case (f, ps) => f -> ps.toArray.sorted }
+    deleteVectorsIn(snapshot(path, asOf))
+
+  /** Positions of `[0, rows)` not in the sorted distinct `deleted`: what
+    * retracting every live row of a file writes. */
+  private[sources] def livePositions(rows: Long, deleted: Array[Long]): Array[Long] = {
+    val out = new Array[Long]((rows - deleted.length).toInt)
+    var n = 0
+    var di = 0
+    var p = 0L
+    while (p < rows) {
+      if (di < deleted.length && deleted(di) == p) di += 1
+      else { out(n) = p; n += 1 }
+      p += 1
+    }
+    out
+  }
 
   /** Does this manifest carry any deletion vector? (Streamed — the change
     * feed asks this per window manifest.) */
@@ -810,9 +883,11 @@ object ManifestFileSink {
       prune: Option[org.apache.spark.sql.sources.Filter],
       schema: StructType): Seq[MatchCandidate] = {
     val snap = snapshot(path, None)
-    val existing = deleteVectors(path, None)
-    snap.flatMap(m =>
-        entriesWithStats(m).map(e => (e._1, e._2, e._3, schemaLine(m)))).distinctBy(_._1)
+    val existing = deleteVectorsIn(snap)
+    snap.flatMap { m =>
+        val ddl = schemaLine(m)
+        entriesWithStats(m).map(e => (e._1, e._2, e._3, ddl))
+      }.distinctBy(_._1)
       .flatMap { case (file, rows, st, ddl) =>
         val deleted = existing.getOrElse(file, Array.empty[Long])
         // A fully-retracted file has no live rows to match — skip it
@@ -823,26 +898,48 @@ object ManifestFileSink {
           val fileSchema = asNullable(StructType.fromDDL(ddl))
           validateEvolution(schema, fileSchema, s"data file $file")
           if (prune.exists(f => st.exists(s => !mayMatch(f, s, fileSchema)))) None
-          else Some(MatchCandidate(file, ddl, deleted))
+          else Some(MatchCandidate(file, ddl, deleted, rows))
         }
       }
   }
 
+  /** Does `f` hold for every row without reading one? True for
+    * `AlwaysTrue` and any `And`/`Or` tree of them — the shape a DSv2
+    * truncate folds to (`And(AlwaysTrue, AlwaysTrue)`), which is why the
+    * test is structural rather than `== AlwaysTrue()`. */
+  private[sources] def isAlwaysTrue(f: org.apache.spark.sql.sources.Filter): Boolean = {
+    import org.apache.spark.sql.sources.{AlwaysTrue, And, Or}
+    f match {
+      case AlwaysTrue() => true
+      case And(l, r)    => isAlwaysTrue(l) && isAlwaysTrue(r)
+      case Or(l, r)     => isAlwaysTrue(l) && isAlwaysTrue(r)
+      case _            => false
+    }
+  }
+
   /** LIVE row positions matching `filter` per data file — the shared match
-    * scan under [[deleteWhere]] and [[replaceWhere]], and the Delta/Iceberg
-    * shape: the DRIVER handles metadata only (zone-map pruning of the
-    * candidate list), a SPARK JOB scans the admitted files (one task per
-    * file, predicate evaluated executor-side, evolution-reconciled, dead
+    * under [[deleteWhere]], [[replaceWhere]], INSERT OVERWRITE/TRUNCATE
+    * ([[commitOverwrite]]) and RTAS ([[commitReplaceTable]]). An
+    * always-true filter ([[isAlwaysTrue]]) is answered from METADATA
+    * alone: each candidate's live positions are `[0, rows)` minus the
+    * positions it already has deleted, so a full overwrite opens no old
+    * data file and runs no job — the Delta-log "remove the whole file"
+    * move. Any other filter takes the Delta/Iceberg match-scan shape: the
+    * DRIVER handles metadata only (zone-map pruning of the candidate
+    * list), a SPARK JOB scans the admitted files (one task per file,
+    * predicate evaluated executor-side, evolution-reconciled, dead
     * positions skipped), and only the per-file matched position summaries
-    * return — O(matched) driver traffic instead of O(table bytes), so a
-    * DELETE over a hot key range at 100 TB engages the whole cluster
-    * rather than one driver thread. Callers hold the commit lock. */
+    * return — O(matched) driver traffic instead of O(table bytes). Both
+    * paths share [[matchCandidates]]' evolution validation and its skip
+    * of fully retracted files. Callers hold the commit lock. */
   private def matchPositions(
       path: String,
       filter: org.apache.spark.sql.sources.Filter,
-      schema: StructType): Seq[(String, Seq[Long])] = {
+      schema: StructType): Seq[(String, Array[Long])] = {
     val cands = matchCandidates(path, Some(filter), schema)
     if (cands.isEmpty) return Nil
+    if (isAlwaysTrue(filter))
+      return cands.map(c => c.file -> livePositions(c.rows, c.deleted)).sortBy(_._1)
     val abs = new File(path).getAbsolutePath
     activeSession.sparkContext.parallelize(cands, matchSlices(cands.size))
       .flatMap(c => MatchScan.filterPositions(abs, c, schema, filter))
@@ -867,7 +964,7 @@ object ManifestFileSink {
       newFiles: Seq[String],
       key: String,
       schema: StructType,
-      prune: Option[org.apache.spark.sql.sources.Filter]): Seq[(String, Seq[Long])] = {
+      prune: Option[org.apache.spark.sql.sources.Filter]): Seq[(String, Array[Long])] = {
     val cands = matchCandidates(path, prune, schema)
     if (cands.isEmpty) return Nil
     val sc = spark.sparkContext
@@ -881,22 +978,23 @@ object ManifestFileSink {
       .join(srcKeys)
       .map { case (_, ((file, pos), _)) => (file, pos) }
       .groupByKey()
-      .map { case (f, ps) => (f, ps.toSeq.sorted: Seq[Long]) }
+      .map { case (f, ps) => (f, ps.toArray.sorted) }
       .collect().toSeq.sortBy(_._1)
   }
 
   /** Publish one manifest carrying `dataLines` (already-rendered entry
-    * lines) and deletion vectors. Callers hold the commit lock. */
+    * lines) and deletion vectors (per file: sorted distinct positions,
+    * written as runs). Callers hold the commit lock. */
   private def publishCommit(
       path: String,
       schemaText: String,
       dataLines: Seq[String],
-      dvs: Seq[(String, Seq[Long])],
+      dvs: Seq[(String, Array[Long])],
       staged: Option[String] = None): Unit = {
     val meta = ManifestMeta(claimSeq(path), Nil, staged = staged)
     val lines = renderHeader(meta) +: schemaText +:
       (dataLines ++ dvs.map { case (f, ps) =>
-        s"$DvMarker\t$f\t${ps.length}\t${ps.mkString(",")}"
+        s"$DvMarker\t$f\t${ps.length}\t${encodeRuns(ps)}"
       })
     val name = s"manifest-${java.util.UUID.randomUUID().toString}"
     val tmp = Paths.get(path, s".$name.tmp")
@@ -915,7 +1013,8 @@ object ManifestFileSink {
     * newly deleted. The match scan is a SPARK JOB — one task per admitted
     * file, predicate evaluated executor-side, only position summaries
     * collected ([[matchPositions]]) — so the candidate byte volume never
-    * funnels through the driver. */
+    * funnels through the driver; a DELETE without WHERE (always true)
+    * needs no scan at all and retracts from metadata. */
   def deleteWhere(
       path: String,
       filter: org.apache.spark.sql.sources.Filter): Long = commitLock(path).synchronized {
@@ -926,7 +1025,7 @@ object ManifestFileSink {
     val newDvs = matchPositions(path, filter, schema)
     if (newDvs.isEmpty) return 0L
     publishCommit(path, schemaText, Nil, newDvs)
-    newDvs.map(_._2.size.toLong).sum
+    newDvs.map(_._2.length.toLong).sum
   }
 
   /** [[deleteWhere]] STAGED as a WAP commit: the deletion-vector
@@ -955,7 +1054,7 @@ object ManifestFileSink {
     val newDvs = matchPositions(path, filter, schema)
     if (newDvs.isEmpty) return 0L
     publishCommit(path, schemaText, Nil, newDvs, staged = Some(wapId))
-    newDvs.map(_._2.size.toLong).sum
+    newDvs.map(_._2.length.toLong).sum
   }
 
   /** MERGE (upsert) by key, in ONE atomic commit: rows of `source` REPLACE
@@ -1026,11 +1125,11 @@ object ManifestFileSink {
       val snap = snapshot(path, None)
       val schemaText = snap.lastOption.map(schemaLine).getOrElse(asNullable(schema).toDDL)
       ensureSchemaUnchanged(path, "merge", schema, schemaText, snap.nonEmpty)
-      val dvLines: Seq[(String, Seq[Long])] =
+      val dvLines: Seq[(String, Array[Long])] =
         if (snap.isEmpty || newFiles.isEmpty) Nil
         else matchPositionsByKey(source.sparkSession, path, newFiles, key, schema, prune)
       publishCommit(path, schemaText, dataLines, dvLines)
-      (dvLines.map(_._2.size.toLong).sum, inserted)
+      (dvLines.map(_._2.length.toLong).sum, inserted)
     }
   }
 
@@ -1131,7 +1230,7 @@ object ManifestFileSink {
       val dvLines =
         if (snap.isEmpty) Nil else matchPositions(path, filter, schema)
       publishCommit(path, schemaText, dataLines, dvLines)
-      (dvLines.map(_._2.size.toLong).sum, inserted)
+      (dvLines.map(_._2.length.toLong).sum, inserted)
     }
   }
 
@@ -2977,16 +3076,17 @@ object ManifestFileSink {
 
   /** The locked commit half of an atomic RTAS (`REPLACE TABLE AS
     * SELECT` via [[GraftCatalog.stageReplace]]): retract EVERY live row
-    * of the current snapshot (the distributed AlwaysTrue match scan,
-    * evaluated under the CURRENT schema — the predicate reads no
-    * columns, so old files need no reconciliation with the new shape)
-    * and publish the staged task files under the NEW schema, in ONE
-    * manifest. Readers see the old table or the new one, never a mix;
-    * pre-replace snapshots stay time-travelable; and unlike DROP+CREATE
-    * the commit history survives. A replace that CHANGES a column's
-    * type is legal — the old rows are fully retracted in the same
-    * commit, and the scan planner validates evolution only against
-    * files with live rows. */
+    * of the current snapshot (the always-true match, derived from
+    * manifest metadata alone — no old data file is opened and no job
+    * runs; candidates are validated under the CURRENT schema, since the
+    * predicate reads no columns and old files need no reconciliation
+    * with the new shape) and publish the staged task files under the
+    * NEW schema, in ONE manifest. Readers see the old table or the new
+    * one, never a mix; pre-replace snapshots stay time-travelable; and
+    * unlike DROP+CREATE the commit history survives. A replace that
+    * CHANGES a column's type is legal — the old rows are fully retracted
+    * in the same commit, and the scan planner validates evolution only
+    * against files with live rows. */
   private[sources] def commitReplaceTable(
       path: String,
       schema: StructType,
@@ -3007,9 +3107,13 @@ object ManifestFileSink {
   }
 
   /** The locked commit half of an INSERT OVERWRITE — identical mechanics
-    * to [[replaceWhere]] (schema fence, distributed match scan for the
+    * to [[replaceWhere]] (schema fence, [[matchPositions]] for the
     * retraction, one atomic manifest), but fed by the DSv2 write
-    * protocol's task-commit messages instead of a DataFrame. */
+    * protocol's task-commit messages instead of a DataFrame. A full
+    * overwrite (path-API `mode("overwrite")`, TRUNCATE, unconditioned
+    * INSERT OVERWRITE) arrives as an always-true filter and retracts
+    * from metadata alone: its cost is the new data plus one run per
+    * retracted file, not a re-read of the old generation. */
   private[sources] def commitOverwrite(
       path: String,
       schema: StructType,
@@ -3047,10 +3151,7 @@ object ManifestFileSink {
     val dataLines = commits.flatMap(_.inserted).map {
       case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
     }.toSeq
-    val dvs = commits.flatMap(_.retractions.toSeq)
-      .groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
-      .map { case (f, ps) => f -> (ps.toSeq.sorted: Seq[Long]) }
-      .toSeq.sortBy(_._1)
+    val dvs = unionPositions(commits.flatMap(_.retractions)).toSeq.sortBy(_._1)
     if (dataLines.isEmpty && dvs.isEmpty) return
     val schemaText = snapshot(path, None).lastOption.map(schemaLine)
       .getOrElse(asNullable(schema).toDDL)
@@ -3193,11 +3294,12 @@ private[sources] class ManifestTable(
     // SupportsOverwrite turns SQL `INSERT OVERWRITE` (and
     // `df.writeTo(t).overwrite(cond)`) into the sink's atomic
     // replaceWhere commit: the retraction (deletion vectors from the
-    // distributed match scan) and the new task files publish in ONE
-    // manifest — readers see the whole overwrite or none of it, and the
-    // pre-overwrite snapshot stays time-travelable. An unconditioned
-    // INSERT OVERWRITE arrives as AlwaysTrue (full logical overwrite,
-    // still one commit, history intact).
+    // match) and the new task files publish in ONE manifest — readers
+    // see the whole overwrite or none of it, and the pre-overwrite
+    // snapshot stays time-travelable. An unconditioned INSERT OVERWRITE
+    // or a truncate arrives as an always-true filter (full logical
+    // overwrite, still one commit, history intact, retracted from
+    // metadata without a scan).
     new WriteBuilder with org.apache.spark.sql.connector.write.SupportsOverwrite {
       private var overwriteFilter: Option[org.apache.spark.sql.sources.Filter] = None
       override def overwrite(
@@ -3452,9 +3554,11 @@ private case class GraftTaskMetric(metricName: String, metricValue: Long)
 
 /** One mutation match-scan candidate: everything an executor task needs to
   * scan one data file — its name, the DDL it was written under (evolution
-  * reconciliation happens in the task), and its already-deleted positions. */
+  * reconciliation happens in the task), and its already-deleted positions
+  * — plus its manifest row count, from which an always-true match derives
+  * the live positions without a scan. */
 private[sources] final case class MatchCandidate(
-    file: String, ddl: String, deleted: Array[Long])
+    file: String, ddl: String, deleted: Array[Long], rows: Long)
 
 /** EXECUTOR-side kernels of the mutation match scan — a stateless,
   * serializable-by-construction holder so the RDD closures in
@@ -3502,12 +3606,13 @@ private[sources] object MatchScan extends Serializable {
     * definitively-TRUE deletes), as one (file, positions) summary. */
   def filterPositions(
       tablePath: String, c: MatchCandidate, schema: StructType,
-      filter: org.apache.spark.sql.sources.Filter): Option[(String, Seq[Long])] = {
-    val hits = scala.collection.mutable.ArrayBuffer.empty[Long]
+      filter: org.apache.spark.sql.sources.Filter): Option[(String, Array[Long])] = {
+    val hits = new scala.collection.mutable.ArrayBuilder.ofLong
     foreachLiveRow(tablePath, c, schema) { (idx, row) =>
       if (ManifestFileSink.evalFilter(filter, row, schema).contains(true)) hits += idx
     }
-    if (hits.isEmpty) None else Some(c.file -> (hits.toSeq: Seq[Long]))
+    val ps = hits.result()
+    if (ps.isEmpty) None else Some(c.file -> ps)
   }
 
   /** A row's merge-key value as a plain JVM value with stable
@@ -3532,7 +3637,7 @@ private[sources] object MatchScan extends Serializable {
       tablePath: String, file: String, schema: StructType, key: String): Seq[Any] = {
     val idx = schema.fieldIndex(key)
     val dt = schema.fields(idx).dataType
-    val c = MatchCandidate(file, schema.toDDL, Array.empty[Long])
+    val c = MatchCandidate(file, schema.toDDL, Array.empty[Long], 0L)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     foreachLiveRow(tablePath, c, schema) { (_, row) =>
       val k = keyValue(row, idx, dt)
@@ -3590,11 +3695,8 @@ private[sources] class StagedManifestTable(
     new WriteBuilder with org.apache.spark.sql.connector.write.SupportsOverwrite {
       override def overwrite(
           filters: Array[org.apache.spark.sql.sources.Filter]): WriteBuilder = {
-        val all = filters.forall {
-          case org.apache.spark.sql.sources.AlwaysTrue() => true
-          case _ => false
-        }
-        require(all, "a staged REPLACE TABLE write can only overwrite everything")
+        require(filters.forall(ManifestFileSink.isAlwaysTrue),
+          "a staged REPLACE TABLE write can only overwrite everything")
         this
       }
       // Partitioned CTAS/RTAS asks for the same clustered distribution as
@@ -3788,7 +3890,7 @@ private class ManifestRowLevelOperation(
   * actions produced. */
 private case class DeltaTaskCommit(
     inserted: Option[CommittedFile],
-    retractions: Map[String, Seq[Long]]) extends WriterCommitMessage
+    retractions: Map[String, Array[Long]]) extends WriterCommitMessage
 
 private class ManifestDeltaBatchWrite(
     path: String, schema: StructType, pin: Option[String])
@@ -3861,7 +3963,7 @@ private class ManifestDeltaWriter(path: String, schema: StructType, name: String
   override def commit(): WriterCommitMessage =
     DeltaTaskCommit(
       Option(out).map(_.commit().asInstanceOf[CommittedFile]),
-      dels.view.mapValues(_.toSeq).toMap)
+      dels.view.mapValues(_.toArray).toMap)
 
   override def abort(): Unit =
     if (out != null) Files.deleteIfExists(Paths.get(path, "data", name))
@@ -4414,21 +4516,43 @@ private class ManifestScan(
     GraftTaskMetric("filesPruned", prunedFileCount),
     GraftTaskMetric("splitsPlanned", plannedSplitCount))
 
+  /** The snapshot this scan reads, resolved ONCE and shared by the
+    * planner statistics, the static plan and any runtime re-plan: one
+    * listing, one read of each manifest's entries and deletion vectors,
+    * and no window in which a commit landing between two listings could
+    * pair one snapshot's files with another's vectors. */
+  private lazy val snap: Seq[File] = ManifestFileSink.snapshot(path, asOf)
+
+  /** (file, rows, zone map, DDL) of every file the snapshot lists. */
+  private lazy val visible
+      : Seq[(String, Long, Option[Map[Int, ManifestFileSink.ColStats]], String)] =
+    snap.flatMap { m =>
+        val ddl = ManifestFileSink.schemaLine(m)
+        ManifestFileSink.entriesWithStats(m).map(e => (e._1, e._2, e._3, ddl))
+      }.distinctBy(_._1)
+
+  /** The snapshot's deletion vectors, per file. */
+  private lazy val snapDvs: Map[String, Array[Long]] = ManifestFileSink.deleteVectorsIn(snap)
+
   /** Planner statistics from metadata already in hand: live row counts
     * (manifest entries minus deletion vectors) and on-disk bytes of the
-    * visible files. This is what lets Catalyst/AQE make an informed
-    * broadcast-vs-shuffle decision when a manifest table sits on the
-    * build side of a join — without it a DSv2 source reports unknown
-    * size and the join conservatively shuffles. O(#entries) driver work,
-    * no data IO. */
+    * files that still hold live rows — a fully retracted file (every
+    * generation a full overwrite replaced) is never read, so counting
+    * its bytes would report (k+1)× the live size after k overwrites.
+    * This is what lets Catalyst/AQE make an informed broadcast-vs-shuffle
+    * decision when a manifest table sits on the build side of a join —
+    * without it a DSv2 source reports unknown size and the join
+    * conservatively shuffles. O(#entries) driver work, no data IO. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val dvs = ManifestFileSink.deleteVectors(path, asOf)
     var rows = 0L
     var bytes = 0L
-    ManifestFileSink.visibleFiles(path, asOf).foreach { case (f, n) =>
-      rows += math.max(0L, n - dvs.getOrElse(f, Array.empty[Long]).length)
-      val file = Paths.get(path, "data", f)
-      if (Files.exists(file)) bytes += Files.size(file)
+    visible.foreach { case (f, n, _, _) =>
+      val live = n - snapDvs.get(f).fold(0)(_.length)
+      if (live > 0) {
+        rows += live
+        val file = Paths.get(path, "data", f)
+        if (Files.exists(file)) bytes += Files.size(file)
+      }
     }
     val (r, b) = (rows, bytes)
     new org.apache.spark.sql.connector.read.Statistics {
@@ -4586,19 +4710,14 @@ private class ManifestScan(
     val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
     def schemaOf(ddl: String): StructType =
       ddlCache.getOrElseUpdate(ddl, ManifestFileSink.asNullable(StructType.fromDDL(ddl)))
-    val visible = ManifestFileSink.snapshot(path, asOf)
-      .flatMap(m => ManifestFileSink.entriesWithStats(m)
-        .map(e => (e._1, e._2, e._3, ManifestFileSink.schemaLine(m))))
-      .distinctBy(_._1)
-    // Merge-on-read vectors, fetched BEFORE validation: a fully-retracted
+    // Merge-on-read vectors, consulted BEFORE validation: a fully-retracted
     // file never contributes rows, so its (possibly type-incompatible)
     // legacy schema must not refuse the scan — the RTAS contract, where
     // a REPLACE commit retracts every old row and may change a column's
     // type in the same manifest. (Change-feed reads keep validating
     // everything: the weighted feed re-opens old files for retraction
     // images.)
-    val dvs = if (since.isEmpty) ManifestFileSink.deleteVectors(path, asOf)
-              else Map.empty[String, Array[Long]]
+    val dvs = if (since.isEmpty) snapDvs else Map.empty[String, Array[Long]]
     // Type changes refuse at PLAN time — one loud driver-side error, never
     // a per-row parse failure on an executor.
     visible
@@ -4671,7 +4790,7 @@ private class ManifestScan(
       if (!ignoreDeletes && !weighted) {
         ManifestFileSink.orderedManifests(path).find(_.getName == m)
           .map(f => ManifestFileSink.readMeta(f).seq).foreach { sinceSeq =>
-            val offending = ManifestFileSink.snapshot(path, asOf).filter(mf =>
+            val offending = snap.filter(mf =>
               ManifestFileSink.readMeta(mf).seq > sinceSeq &&
                 ManifestFileSink.hasDeleteVectors(mf))
             if (offending.nonEmpty) throw new IllegalStateException(
@@ -4737,10 +4856,8 @@ private class ManifestScan(
         case Some(s0) =>
           val visByFile = visible.map(v => v._1 -> v).toMap
           lazy val ddlMap = ManifestFileSink.fileDdlMap(path)
-          ManifestFileSink.snapshot(path, asOf)
-            .filter(m => ManifestFileSink.readMeta(m).seq > s0)
-            .flatMap(ManifestFileSink.deleteVectorsOf)
-            .groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
+          ManifestFileSink.deleteVectorsIn(
+              snap.filter(m => ManifestFileSink.readMeta(m).seq > s0))
             .toSeq.flatMap { case (f, ps) =>
               val (st, ddl) = visByFile.get(f)
                 .map(v => (v._3, v._4))
@@ -4748,7 +4865,7 @@ private class ManifestScan(
               if (st.exists(s =>
                   !effFilters.forall(flt => ManifestFileSink.mayMatch(flt, s, schemaOf(ddl)))))
                 None
-              else Some(FileSplit(f, ps.toArray.sorted, ddl, -1): InputPartition)
+              else Some(FileSplit(f, ps, ddl, -1): InputPartition)
             }
       }
     prunedFileCount = visible.size - admitted.size
@@ -5162,10 +5279,9 @@ private class ManifestMicroBatchStream(
       if (!weighted) Nil
       else {
         lazy val ddlMap = ManifestFileSink.fileDdlMap(path)
-        readable.flatMap(w => ManifestFileSink.deleteVectorsOf(w._1))
-          .groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
+        ManifestFileSink.deleteVectorsIn(readable.map(_._1))
           .toSeq.map { case (f, ps) =>
-            FileSplit(f, ps.toArray.sorted, ddlMap.getOrElse(f, ""), -1): InputPartition
+            FileSplit(f, ps, ddlMap.getOrElse(f, ""), -1): InputPartition
           }
       }
     (plus ++ minus).toArray
