@@ -164,17 +164,15 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     // line plus the id's staged commits — the table as it WILL be if
     // `wap_publish` runs. Read-only like every pinned view; a typo'd id
     // fails in the snapshot resolution, listing the staged ids.
+    val log = ManifestFileSink.Snapshot.headers(path)
     if (version.startsWith("wap:")) {
-      val schema = ManifestFileSink.storedSchema(path, Some(version))
-        .getOrElse(new StructType())
+      val schema = log.at(Some(version)).schema.getOrElse(new StructType())
       return new ManifestTable(path, schema, acceptAnySchema = false,
         pinnedAsOf = Some(version))
     }
     val manifest =
       if (version.forall(_.isDigit))
-        ManifestFileSink.orderedManifests(path)
-          .find(m => ManifestFileSink.readMeta(m).seq == version.toLong)
-          .map(_.getName)
+        log.published.find(_.meta.seq == version.toLong).map(_.name)
           .getOrElse(throw new IllegalArgumentException(
             s"no commit with seq $version in ${ident.name()} (retired by " +
               "compaction, or never published)"))
@@ -182,18 +180,16 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
         // A TAG resolves to its pinned manifest ('VERSION AS OF "v1"').
         case Some(m) => m
         // A raw manifest name is accepted only if the table knows it —
-        // live (readable) or folded (snapshot() then raises the explicit
-        // expire-snapshots error). A typo must fail loudly, never
+        // live (readable) or folded (its resolution then raises the
+        // explicit expire-snapshots error). A typo must fail loudly, never
         // resolve to an empty table.
         case None =>
-          if (ManifestFileSink.orderedManifests(path).exists(_.getName == version) ||
-              ManifestFileSink.foldedNames(path).contains(version)) version
+          if (log.published.exists(_.name == version) || log.folded.contains(version)) version
           else throw new IllegalArgumentException(
             s"'$version' is neither a tag nor a manifest of ${ident.name()}; " +
               s"tags: ${ManifestFileSink.tags(path).map(_._1).mkString(", ")}")
       }
-    val schema = ManifestFileSink.storedSchema(path, Some(manifest))
-      .getOrElse(new StructType())
+    val schema = log.at(Some(manifest)).schema.getOrElse(new StructType())
     new ManifestTable(path, schema, acceptAnySchema = false,
       pinnedAsOf = Some(manifest))
   }
@@ -746,9 +742,10 @@ private[sources] class GraftProcedure(op: String, root: String)
   private def wapStagesScan(path: String)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val stageRows = ManifestFileSink.stagedIds(path).map { id =>
-      val ms = ManifestFileSink.stagedManifests(path, id)
-      val rows = ms.flatMap(ManifestFileSink.entriesOf).map(_._2).sum
+    val log = ManifestFileSink.Snapshot(path)
+    val stageRows = log.stagedIds.map { id =>
+      val ms = log.staged(id)
+      val rows = ms.flatMap(_.entries).map(_.rows).sum
       org.apache.spark.sql.catalyst.InternalRow(
         UTF8String.fromString(id), ms.size.toLong, rows)
     }.toArray
@@ -773,13 +770,13 @@ private[sources] class GraftProcedure(op: String, root: String)
     val name = input.getUTF8String(1).toString
     val version =
       if (input.numFields < 3 || input.isNullAt(2)) "" else input.getUTF8String(2).toString
+    val ordered = ManifestFileSink.Snapshot.headers(path).published
     val manifest = version match {
       case "" =>
-        ManifestFileSink.orderedManifests(path).lastOption.map(_.getName)
+        ordered.lastOption.map(_.name)
           .getOrElse(throw new IllegalStateException(s"table at $path has no commits"))
       case v if v.forall(_.isDigit) =>
-        ManifestFileSink.orderedManifests(path)
-          .find(m => ManifestFileSink.readMeta(m).seq == v.toLong).map(_.getName)
+        ordered.find(_.meta.seq == v.toLong).map(_.name)
           .getOrElse(throw new IllegalArgumentException(
             s"no commit with seq $v (retired by compaction, or never published)"))
       case v => throw new IllegalArgumentException(
@@ -801,13 +798,14 @@ private[sources] class GraftProcedure(op: String, root: String)
   private def filesScan(path: String)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val dvs = ManifestFileSink.deleteVectors(path)
+    val snap = ManifestFileSink.Snapshot(path)
+    val dvs = snap.dvs
     // NB: must not be named `rows` — inside the anonymous LocalScan below,
     // `rows` resolves to the override itself and the tail-self-call
     // compiles into an infinite loop.
     // Shared latest-listing-per-file policy (advice-r13) — this view and
     // partitionRowCounts must never disagree on a re-listed entry.
-    val fileRows = ManifestFileSink.latestEntriesWithSchema(path, None)
+    val fileRows = snap.latestEntries
       .map { case (f, n, st, _) =>
         org.apache.spark.sql.catalyst.InternalRow(
           UTF8String.fromString(f), n,
@@ -850,18 +848,17 @@ private[sources] class GraftProcedure(op: String, root: String)
       input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     import org.apache.spark.unsafe.types.UTF8String
+    val log = ManifestFileSink.Snapshot(path)
     def refOf(i: Int): Option[String] =
       (if (input.isNullAt(i)) None
        else Some(input.getUTF8String(i).toString).filter(_.nonEmpty))
-        .map(r => ManifestFileSink.resolveRef(path, r))
+        .map(r => ManifestFileSink.resolveRef(log, r))
     val fromRef = refOf(1)
     val toRef = refOf(2)
     def entries(asOf: Option[String]): Map[String, Long] =
-      ManifestFileSink.latestEntriesWithSchema(path, asOf)
-        .map { case (f, n, _, _) => f -> n }.toMap
+      log.at(asOf).latestEntries.map { case (f, n, _, _) => f -> n }.toMap
     def dvCounts(asOf: Option[String]): Map[String, Long] =
-      ManifestFileSink.deleteVectors(path, asOf)
-        .map { case (f, a) => f -> a.length.toLong }
+      log.at(asOf).dvs.map { case (f, a) => f -> a.length.toLong }
     val fromE = entries(fromRef)
     val toE = entries(toRef)
     val fromD = dvCounts(fromRef)
@@ -921,15 +918,13 @@ private[sources] class GraftProcedure(op: String, root: String)
   private def snapshotsScan(path: String)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val hist = ManifestFileSink.orderedManifests(path).map { m =>
-      val meta = ManifestFileSink.readMeta(m)
-      val entries = ManifestFileSink.entriesWithStats(m)
+    val hist = ManifestFileSink.Snapshot(path).published.map { m =>
       org.apache.spark.sql.catalyst.InternalRow(
-        meta.seq,
-        UTF8String.fromString(m.getName),
-        entries.size.toLong,
-        entries.map(_._2).sum,
-        ManifestFileSink.hasDeleteVectors(m))
+        m.meta.seq,
+        UTF8String.fromString(m.name),
+        m.entries.size.toLong,
+        m.entries.map(_.rows).sum,
+        m.hasDeleteVectors)
     }.toArray
     val outSchema = StructType(Seq(
       org.apache.spark.sql.types.StructField("seq",

@@ -98,9 +98,12 @@ object ManifestFileSink {
     * two isolated classloaders). A claim whose writer crashed before
     * publishing is a permanent GAP in the seq line — harmless, seqs
     * are ordered, not dense — and claims at or below the published max
-    * are garbage-collected by [[compact]]/[[vacuum]] (nothing can
-    * allocate at or below the published max again, so a pruned claim
-    * can never be re-minted).
+    * are garbage-collected by [[compact]]/[[vacuum]], except the highest
+    * claim, which is never pruned. A claimer takes its floor from the
+    * listing its commit started with, which can predate another
+    * driver's publish of seq s; the surviving highest claim (≥ s) keeps
+    * `maxClaimed + 1` above every seq ever claimed, so a pruned claim can
+    * never be re-minted.
     *
     * What this fences and what it doesn't: seq UNIQUENESS (and with it
     * deterministic publication order) is now cross-process safe for
@@ -117,8 +120,8 @@ object ManifestFileSink {
     * deletion vectors and [[optimizePinned]] for rewrites. */
   private val ClaimDir = "_commits"
 
-  private[sources] def claimSeq(path: String): Long = {
-    val dir = Paths.get(path, ClaimDir)
+  private[sources] def claimSeq(log: Snapshot): Long = {
+    val dir = Paths.get(log.path, ClaimDir)
     Files.createDirectories(dir)
     def maxClaimed: Long = {
       val l = Files.list(dir)
@@ -131,7 +134,7 @@ object ManifestFileSink {
         m
       } finally l.close()
     }
-    var s = math.max(nextSeq(path), maxClaimed + 1L)
+    var s = math.max(log.nextSeq, maxClaimed + 1L)
     while (true) {
       try { Files.createFile(dir.resolve(f"$s%020d")); return s }
       catch { case _: java.nio.file.FileAlreadyExistsException => s += 1 }
@@ -172,8 +175,8 @@ object ManifestFileSink {
     * loudly; `compact(path, aboveSeq)` folds around live writers the
     * same way it folds around live consumers) — and the window is the
     * microsecond claim→rename rename, not the verb's span. */
-  private def seqConsumed(path: String): Long => Boolean = {
-    val metas = manifests(path).map(readMeta)
+  private def seqConsumed(log: Snapshot): Long => Boolean = {
+    val metas = log.all.map(_.meta)
     val direct = metas.map(_.seq).toSet
     val ranges = metas.flatMap(m => m.foldedMinSeq.zip(m.foldedMaxSeq))
     v => direct.contains(v) ||
@@ -183,10 +186,10 @@ object ManifestFileSink {
   /** Claim values not [[seqConsumed]] and with age within
     * [[claimTtlMs]] — the in-flight commits a finality reader must
     * treat as pending. */
-  private def pendingClaims(path: String): Seq[Long] = {
-    val dir = Paths.get(path, ClaimDir)
+  private def pendingClaims(log: Snapshot): Seq[Long] = {
+    val dir = Paths.get(log.path, ClaimDir)
     if (!Files.isDirectory(dir)) return Nil
-    val consumed = seqConsumed(path)
+    val consumed = seqConsumed(log)
     val now = System.currentTimeMillis()
     val ttl = claimTtlMs
     val out = Seq.newBuilder[Long]
@@ -213,8 +216,8 @@ object ManifestFileSink {
     * point, a time-travel pin that has to stay bit-stable — caps its
     * boundary here instead of at the raw max. Long.MaxValue when
     * nothing is pending (no constraint). */
-  private[sources] def stableSeqCeiling(path: String): Long =
-    pendingClaims(path).minOption.fold(Long.MaxValue)(_ - 1L)
+  private[sources] def stableSeqCeiling(log: Snapshot): Long =
+    pendingClaims(log).minOption.fold(Long.MaxValue)(_ - 1L)
 
   /** The newest published manifest at or below [[stableSeqCeiling]] —
     * what an incremental consumer should record as its `sinceManifest`
@@ -224,44 +227,45 @@ object ManifestFileSink {
     * instead of its next diff — a silently missed commit. The streaming
     * commit feed applies the same cap to its offsets. */
   def stableManifest(path: String): Option[String] = {
-    val ceil = stableSeqCeiling(path)
-    orderedManifests(path).map(f => (f, readMeta(f).seq))
-      .filter(_._2 <= ceil).lastOption.map(_._1.getName)
+    val log = Snapshot.headers(path)
+    val ceil = stableSeqCeiling(log)
+    log.published.filter(_.meta.seq <= ceil).lastOption.map(_.name)
   }
 
   /** Live pending claims (the finality gap's explanation) — surfaced by
     * the `stable_manifest` catalog procedure. */
   private[sources] def pendingClaimCount(path: String): Int =
-    pendingClaims(path).size
+    pendingClaims(Snapshot.headers(path)).size
 
   /** GC claim markers that are DEBRIS: [[seqConsumed]] claims (their
-    * commit published — possibly since folded — or staged, so
-    * [[claimSeq]] can never re-mint the value and no retro-publish is
-    * possible there) immediately; UNCONSUMED claims ≤ the published max
-    * only after [[claimTtlMs]] — while young they are the only evidence
-    * [[stableSeqCeiling]] has of an in-flight commit, and deleting them
-    * mid-flight would let a finality reader seal a boundary the stalled
-    * writer then publishes under (the advice-r18 anomaly). */
-  private[sources] def pruneClaims(path: String): Int = {
-    val dir = Paths.get(path, ClaimDir)
+    * commit published — possibly since folded — or staged, so no
+    * retro-publish is possible there) immediately; UNCONSUMED claims ≤
+    * the published max only after [[claimTtlMs]] — while young they are
+    * the only evidence [[stableSeqCeiling]] has of an in-flight commit,
+    * and deleting them mid-flight would let a finality reader seal a
+    * boundary the stalled writer then publishes under (the advice-r18
+    * anomaly). The highest claim is always kept: it is [[claimSeq]]'s
+    * floor for a claimer whose listing predates the newest publish. */
+  private[sources] def pruneClaims(log: Snapshot): Int = {
+    val dir = Paths.get(log.path, ClaimDir)
     if (!Files.isDirectory(dir)) return 0
-    val fence = manifests(path).map(readMeta(_).seq).maxOption.getOrElse(return 0)
-    val consumed = seqConsumed(path)
+    val fence = log.all.map(_.meta.seq).maxOption.getOrElse(return 0)
+    val consumed = seqConsumed(log)
     val now = System.currentTimeMillis()
     val ttl = claimTtlMs
-    var n = 0
     val l = Files.list(dir)
-    try l.forEach { p =>
-      val v = try p.getFileName.toString.toLong
-        catch { case _: NumberFormatException => Long.MaxValue }
-      val dead = v <= fence && (consumed(v) || {
+    val claims = try l.iterator.asScala.flatMap { p =>
+      p.getFileName.toString.toLongOption.map(p -> _)
+    }.toList finally l.close()
+    val top = claims.map(_._2).maxOption.getOrElse(return 0)
+    claims.count { case (p, v) =>
+      val dead = v < top && v <= fence && (consumed(v) || {
         val age = try now - Files.getLastModifiedTime(p).toMillis
           catch { case _: Exception => 0L } // vanished: nothing to do
         age > ttl
       })
-      if (dead && Files.deleteIfExists(p)) n += 1
-    } finally l.close()
-    n
+      dead && Files.deleteIfExists(p)
+    }
   }
 
   private[sources] def manifests(path: String): Seq[File] = {
@@ -273,7 +277,8 @@ object ManifestFileSink {
   /** Manifest file layout (v2):
     *   line 0: `#graft\tseq=<n>\tfolded=<name,name,...>`   (metadata header)
     *   line 1: schema DDL
-    *   line 2+: `<file>\t<rows>` entries
+    *   line 2+: `<file>\t<rows>[\t<zonemap>]` entries and `~dv` deletion
+    *            vectors ([[DvMarker]])
     * `seq` is the monotonic commit counter — publication order is defined
     * by it, never by file mtime (coarse-mtime filesystems order same-tick
     * commits arbitrarily). `folded` names the manifests a [[compact]]
@@ -283,37 +288,61 @@ object ManifestFileSink {
     * answering empty. One name is ~50 bytes of metadata; the list grows
     * with total folded commits, which a 100 TB table bounds by running
     * compaction on compounding intervals (each compact folds the previous
-    * combined manifest, so the list is the commit history, not a blowup). */
+    * combined manifest, so the list is the commit history, not a blowup).
+    * Every manifest is read through [[readManifest]] and parsed once into a
+    * [[Manifest]]; an operation sees the table through one [[Snapshot]]. */
   private[sources] final case class ManifestMeta(
       seq: Long, folded: Seq[String], headerLines: Int = 2,
       foldedMinSeq: Option[Long] = None, foldedMaxSeq: Option[Long] = None,
       staged: Option[String] = None)
 
-  /** Parse a manifest's metadata. Version-tolerant: a v2 manifest carries
-    * the `#graft` header; a v1 manifest (written before the header existed)
-    * has the schema DDL on line 0 and no header — it gets a SYNTHESIZED
-    * seq from its mtime, shifted negative so every v1 commit orders before
-    * every v2 commit (v2 seqs are ≥ 1) and v1 commits order among
-    * themselves by mtime, exactly the v1 reader's rule. A pre-existing
-    * table thus stays readable across the format change; the first
-    * [[compact]] rewrites it to v2 (a free migration path). */
-  private[sources] def readMeta(f: File): ManifestMeta = {
-    val r = Files.newBufferedReader(f.toPath, StandardCharsets.UTF_8)
-    try {
-      val h = r.readLine()
-      require(h != null, s"empty manifest: $f")
-      if (h.startsWith("#graft")) {
-        val kv = h.split("\t").drop(1).map { p =>
-          val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1)
-        }.toMap
-        ManifestMeta(kv("seq").toLong,
-          kv.get("folded").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil),
-          foldedMinSeq = kv.get("fseq").map(_.toLong),
-          foldedMaxSeq = kv.get("lseq").map(_.toLong),
-          staged = kv.get("staged").filter(_.nonEmpty))
-      } else ManifestMeta(f.lastModified() - (1L << 62), Nil, headerLines = 1)
-    } finally r.close()
+  /** Parse a manifest's header line. Version-tolerant: a v2 manifest
+    * carries the `#graft` header; a v1 manifest (written before the header
+    * existed) has the schema DDL on line 0 and no header — it gets a
+    * SYNTHESIZED seq from its mtime, shifted negative so every v1 commit
+    * orders before every v2 commit (v2 seqs are ≥ 1) and v1 commits order
+    * among themselves by mtime, exactly the v1 reader's rule. A
+    * pre-existing table thus stays readable across the format change; the
+    * first [[compact]] rewrites it to v2 (a free migration path). */
+  private def parseMeta(f: File, h: String): ManifestMeta =
+    if (h.startsWith("#graft")) {
+      val kv = h.split("\t").drop(1).map { p =>
+        val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1)
+      }.toMap
+      ManifestMeta(kv("seq").toLong,
+        kv.get("folded").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil),
+        foldedMinSeq = kv.get("fseq").map(_.toLong),
+        foldedMaxSeq = kv.get("lseq").map(_.toLong),
+        staged = kv.get("staged").filter(_.nonEmpty))
+    } else ManifestMeta(f.lastModified() - (1L << 62), Nil, headerLines = 1)
+
+  /** Manifest files opened for reading. Every read goes through
+    * [[readManifest]], so this counts the metadata plane's file opens;
+    * test-visible, like [[driverMatchFileReads]], so specs can bound what
+    * one operation costs. */
+  private[sources] val manifestReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private def readLines(f: File): IndexedSeq[String] = {
+    manifestReads.incrementAndGet()
+    val lines = Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala.toIndexedSeq
+    require(lines.nonEmpty, s"empty manifest: $f")
+    lines
   }
+
+  /** The one manifest reader: one open, reading the whole file (`full`)
+    * or only its header line. A header-only [[Manifest]] reads its body on
+    * first use — one more open, at most once. */
+  private[sources] def readManifest(f: File, full: Boolean = true): Manifest =
+    if (full) {
+      val lines = readLines(f)
+      new Manifest(f, parseMeta(f, lines.head), Some(lines))
+    } else {
+      manifestReads.incrementAndGet()
+      val r = Files.newBufferedReader(f.toPath, StandardCharsets.UTF_8)
+      val h = try r.readLine() finally r.close()
+      require(h != null, s"empty manifest: $f")
+      new Manifest(f, parseMeta(f, h), None)
+    }
 
   private def renderHeader(m: ManifestMeta): String =
     s"#graft\tseq=${m.seq}\tfolded=${m.folded.mkString(",")}" +
@@ -321,56 +350,172 @@ object ManifestFileSink {
       m.foldedMaxSeq.fold("")(s => s"\tlseq=$s") +
       m.staged.fold("")(id => s"\tstaged=$id")
 
-  /** Next commit sequence: one past the max published v2 seq (synthesized
-    * v1 seqs are negative — clamped out, so the first v2 commit over a v1
-    * table is seq 1 and orders after every v1 manifest). This is only
-    * the PUBLISHED floor — allocation goes through [[claimSeq]], which
-    * raises it past any outstanding cross-process claims and CASes the
-    * result. */
-  private[sources] def nextSeq(path: String): Long =
-    math.max(0L, manifests(path).map(readMeta(_).seq).maxOption.getOrElse(0L)) + 1L
-
-  /** Manifests in PUBLICATION order — the embedded commit sequence, with a
-    * name tiebreak only for malformed hand-written duplicates — two
-    * honest writers can no longer produce a same-seq pair, because every
-    * allocation passes [[claimSeq]]'s cross-process CAS. This order
-    * is also the snapshot timeline for [[visibleFiles]]' time travel.
-    *
-    * A live manifest whose NAME appears in another live manifest's
-    * `folded` header is SUPERSEDED — a [[compact]]/[[applyDeletes]] that
-    * crashed after publishing its combined manifest but before deleting
-    * its inputs leaves both on disk. For [[compact]] the double listing
-    * was harmless (same entry lines, deduped by name); [[applyDeletes]]
-    * rewrites files under NEW names, where a by-name dedup cannot catch
-    * the duplicate rows — so the supersede rule is structural: a folded
-    * name never contributes entries again, whether or not its file still
-    * exists. */
-  private[sources] def orderedManifests(path: String): Seq[File] = {
-    // One header read per manifest (review-r14: the folded-set pass, the
-    // staged filter, and the sort each re-opened every file — 3× IO on
-    // the hottest metadata path).
-    val metas = manifests(path).map(f => (f, readMeta(f)))
-    val folded = metas.flatMap(_._2.folded).toSet
-    // STAGED manifests (write-audit-publish, `staged=<id>` header) are
-    // invisible to the main line — and to every maintenance pass built
-    // on this listing — until wapPublish cherry-picks them in.
-    metas.filterNot { case (f, m) =>
-      folded.contains(f.getName) || m.staged.isDefined
-    }.sortBy { case (f, m) => (m.seq, f.getName) }.map(_._1)
+  /** One data-file entry of a manifest. `statsText` is the v3 zone-map
+    * field, empty for v2 entries written before zone maps existed (those
+    * files are never pruned: no stats means no claim). */
+  private[sources] final case class Entry(file: String, rows: Long, statsText: String) {
+    lazy val stats: Option[Map[Int, ColStats]] =
+      if (statsText.isEmpty) None else Some(decodeStats(statsText))
   }
 
-  /** Staged (unpublished) manifests of one WAP id, in commit order. */
-  private[sources] def stagedManifests(path: String, id: String): Seq[File] =
-    manifests(path).filter(f => readMeta(f).staged.contains(id))
-      .sortBy(f => (readMeta(f).seq, f.getName))
+  /** One manifest, parsed once: header, DDL, data entries (zone maps
+    * decoded on first use) and deletion vectors (runs decoded). */
+  private[sources] final class Manifest(
+      val file: File, val meta: ManifestMeta, read: Option[IndexedSeq[String]]) {
+    def name: String = file.getName
+    private lazy val lines: IndexedSeq[String] = read.getOrElse(readLines(file))
+    /** Schema DDL: line 1 under a v2 header, line 0 of a v1 manifest. */
+    lazy val ddl: String = lines(meta.headerLines - 1)
+    /** Entry and deletion-vector lines, as written. */
+    lazy val body: IndexedSeq[String] = lines.drop(meta.headerLines)
+    lazy val entries: IndexedSeq[Entry] =
+      body.filterNot(_.startsWith(DvPrefix)).map { line =>
+        val parts = line.split("\t")
+        Entry(parts(0), parts(1).toLong, if (parts.length > 2) parts(2) else "")
+      }
+    /** (data file, positions) — the only decoder of the `<runs>` field. */
+    lazy val dvs: IndexedSeq[(String, Array[Long])] =
+      body.filter(_.startsWith(DvPrefix)).map { line =>
+        val parts = line.split("\t")
+        (parts(1), if (parts.length > 3) decodeRuns(parts(3)) else Array.empty[Long])
+      }
+    def hasDeleteVectors: Boolean = body.exists(_.startsWith(DvPrefix))
+  }
 
-  private[sources] def stagedIds(path: String): Seq[String] =
-    manifests(path).flatMap(readMeta(_).staged).distinct.sorted
+  /** A manifest table's state, resolved ONCE per operation: one directory
+    * listing and one [[readManifest]] per manifest — whole files for
+    * `Snapshot(path)`, headers only for `Snapshot.headers(path)` (bodies
+    * then load on first use, still at most once each) — from which every
+    * view the operation needs derives: the main line, the fold ledger,
+    * WAP stages, and the manifests, schema, entries and deletion vectors
+    * visible at `asOf`. A scan, a commit or a maintenance verb therefore
+    * never pairs one listing's files with another listing's vectors.
+    *
+    * Never cached across operations: a name can come back with different
+    * content — streaming epochs reuse `manifest-e<epoch>` names, a WAP
+    * discard followed by a restart republishes the same name, a table can
+    * be recreated at the same path — so every query (each scan builder),
+    * commit and maintenance verb resolves its own. */
+  private[sources] final class Snapshot(
+      val path: String, val all: Seq[Manifest], val asOf: Option[String]) {
 
-  /** Every manifest name ever folded away by a [[compact]] — the
-    * "already published, then compacted" set [[publish]] must honour. */
-  private[sources] def foldedNames(path: String): Set[String] =
-    manifests(path).flatMap(readMeta(_).folded).toSet
+    /** The same listing at another snapshot (bodies already read are shared). */
+    def at(v: Option[String]): Snapshot = if (v == asOf) this else new Snapshot(path, all, v)
+
+    /** Every manifest name ever folded away by a [[compact]] — the
+      * "already published, then compacted" set [[publish]] must honour. */
+    lazy val folded: Set[String] = all.flatMap(_.meta.folded).toSet
+
+    /** Manifests in PUBLICATION order — the embedded commit sequence, with
+      * a name tiebreak only for malformed hand-written duplicates (two
+      * honest writers cannot produce a same-seq pair: every allocation
+      * passes [[claimSeq]]'s cross-process CAS). This order is also the
+      * time-travel timeline.
+      *
+      * A live manifest whose NAME appears in another live manifest's
+      * `folded` header is SUPERSEDED — a [[compact]]/[[applyDeletes]] that
+      * crashed after publishing its combined manifest but before deleting
+      * its inputs leaves both on disk. For [[compact]] the double listing
+      * was harmless (same entry lines, deduped by name); [[applyDeletes]]
+      * rewrites files under NEW names, where a by-name dedup cannot catch
+      * the duplicate rows — so the supersede rule is structural: a folded
+      * name never contributes entries again, whether or not its file still
+      * exists. STAGED manifests (write-audit-publish, `staged=<id>` header)
+      * are invisible to the main line — and to every maintenance pass
+      * built on it — until [[wapPublish]] cherry-picks them in. */
+    lazy val published: Seq[Manifest] =
+      all.filterNot(m => folded.contains(m.name) || m.meta.staged.isDefined)
+        .sortBy(m => (m.meta.seq, m.name))
+
+    /** Staged (unpublished) manifests of one WAP id, in commit order. */
+    def staged(id: String): Seq[Manifest] =
+      all.filter(_.meta.staged.contains(id)).sortBy(m => (m.meta.seq, m.name))
+
+    def stagedIds: Seq[String] = all.flatMap(_.meta.staged).distinct.sorted
+
+    /** Next commit sequence: one past the max published v2 seq (synthesized
+      * v1 seqs are negative — clamped out, so the first v2 commit over a
+      * v1 table is seq 1 and orders after every v1 manifest). This is only
+      * the PUBLISHED floor — allocation goes through [[claimSeq]], which
+      * raises it past any outstanding cross-process claims and CASes the
+      * result. */
+    def nextSeq: Long = math.max(0L, all.map(_.meta.seq).maxOption.getOrElse(0L)) + 1L
+
+    /** The manifest set visible at `asOf`: every manifest published at or
+      * before `asOf` (a manifest file name), in publication order — each
+      * job's commit is one manifest, so "as of manifest M" is exactly the
+      * table state the moment M's job committed. A name retired by
+      * [[compact]] raises — the snapshot was expired, and an explicit error
+      * beats silently answering empty; a name that NEVER published resolves
+      * to the empty snapshot. */
+    lazy val manifests: Seq[Manifest] = asOf match {
+      case None => published
+      // The WAP AUDIT view (`VERSION AS OF 'wap:<id>'`): the current
+      // main line PLUS the id's staged commits — what the table will be
+      // if the stage is published. Every read path funnels through this
+      // one resolution, so schema, files, and deletion vectors all see
+      // the staged state consistently. A typo'd id fails loudly.
+      case Some(v) if v.startsWith("wap:") =>
+        val id = v.substring(4)
+        val st = staged(id)
+        if (st.isEmpty) throw new IllegalArgumentException(
+          s"no staged commits under WAP id '$id'; staged ids: ${stagedIds.mkString(", ")}")
+        published ++ st
+      case Some(name) =>
+        val i = published.indexWhere(_.name == name)
+        if (i < 0 && folded.contains(name))
+          throw new IllegalArgumentException(
+            s"snapshot $name was retired by compaction (expire-snapshots): " +
+              "pre-compaction snapshots are not time-travelable")
+        published.take(i + 1)
+    }
+
+    /** DDL and (all-nullable) schema of the newest visible manifest. */
+    def ddl: Option[String] = manifests.lastOption.map(_.ddl)
+    lazy val schema: Option[StructType] = ddl.map(d => asNullable(StructType.fromDDL(d)))
+
+    /** The union of all visible deletion vectors, per file — what a
+      * merge-on-read scan of this snapshot subtracts. */
+    lazy val dvs: Map[String, Array[Long]] = unionPositions(manifests.flatMap(_.dvs))
+
+    /** (file, rows, zone map, DDL of the listing manifest) of every visible
+      * file. Distinct by file name, first listing kept: task files are
+      * immutable once committed, so a file listed twice (e.g. by a
+      * [[compact]] that crashed between publishing the combined manifest
+      * and deleting its inputs) is the same data — deduping here makes
+      * that crash window harmless instead of a double-read. */
+    lazy val visible: Seq[(String, Long, Option[Map[Int, ColStats]], String)] =
+      manifests.flatMap(m => m.entries.map(e => (e.file, e.rows, e.stats, m.ddl)))
+        .distinctBy(_._1)
+
+    /** Latest stats listing per visible file, sorted by file name — the
+      * ONE duplicate-entry policy the manifest-metadata views share
+      * (advice-r13: [[partitionRowCounts]] kept the FIRST listing while the
+      * `files` procedure kept the LAST; task files are immutable so
+      * divergence needs a re-listed entry, but two views of one snapshot
+      * must never be able to disagree). "Latest" = last in manifest order —
+      * the most recent manifest to claim the file owns its stats. */
+    lazy val latestEntries: Seq[(String, Long, Option[Map[Int, ColStats]], String)] =
+      manifests.flatMap(m => m.entries.map(e => (e.file, e.rows, e.stats, m.ddl)))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map(_._2.last)
+
+    /** DDL each data file was committed under, across the whole main line
+      * — the weighted change feed needs it to parse rows of OLD files
+      * referenced by a window's deletion vectors. */
+    lazy val fileDdls: Map[String, String] =
+      published.flatMap(m => m.entries.map(_.file -> m.ddl)).toMap
+  }
+
+  private[sources] object Snapshot {
+    /** Every manifest read whole: for operations that need entries. */
+    def apply(path: String, asOf: Option[String] = None): Snapshot =
+      new Snapshot(path, manifests(path).map(readManifest(_)), asOf)
+
+    /** Headers only; a body is read when first asked for. */
+    def headers(path: String, asOf: Option[String] = None): Snapshot =
+      new Snapshot(path, manifests(path).map(readManifest(_, full = false)), asOf)
+  }
 
   /** The newest published manifest name. For an incremental consumer's
     * `asOfManifest` pin / `sinceManifest` resume point prefer
@@ -378,12 +523,12 @@ object ManifestFileSink {
     * claim, and a commit that lands under it retroactively would fall
     * into the consumer's baseline instead of its next diff. */
   def latestManifest(path: String): Option[String] =
-    orderedManifests(path).lastOption.map(_.getName)
+    Snapshot.headers(path).published.lastOption.map(_.name)
 
   /** Number of PUBLISHED manifests on the main line — the segment count
     * an index-maintenance caller checks before deciding a compaction is
     * worth a rewrite (1 = already one segment, nothing to fold). */
-  def publishedManifestCount(path: String): Int = orderedManifests(path).size
+  def publishedManifestCount(path: String): Int = Snapshot.headers(path).published.size
 
   /** LOGICAL-state fingerprint of a manifest table: a fold over the
     * PUBLISHED manifest chain (names + seqs, commit order). None when
@@ -405,20 +550,13 @@ object ManifestFileSink {
     * either); seq rides beside the name so a discard-recreate under a
     * recycled name cannot alias. */
   def publishedChainFingerprint(path: String): Option[Long] = {
-    val ms = manifests(path)
-    if (ms.isEmpty) None
-    else Some(ms.map(f => (f, readMeta(f)))
-      .filter(_._2.staged.isEmpty)
-      .sortBy { case (f, m) => (m.seq, f.getName) }
-      .foldLeft(1L) { case (h, (f, m)) =>
-        (h * 1000003L + f.getName.hashCode.toLong) * 1000003L + m.seq
+    val log = Snapshot.headers(path)
+    if (log.all.isEmpty) None
+    else Some(log.all.filter(_.meta.staged.isEmpty)
+      .sortBy(m => (m.meta.seq, m.name))
+      .foldLeft(1L) { (h, m) =>
+        (h * 1000003L + m.name.hashCode.toLong) * 1000003L + m.meta.seq
       })
-  }
-
-  private[sources] def schemaLine(f: File): String = {
-    val skip = readMeta(f).headerLines - 1 // v2: skip the #graft header; v1: DDL is line 0
-    val r = Files.newBufferedReader(f.toPath, StandardCharsets.UTF_8)
-    try { (0 until skip).foreach(_ => r.readLine()); r.readLine() } finally r.close()
   }
 
   /** All-nullable view of a schema: the TSV encoding can carry `\N` in any
@@ -428,68 +566,11 @@ object ManifestFileSink {
   private[sources] def asNullable(st: StructType): StructType =
     StructType(st.fields.map(_.copy(nullable = true)))
 
-  /** Schema as of a snapshot (default: the most recently published). */
+  /** Schema as of a snapshot (default: the most recently published), read
+    * from the manifest headers plus the newest visible manifest's DDL. */
   private[sources] def storedSchema(
       path: String, asOf: Option[String] = None): Option[StructType] =
-    snapshot(path, asOf).lastOption.map(m => asNullable(StructType.fromDDL(schemaLine(m))))
-
-  /** The manifest set visible at a snapshot: every manifest published at
-    * or before `asOf` (a manifest file name), in publication order — each
-    * job's commit is one manifest, so "as of manifest M" is exactly the
-    * table state the moment M's job committed. A name retired by
-    * [[compact]] raises — the snapshot was expired, and an explicit error
-    * beats silently answering empty; a name that NEVER published resolves
-    * to the empty snapshot. */
-  private[sources] def snapshot(path: String, asOf: Option[String]): Seq[File] = {
-    val ordered = orderedManifests(path)
-    asOf match {
-      case None => ordered
-      // The WAP AUDIT view (`VERSION AS OF 'wap:<id>'`): the current
-      // main line PLUS the id's staged commits — what the table will be
-      // if the stage is published. Every read path funnels through this
-      // one resolution, so schema, files, and deletion vectors all see
-      // the staged state consistently. A typo'd id fails loudly.
-      case Some(v) if v.startsWith("wap:") =>
-        val id = v.substring(4)
-        val st = stagedManifests(path, id)
-        if (st.isEmpty) throw new IllegalArgumentException(
-          s"no staged commits under WAP id '$id'; staged ids: " +
-            s"${stagedIds(path).mkString(", ")}")
-        ordered ++ st
-      case Some(name) =>
-        val i = ordered.indexWhere(_.getName == name)
-        if (i < 0 && foldedNames(path).contains(name))
-          throw new IllegalArgumentException(
-            s"snapshot $name was retired by compaction (expire-snapshots): " +
-              "pre-compaction snapshots are not time-travelable")
-        ordered.take(i + 1)
-    }
-  }
-
-  /** (file, rows) entries visible at the snapshot. Distinct by file name:
-    * task files are immutable once committed, so a file listed twice
-    * (e.g. by a [[compact]] that crashed between publishing the combined
-    * manifest and deleting its inputs) is the same data — deduping here
-    * makes that crash window harmless instead of a double-read. */
-  /** (file, rows) entries listed by ONE manifest. Entry lines are
-    * `file\trows` (v2) or `file\trows\tzonemap` (v3) — both parse here. */
-  private[sources] def entriesOf(m: File): Seq[(String, Long)] =
-    Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines)
-      .filterNot(_.startsWith(DvPrefix)).map { line =>
-      val parts = line.split("\t")
-      (parts(0), parts(1).toLong)
-    }.toSeq
-
-  /** (file, rows, zone map) — the v3 stats field decoded; None for v2
-    * entries written before zone maps existed (those files are never
-    * pruned: no stats means no claim). */
-  private[sources] def entriesWithStats(m: File): Seq[(String, Long, Option[Map[Int, ColStats]])] =
-    Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines)
-      .filterNot(_.startsWith(DvPrefix)).map { line =>
-      val parts = line.split("\t")
-      (parts(0), parts(1).toLong,
-        if (parts.length > 2 && parts(2).nonEmpty) Some(decodeStats(parts(2))) else None)
-    }.toSeq
+    Snapshot.headers(path, asOf).schema
 
   // ----------------------------------------------- deletion vectors (v4)
 
@@ -523,26 +604,6 @@ object ManifestFileSink {
     * UPDATE/MERGE retract through deletion vectors. Reserved names. */
   private[sources] val FileCol = "_file"
   private[sources] val PosCol = "_pos"
-
-  /** DDL each data file was committed under, across the whole manifest
-    * history — the weighted change feed needs it to parse rows of OLD
-    * files referenced by a window's deletion vectors. */
-  private[sources] def fileDdlMap(path: String): Map[String, String] =
-    orderedManifests(path).flatMap { m =>
-      val ddl = schemaLine(m)
-      entriesOf(m).map(e => e._1 -> ddl)
-    }.toMap
-
-  /** Deletion vectors listed by ONE manifest: (data file, positions) —
-    * the only decoder of the `<runs>` field. */
-  private[sources] def deleteVectorsOf(m: File): Seq[(String, Array[Long])] =
-    Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines)
-      .filter(_.startsWith(DvPrefix)).map { line =>
-        val parts = line.split("\t")
-        (parts(1),
-          if (parts.length > 3) decodeRuns(parts(3))
-          else Array.empty[Long])
-      }.toSeq
 
   /** Sorted distinct positions as inclusive runs: `0-3,7,9-10`. */
   private[sources] def encodeRuns(ps: Array[Long]): String = {
@@ -595,16 +656,6 @@ object ManifestFileSink {
     dvs.groupMap(_._1)(_._2)
       .map { case (f, ps) => f -> sortedDistinct(Array.concat(ps.toSeq: _*)) }
 
-  /** The union of all deletion vectors listed by `ms`, per file — what a
-    * merge-on-read scan of that manifest set subtracts. */
-  private[sources] def deleteVectorsIn(ms: Seq[File]): Map[String, Array[Long]] =
-    unionPositions(ms.flatMap(deleteVectorsOf))
-
-  /** The union of all deletion vectors visible at a snapshot, per file. */
-  private[sources] def deleteVectors(
-      path: String, asOf: Option[String] = None): Map[String, Array[Long]] =
-    deleteVectorsIn(snapshot(path, asOf))
-
   /** Positions of `[0, rows)` not in the sorted distinct `deleted`: what
     * retracting every live row of a file writes. */
   private[sources] def livePositions(rows: Long, deleted: Array[Long]): Array[Long] = {
@@ -618,20 +669,6 @@ object ManifestFileSink {
       p += 1
     }
     out
-  }
-
-  /** Does this manifest carry any deletion vector? (Streamed — the change
-    * feed asks this per window manifest.) */
-  private[sources] def hasDeleteVectors(m: File): Boolean = {
-    val r = Files.newBufferedReader(m.toPath, StandardCharsets.UTF_8)
-    try {
-      var line = r.readLine()
-      while (line != null) {
-        if (line.startsWith(DvPrefix)) return true
-        line = r.readLine()
-      }
-      false
-    } finally r.close()
   }
 
   /** Exact three-valued evaluation of a DSv2 [[org.apache.spark.sql.sources.Filter]]
@@ -879,17 +916,11 @@ object ManifestFileSink {
     * evolution-validated, each paired with the DDL it was written under
     * and its already-deleted positions. Callers hold the commit lock. */
   private def matchCandidates(
-      path: String,
+      snap: Snapshot,
       prune: Option[org.apache.spark.sql.sources.Filter],
-      schema: StructType): Seq[MatchCandidate] = {
-    val snap = snapshot(path, None)
-    val existing = deleteVectorsIn(snap)
-    snap.flatMap { m =>
-        val ddl = schemaLine(m)
-        entriesWithStats(m).map(e => (e._1, e._2, e._3, ddl))
-      }.distinctBy(_._1)
-      .flatMap { case (file, rows, st, ddl) =>
-        val deleted = existing.getOrElse(file, Array.empty[Long])
+      schema: StructType): Seq[MatchCandidate] =
+    snap.visible.flatMap { case (file, rows, st, ddl) =>
+        val deleted = snap.dvs.getOrElse(file, Array.empty[Long])
         // A fully-retracted file has no live rows to match — skip it
         // BEFORE evolution validation, so a post-RTAS mutation doesn't
         // trip over the replaced generation's incompatible legacy DDL.
@@ -901,7 +932,6 @@ object ManifestFileSink {
           else Some(MatchCandidate(file, ddl, deleted, rows))
         }
       }
-  }
 
   /** Does `f` hold for every row without reading one? True for
     * `AlwaysTrue` and any `And`/`Or` tree of them — the shape a DSv2
@@ -933,14 +963,14 @@ object ManifestFileSink {
     * paths share [[matchCandidates]]' evolution validation and its skip
     * of fully retracted files. Callers hold the commit lock. */
   private def matchPositions(
-      path: String,
+      snap: Snapshot,
       filter: org.apache.spark.sql.sources.Filter,
       schema: StructType): Seq[(String, Array[Long])] = {
-    val cands = matchCandidates(path, Some(filter), schema)
+    val cands = matchCandidates(snap, Some(filter), schema)
     if (cands.isEmpty) return Nil
     if (isAlwaysTrue(filter))
       return cands.map(c => c.file -> livePositions(c.rows, c.deleted)).sortBy(_._1)
-    val abs = new File(path).getAbsolutePath
+    val abs = new File(snap.path).getAbsolutePath
     activeSession.sparkContext.parallelize(cands, matchSlices(cands.size))
       .flatMap(c => MatchScan.filterPositions(abs, c, schema, filter))
       .collect().toSeq.sortBy(_._1)
@@ -960,15 +990,15 @@ object ManifestFileSink {
     * key's min/max accumulated by the writers' own zone-map stats. */
   private def matchPositionsByKey(
       spark: org.apache.spark.sql.SparkSession,
-      path: String,
+      snap: Snapshot,
       newFiles: Seq[String],
       key: String,
       schema: StructType,
       prune: Option[org.apache.spark.sql.sources.Filter]): Seq[(String, Array[Long])] = {
-    val cands = matchCandidates(path, prune, schema)
+    val cands = matchCandidates(snap, prune, schema)
     if (cands.isEmpty) return Nil
     val sc = spark.sparkContext
-    val abs = new File(path).getAbsolutePath
+    val abs = new File(snap.path).getAbsolutePath
     val srcKeys = sc.parallelize(newFiles, matchSlices(newFiles.size))
       .flatMap(f => MatchScan.fileKeys(abs, f, schema, key))
       .distinct()
@@ -984,23 +1014,45 @@ object ManifestFileSink {
 
   /** Publish one manifest carrying `dataLines` (already-rendered entry
     * lines) and deletion vectors (per file: sorted distinct positions,
-    * written as runs). Callers hold the commit lock. */
+    * written as runs), its seq claimed over `log` — the commit's one
+    * listing. Callers hold the commit lock. */
   private def publishCommit(
-      path: String,
+      log: Snapshot,
       schemaText: String,
       dataLines: Seq[String],
       dvs: Seq[(String, Array[Long])],
-      staged: Option[String] = None): Unit = {
-    val meta = ManifestMeta(claimSeq(path), Nil, staged = staged)
-    val lines = renderHeader(meta) +: schemaText +:
-      (dataLines ++ dvs.map { case (f, ps) =>
+      staged: Option[String] = None): Unit =
+    writeManifest(log.path, ManifestMeta(claimSeq(log), Nil, staged = staged),
+      schemaText +: (dataLines ++ dvs.map { case (f, ps) =>
         s"$DvMarker\t$f\t${ps.length}\t${encodeRuns(ps)}"
-      })
+      }))
+
+  /** Write a new uniquely-named manifest — header, then `rest` (DDL and
+    * body) — via temp file and atomic rename: a reader never observes a
+    * half-written manifest. */
+  private def writeManifest(path: String, meta: ManifestMeta, rest: Seq[String]): Unit = {
     val name = s"manifest-${java.util.UUID.randomUUID().toString}"
     val tmp = Paths.get(path, s".$name.tmp")
-    Files.write(tmp, lines.asJava, StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
+    Files.write(tmp, (renderHeader(meta) +: rest).asJava,
+      StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
     Files.move(tmp, Paths.get(path, name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Header of a manifest that supersedes `ms` through the `folded` ledger
+    * (transitively: the inputs' own folded names carry over), recording
+    * the oldest and newest commits it absorbs — the streaming change feed
+    * compares them against a consumer's resume offset: a fold entirely
+    * at-or-behind the offset re-lists only consumed rows (skippable), one
+    * entirely ahead lists only pending rows (readable), one straddling the
+    * offset is unrecoverable. `seq` is the header's own seq; None takes
+    * the newest absorbed seq (the fold keeps the range's position). */
+  private def foldMeta(seq: Option[Long], ms: Seq[Manifest]): ManifestMeta = {
+    val metas = ms.map(_.meta)
+    val hi = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
+    ManifestMeta(seq.getOrElse(hi), ms.flatMap(m => m.name +: m.meta.folded).distinct,
+      foldedMinSeq = Some((metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min),
+      foldedMaxSeq = Some(hi))
   }
 
   /** DELETE FROM table WHERE filter — merge-on-read. Scans only the files
@@ -1017,14 +1069,18 @@ object ManifestFileSink {
     * needs no scan at all and retracts from metadata. */
   def deleteWhere(
       path: String,
-      filter: org.apache.spark.sql.sources.Filter): Long = commitLock(path).synchronized {
-    val snap = snapshot(path, None)
-    if (snap.isEmpty) return 0L
-    val schemaText = schemaLine(snap.last)
-    val schema = asNullable(StructType.fromDDL(schemaText))
-    val newDvs = matchPositions(path, filter, schema)
+      filter: org.apache.spark.sql.sources.Filter): Long =
+    deleteMatching(path, filter, staged = None)
+
+  private def deleteMatching(
+      path: String,
+      filter: org.apache.spark.sql.sources.Filter,
+      staged: Option[String]): Long = commitLock(path).synchronized {
+    val snap = Snapshot(path)
+    val schemaText = snap.ddl.getOrElse(return 0L)
+    val newDvs = matchPositions(snap, filter, asNullable(StructType.fromDDL(schemaText)))
     if (newDvs.isEmpty) return 0L
-    publishCommit(path, schemaText, Nil, newDvs)
+    publishCommit(snap, schemaText, Nil, newDvs, staged)
     newDvs.map(_._2.length.toLong).sum
   }
 
@@ -1046,16 +1102,8 @@ object ManifestFileSink {
   def deleteWhereStaged(
       path: String,
       filter: org.apache.spark.sql.sources.Filter,
-      wapId: String): Long = commitLock(path).synchronized {
-    val snap = snapshot(path, None)
-    if (snap.isEmpty) return 0L
-    val schemaText = schemaLine(snap.last)
-    val schema = asNullable(StructType.fromDDL(schemaText))
-    val newDvs = matchPositions(path, filter, schema)
-    if (newDvs.isEmpty) return 0L
-    publishCommit(path, schemaText, Nil, newDvs, staged = Some(wapId))
-    newDvs.map(_._2.length.toLong).sum
-  }
+      wapId: String): Long =
+    deleteMatching(path, filter, staged = Some(wapId))
 
   /** MERGE (upsert) by key, in ONE atomic commit: rows of `source` REPLACE
     * current table rows sharing their key, and new-key rows append — the
@@ -1122,13 +1170,13 @@ object ManifestFileSink {
     val prune = keyRangePrune(flat, key, schema)
     // Matched-key retraction + atomic publish, serialized with other commits.
     commitLock(path).synchronized {
-      val snap = snapshot(path, None)
-      val schemaText = snap.lastOption.map(schemaLine).getOrElse(asNullable(schema).toDDL)
-      ensureSchemaUnchanged(path, "merge", schema, schemaText, snap.nonEmpty)
+      val snap = Snapshot(path)
+      val schemaText = snap.ddl.getOrElse(asNullable(schema).toDDL)
+      ensureSchemaUnchanged(path, "merge", schema, schemaText, snap.ddl.nonEmpty)
       val dvLines: Seq[(String, Array[Long])] =
-        if (snap.isEmpty || newFiles.isEmpty) Nil
-        else matchPositionsByKey(source.sparkSession, path, newFiles, key, schema, prune)
-      publishCommit(path, schemaText, dataLines, dvLines)
+        if (snap.ddl.isEmpty || newFiles.isEmpty) Nil
+        else matchPositionsByKey(source.sparkSession, snap, newFiles, key, schema, prune)
+      publishCommit(snap, schemaText, dataLines, dvLines)
       (dvLines.map(_._2.length.toLong).sum, inserted)
     }
   }
@@ -1224,12 +1272,12 @@ object ManifestFileSink {
       case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
     }.toSeq
     commitLock(path).synchronized {
-      val snap = snapshot(path, None)
-      val schemaText = snap.lastOption.map(schemaLine).getOrElse(asNullable(schema).toDDL)
-      ensureSchemaUnchanged(path, "replaceWhere", schema, schemaText, snap.nonEmpty)
+      val snap = Snapshot(path)
+      val schemaText = snap.ddl.getOrElse(asNullable(schema).toDDL)
+      ensureSchemaUnchanged(path, "replaceWhere", schema, schemaText, snap.ddl.nonEmpty)
       val dvLines =
-        if (snap.isEmpty) Nil else matchPositions(path, filter, schema)
-      publishCommit(path, schemaText, dataLines, dvLines)
+        if (snap.ddl.isEmpty) Nil else matchPositions(snap, filter, schema)
+      publishCommit(snap, schemaText, dataLines, dvLines)
       (dvLines.map(_._2.length.toLong).sum, inserted)
     }
   }
@@ -1439,25 +1487,14 @@ object ManifestFileSink {
       // maintenance job owns quiescence, the same contract as compacting
       // around live streams. The rewrite's task files stay orphaned and
       // invisible (readers resolve through manifests).
-      if (latestManifest(path).exists(_ != pin))
+      val log = Snapshot.headers(path)
+      val ms = log.published
+      if (ms.lastOption.exists(_.name != pin))
         throw new IllegalStateException(
           s"table $path advanced past snapshot $pin during optimize: " +
             "rewrite discarded; quiesce writers (or retry) and run again")
-      val ms = orderedManifests(path)
-      val metas = ms.map(readMeta)
-      val folded = ms.map(_.getName).zip(metas)
-        .flatMap { case (n, m) => n +: m.folded }.distinct
-      val fseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min
-      val lseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
-      val meta = ManifestMeta(claimSeq(path), folded,
-        foldedMinSeq = Some(fseq), foldedMaxSeq = Some(lseq))
-      val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-      val tmp = Paths.get(path, s".$name.tmp")
-      Files.write(tmp, (renderHeader(meta) +: schema.toDDL +: dataLines).asJava,
-        StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
-      Files.move(tmp, Paths.get(path, name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ms.foreach(m => Files.deleteIfExists(m.toPath))
+      writeManifest(path, foldMeta(Some(claimSeq(log)), ms), schema.toDDL +: dataLines)
+      ms.foreach(m => Files.deleteIfExists(m.file.toPath))
       // Superseded data files stay on disk for [[vacuum]] to reclaim
       // after retention: an in-flight scan planned against the prior
       // snapshot holds their names and must finish reading them — the
@@ -1482,13 +1519,12 @@ object ManifestFileSink {
     * removes the leftover instead of double-publishing its entries.
     * Returns the number of commits published. */
   def wapPublish(path: String, id: String): Int = commitLock(path).synchronized {
-    val st = stagedManifests(path, id)
+    val log = Snapshot.headers(path)
+    val st = log.staged(id)
     if (st.isEmpty) throw new IllegalArgumentException(
-      s"no staged commits under WAP id '$id'; staged ids: ${stagedIds(path).mkString(", ")}")
+      s"no staged commits under WAP id '$id'; staged ids: ${log.stagedIds.mkString(", ")}")
     st.foreach { m =>
-      if (!foldedNames(path).contains(m.getName)) {
-        val lines = Files.readAllLines(m.toPath, StandardCharsets.UTF_8).asScala
-        val meta = readMeta(m)
+      if (!log.folded.contains(m.name)) {
         // Staged DELETION VECTORS name (file, position) pairs of the
         // snapshot they were computed against — unlike staged appends
         // they do NOT commute with intervening commits (advice-r17).
@@ -1497,28 +1533,20 @@ object ManifestFileSink {
         // and publish would make the vector silently mask the wrong
         // rows (or none), so refuse loudly instead — the caller's
         // quiescence contract was broken and the transaction must
-        // abort, not corrupt.
-        val dvTargets = lines.drop(meta.headerLines)
-          .filter(_.startsWith(DvPrefix)).map(_.split("\t")(1))
-        if (dvTargets.nonEmpty) {
-          val live = orderedManifests(path).flatMap(entriesOf).map(_._1).toSet
-          val dead = dvTargets.filterNot(live.contains)
+        // abort, not corrupt. Checked against a fresh listing, so a
+        // compact/purge by another driver since this call began is seen.
+        val targets = m.dvs.map(_._1)
+        if (targets.nonEmpty) {
+          val live = Snapshot(path).published.flatMap(_.entries.map(_.file)).toSet
+          val dead = targets.filterNot(live.contains)
           if (dead.nonEmpty) throw new IllegalStateException(
             s"staged deletion vectors of WAP id '$id' on $path target " +
               s"${dead.size} file(s) no longer live (superseded by a " +
               s"compact/purge between stage and publish): ${dead.take(3).mkString(", ")}")
         }
-        val out = renderHeader(ManifestMeta(claimSeq(path), Seq(m.getName))) +:
-          lines.drop(meta.headerLines - 1)
-        val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-        val tmp = Paths.get(path, s".$name.tmp")
-        Files.deleteIfExists(tmp)
-        Files.write(tmp, out.asJava, StandardCharsets.UTF_8,
-          StandardOpenOption.CREATE_NEW)
-        Files.move(tmp, Paths.get(path, name),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        writeManifest(path, ManifestMeta(claimSeq(log), Seq(m.name)), m.ddl +: m.body)
       }
-      Files.deleteIfExists(m.toPath)
+      Files.deleteIfExists(m.file.toPath)
     }
     st.size
   }
@@ -1538,7 +1566,7 @@ object ManifestFileSink {
     * head table are untouched: that is a mid-STAGE crash, and the
     * per-epoch discard-then-retry path owns it. */
   def wapRollForward(tables: Seq[String]): Seq[String] = {
-    val staged = tables.map(p => p -> stagedIds(p).toSet)
+    val staged = tables.map(p => p -> Snapshot.headers(p).stagedIds.toSet)
     val headIds = staged.head._2
     val torn = staged.tail.flatMap(_._2).distinct
       .filterNot(headIds.contains).sorted
@@ -1552,23 +1580,24 @@ object ManifestFileSink {
     * impossible for append task files, but checked — is spared). The
     * audit said no; nothing of the stage survives. */
   def wapDiscard(path: String, id: String): Int = commitLock(path).synchronized {
-    val st = stagedManifests(path, id)
+    val log = Snapshot(path)
+    val st = log.staged(id)
     if (st.isEmpty) throw new IllegalArgumentException(
-      s"no staged commits under WAP id '$id'; staged ids: ${stagedIds(path).mkString(", ")}")
-    val stNames = st.map(_.getName).toSet
-    val others = manifests(path).filterNot(f => stNames.contains(f.getName))
-      .flatMap(entriesOf).map(_._1).toSet
-    st.flatMap(entriesOf).map(_._1).distinct
+      s"no staged commits under WAP id '$id'; staged ids: ${log.stagedIds.mkString(", ")}")
+    val stNames = st.map(_.name).toSet
+    val others = log.all.filterNot(m => stNames.contains(m.name))
+      .flatMap(_.entries).map(_.file).toSet
+    st.flatMap(_.entries).map(_.file).distinct
       .filterNot(others.contains)
       .foreach(f => Files.deleteIfExists(Paths.get(path, "data", f)))
-    st.foreach(m => Files.deleteIfExists(m.toPath))
+    st.foreach(m => Files.deleteIfExists(m.file.toPath))
     st.size
   }
 
   /** Any staged commits under `id`? The abort/recovery paths branch on
     * this without paying [[wapDiscard]]'s exception on a clean table. */
   def hasStage(path: String, id: String): Boolean =
-    stagedManifests(path, id).nonEmpty
+    Snapshot.headers(path).staged(id).nonEmpty
 
   /** ABORT a multi-table WAP transaction (advice-r17 medium + low —
     * the one correct way to unwind, shared by every maintenance verb):
@@ -1611,10 +1640,11 @@ object ManifestFileSink {
     * defaults to 7 days. Returns the number of files deleted. */
   def vacuum(path: String, olderThanMs: Long = 7L * 24 * 3600 * 1000): Int =
     commitLock(path).synchronized {
-      pruneClaims(path) // retired seq-claim markers ride along
+      val log = Snapshot(path)
+      pruneClaims(log) // retired seq-claim markers ride along
       val dataDir = new File(path, "data")
       if (!dataDir.isDirectory) return 0
-      val referenced = manifests(path).flatMap(entriesOf).map(_._1).toSet
+      val referenced = log.all.flatMap(_.entries).map(_.file).toSet
       val cutoff = System.currentTimeMillis() - olderThanMs
       val orphans = dataDir.listFiles().filter(f =>
         f.isFile && !referenced.contains(f.getName) && f.lastModified() < cutoff)
@@ -1632,25 +1662,24 @@ object ManifestFileSink {
     * skipping stays sound, it just prunes a little less until the file is
     * next rewritten. Crash-safe like compact: the combined manifest
     * publishes atomically FIRST; if the input deletes never happen, the
-    * supersede rule in [[orderedManifests]] hides them (rewritten files
+    * supersede rule in [[Snapshot.published]] hides them (rewritten files
     * must never double-read against their originals); orphaned originals
     * are invisible because reads resolve through manifests only. Returns
     * the number of files rewritten or dropped (0 = no vectors visible).
     * The purge retires all prior snapshots (expire-snapshots), exactly as
     * compact does. */
   def applyDeletes(path: String): Int = commitLock(path).synchronized {
-    val ms = orderedManifests(path)
-    if (ms.isEmpty) return 0
-    val dvs = deleteVectors(path, None)
+    val snap = Snapshot(path)
+    val ms = snap.manifests
+    val dvs = snap.dvs
     if (dvs.isEmpty) return 0
-    val schemas = ms.map(schemaLine).distinct
+    val schemas = ms.map(_.ddl).distinct
     if (schemas.size > 1)
       throw new IllegalStateException(
         s"refusing to purge $path: ${schemas.size} distinct schemas across " +
           "manifests; older entries would reparse under the newest DDL — " +
           "run migrateSchema(path) first")
-    val entryLines = ms.flatMap(m =>
-        Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines))
+    val entryLines = ms.flatMap(_.body)
       .filterNot(_.startsWith(DvPrefix)).distinct
       .distinctBy(_.split("\t")(0))
     val replaced = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1685,20 +1714,8 @@ object ManifestFileSink {
           }
       }
     }
-    val metas = ms.map(readMeta)
-    val folded = ms.map(_.getName).zip(metas)
-      .flatMap { case (n, m) => n +: m.folded }.distinct
-    val fseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min
-    val lseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
-    val meta = ManifestMeta(claimSeq(path), folded,
-      foldedMinSeq = Some(fseq), foldedMaxSeq = Some(lseq))
-    val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-    val tmp = Paths.get(path, s".$name.tmp")
-    Files.write(tmp, (renderHeader(meta) +: schemas.head +: outLines).asJava,
-      StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(path, name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ms.foreach(m => Files.deleteIfExists(m.toPath))
+    writeManifest(path, foldMeta(Some(claimSeq(snap)), ms), schemas.head +: outLines)
+    ms.foreach(m => Files.deleteIfExists(m.file.toPath))
     // Replaced originals stay for [[vacuum]] (in-flight scans may still
     // hold their names); they are unreferenced by any manifest now.
     replaced.size
@@ -2136,13 +2153,14 @@ object ManifestFileSink {
     * callers treating None as "unprovable residue" stay conservative. */
   def partitionRowCounts(path: String): Map[Option[Seq[String]], Long] = {
     val idCols = partitionFields(path).collect { case IdentityPart(c) => c }
-    val curTypes: Map[String, DataType] = storedSchema(path, None)
+    val snap = Snapshot(path)
+    val curTypes: Map[String, DataType] = snap.schema
       .map(_.fields.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
-    val dvs = deleteVectors(path, None)
+    val dvs = snap.dvs
     val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
     def schemaOf(ddl: String): StructType =
       ddlCache.getOrElseUpdate(ddl, asNullable(StructType.fromDDL(ddl)))
-    latestEntriesWithSchema(path, None)
+    snap.latestEntries
       .map { case (f, rows, st, ddl) =>
         val live = math.max(0L, rows - dvs.getOrElse(f, Array.empty[Long]).length)
         // Stat indexes resolve against EACH FILE'S OWN write schema
@@ -2171,21 +2189,6 @@ object ManifestFileSink {
       }
       .groupMapReduce(_._1)(_._2)(_ + _)
   }
-
-  /** Latest stats listing per live file of the snapshot, paired with
-    * the DDL of the manifest that listed it — the ONE duplicate-entry
-    * policy every manifest-metadata view shares (advice-r13:
-    * [[partitionRowCounts]] kept the FIRST listing while the `files`
-    * procedure kept the LAST; task files are immutable so divergence
-    * needs a re-listed entry, but two views of one snapshot must never
-    * be able to disagree). "Latest" = last in manifest order — the most
-    * recent manifest to claim the file owns its stats. */
-  private[sources] def latestEntriesWithSchema(path: String, asOf: Option[String])
-      : Seq[(String, Long, Option[Map[Int, ColStats]], String)] =
-    snapshot(path, asOf)
-      .flatMap(m => entriesWithStats(m).map(e => (e._1, e._2, e._3, schemaLine(m))))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.last)
 
   def setPartitionColumns(path: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty && cols.map(parsePartField(_).col).distinct.size == cols.size,
@@ -2231,8 +2234,7 @@ object ManifestFileSink {
     * null semantics. Returns the output schema + the single result row
     * in Catalyst form. */
   private[sources] def deriveAggregate(
-      path: String,
-      asOf: Option[String],
+      snap: Snapshot,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       schema: StructType): Option[(StructType, Seq[Seq[Any]])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
@@ -2242,12 +2244,12 @@ object ManifestFileSink {
     // OTHER derivation refuses: a MIN/MAX claim may name a deleted row,
     // and the grouped path would emit a zero-count row for a fully
     // deleted file's group where the real aggregate emits nothing.
-    val dvs = deleteVectors(path, asOf)
+    val dvs = snap.dvs
     if (dvs.nonEmpty && (agg.groupByExpressions.nonEmpty ||
         !agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])))
       return None
     // Shared latest-listing-per-file policy (advice-r13).
-    val entries = latestEntriesWithSchema(path, asOf)
+    val entries = snap.latestEntries
     val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
     def schemaOf(ddl: String): StructType =
       ddlCache.getOrElseUpdate(ddl, asNullable(StructType.fromDDL(ddl)))
@@ -2259,7 +2261,7 @@ object ManifestFileSink {
         case _ => None
       }
     if (agg.groupByExpressions.nonEmpty)
-      return deriveGroupedAggregate(path, agg, schema, entries, schemaOf, colName)
+      return deriveGroupedAggregate(snap.path, agg, schema, entries, schemaOf, colName)
     def parse(v: String, dt: DataType): Any = dt match {
       case LongType    => v.toLong
       case IntegerType => v.toInt
@@ -2689,17 +2691,13 @@ object ManifestFileSink {
     }
   }
 
-  private[sources] def visibleFiles(
-      path: String, asOf: Option[String] = None): Seq[(String, Long)] =
-    snapshot(path, asOf).flatMap(entriesOf).distinctBy(_._1)
-
   /** Metadata maintenance: rewrite every published manifest into ONE
     * combined manifest, then delete the inputs — a long-lived append
     * target otherwise accumulates a manifest per job and pays an O(jobs)
     * listing on every read. Returns the number of manifests compacted
     * (0 = nothing to do). Crash-safe at every point: the combined
     * manifest publishes via the same atomic rename, a crash before the
-    * input deletes leaves duplicate listings that [[visibleFiles]]
+    * input deletes leaves duplicate listings that [[Snapshot.visible]]
     * dedupes, and a concurrent append's new manifest is not in the input
     * set so it survives untouched. Snapshots sealed by the deleted
     * manifests are retired (the standard expire-snapshots trade) and the
@@ -2720,42 +2718,24 @@ object ManifestFileSink {
   def compact(path: String, aboveSeq: Long): Int = commitLock(path).synchronized {
     // First, garbage-collect manifests SUPERSEDED by an interrupted
     // compact/purge: their combined manifest already published (it names
-    // them in its `folded` header), so [[orderedManifests]] hides them —
+    // them in its `folded` header), so [[Snapshot.published]] hides them —
     // they contribute nothing and only cost listing time. Deleting them
     // completes the crashed maintenance job.
-    val all = manifests(path)
-    val foldedSet = all.flatMap(readMeta(_).folded).toSet
-    val superseded = all.filter(f => foldedSet.contains(f.getName))
-    superseded.foreach(f => Files.deleteIfExists(f.toPath))
-    pruneClaims(path) // retired seq-claim markers are maintenance debris too
-    val ms = orderedManifests(path).filter(m => readMeta(m).seq > aboveSeq)
+    val log = Snapshot(path)
+    val superseded = log.all.filter(m => log.folded.contains(m.name))
+    superseded.foreach(m => Files.deleteIfExists(m.file.toPath))
+    pruneClaims(log) // retired seq-claim markers are maintenance debris too
+    val ms = log.published.filter(_.meta.seq > aboveSeq)
     if (ms.size < 2) return superseded.size
-    val schemas = ms.map(schemaLine).distinct
+    val schemas = ms.map(_.ddl).distinct
     if (schemas.size > 1)
       throw new IllegalStateException(
         s"refusing to compact $path: ${schemas.size} distinct schemas across " +
           "manifests; older entries would reparse under the newest DDL — " +
           "run migrateSchema(path) first")
-    val entries = ms.flatMap(m =>
-      Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines)).distinct
-    val metas = ms.map(readMeta)
-    val folded = ms.map(_.getName).zip(metas).flatMap { case (n, m) => n +: m.folded }.distinct
-    // The oldest and newest commits this fold absorbed (transitively) —
-    // the streaming change feed compares them against a consumer's resume
-    // offset: a fold entirely at-or-behind the offset re-lists only
-    // consumed rows (skippable), one entirely ahead lists only pending
-    // rows (readable), one straddling the offset is unrecoverable.
-    val fseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min
-    val lseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
-    val meta = ManifestMeta(claimSeq(path), folded,
-      foldedMinSeq = Some(fseq), foldedMaxSeq = Some(lseq))
-    val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-    val tmp = Paths.get(path, s".$name.tmp")
-    Files.write(tmp, (renderHeader(meta) +: schemas.head +: entries).asJava,
-      StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(path, name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ms.foreach(m => Files.deleteIfExists(m.toPath))
+    writeManifest(path, foldMeta(Some(claimSeq(log)), ms),
+      schemas.head +: ms.flatMap(_.body).distinct)
+    ms.foreach(m => Files.deleteIfExists(m.file.toPath))
     ms.size + superseded.size
   }
 
@@ -2780,30 +2760,16 @@ object ManifestFileSink {
   def expireSnapshots(path: String, keepLast: Int): Int =
     commitLock(path).synchronized {
       require(keepLast >= 1, s"keep_last must be >= 1 (got $keepLast)")
-      val ms0 = orderedManifests(path)
-      val ms = ms0.dropRight(keepLast)
+      val ms = Snapshot(path).published.dropRight(keepLast)
       if (ms.size < 2) return 0
-      val schemas = ms.map(schemaLine).distinct
+      val schemas = ms.map(_.ddl).distinct
       if (schemas.size > 1)
         throw new IllegalStateException(
           s"refusing to expire snapshots of $path: ${schemas.size} distinct " +
             "schemas across the expired range; run migrateSchema(path) first")
-      val entries = ms.flatMap(m =>
-        Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines)).distinct
-      val metas = ms.map(readMeta)
-      val folded = ms.map(_.getName).zip(metas)
-        .flatMap { case (n, m) => n +: m.folded }.distinct
-      val fseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min
-      val lseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
-      val meta = ManifestMeta(lseq, folded,
-        foldedMinSeq = Some(fseq), foldedMaxSeq = Some(lseq))
-      val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-      val tmp = Paths.get(path, s".$name.tmp")
-      Files.write(tmp, (renderHeader(meta) +: schemas.head +: entries).asJava,
-        StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
-      Files.move(tmp, Paths.get(path, name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ms.foreach(m => Files.deleteIfExists(m.toPath))
+      // The fold takes the expired range's position: seq = its max seq.
+      writeManifest(path, foldMeta(None, ms), schemas.head +: ms.flatMap(_.body).distinct)
+      ms.foreach(m => Files.deleteIfExists(m.file.toPath))
       ms.size
     }
 
@@ -2838,19 +2804,19 @@ object ManifestFileSink {
     * [[compact]]'s fold window. Returns the number of commits rolled
     * back (0 = ref is already the current state). */
   /** Resolve a user-facing snapshot ref — a commit seq, a tag name, or
-    * a manifest name — to the manifest name [[snapshot]] understands
+    * a manifest name — to the manifest name [[Snapshot.at]] understands
     * (shared by [[rollbackTo]] and the `snapshot_diff` procedure; one
     * resolution, one set of error messages). */
-  private[sources] def resolveRef(path: String, ref: String): String = {
-    val ordered = orderedManifests(path)
+  private[sources] def resolveRef(log: Snapshot, ref: String): String = {
+    val path = log.path
     if (ref.forall(_.isDigit) && ref.nonEmpty)
-      ordered.find(m => readMeta(m).seq == ref.toLong).map(_.getName)
+      log.published.find(_.meta.seq == ref.toLong).map(_.name)
         .getOrElse(throw new IllegalArgumentException(
           s"no commit with seq $ref in $path (retired by maintenance, " +
             "or never published)"))
     else tags(path).toMap.getOrElse(ref, {
-      if (ordered.exists(_.getName == ref)) ref
-      else if (foldedNames(path).contains(ref))
+      if (log.published.exists(_.name == ref)) ref
+      else if (log.folded.contains(ref))
         throw new IllegalArgumentException(
           s"snapshot $ref was retired by compaction (expire-snapshots): " +
             "it cannot be rolled back to")
@@ -2861,33 +2827,22 @@ object ManifestFileSink {
   }
 
   def rollbackTo(path: String, ref: String): Int = commitLock(path).synchronized {
-    val ordered = orderedManifests(path)
-    val manifest: String = resolveRef(path, ref)
-    val i = ordered.indexWhere(_.getName == manifest)
+    val log = Snapshot.headers(path)
+    val ordered = log.published
+    val manifest: String = resolveRef(log, ref)
+    val i = ordered.indexWhere(_.name == manifest)
     if (i < 0) throw new IllegalArgumentException(
       s"snapshot $manifest is not on the main line of $path")
     val target = ordered(i)
     val after = ordered.drop(i + 1)
     if (after.isEmpty) return 0
-    val targetSeq = readMeta(target).seq
-    val metas = after.map(readMeta)
-    metas.zip(after).foreach { case (m, f) =>
-      require(m.foldedMinSeq.forall(_ > targetSeq),
-        s"cannot roll back to $manifest: ${f.getName} folded commits at or " +
+    after.foreach { m =>
+      require(m.meta.foldedMinSeq.forall(_ > target.meta.seq),
+        s"cannot roll back to $manifest: ${m.name} folded commits at or " +
           "before the target (compact/expire ran since), so the target " +
           "state is no longer separable from later history")
     }
-    val folded = (after.map(_.getName) ++ metas.flatMap(_.folded)).distinct
-    val fseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min
-    val lseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
-    val meta = ManifestMeta(claimSeq(path), folded,
-      foldedMinSeq = Some(fseq), foldedMaxSeq = Some(lseq))
-    val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-    val tmp = Paths.get(path, s".$name.tmp")
-    Files.write(tmp, Seq(renderHeader(meta), schemaLine(target)).asJava,
-      StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(path, name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeManifest(path, foldMeta(Some(claimSeq(log)), after), Seq(target.ddl))
     after.size
   }
 
@@ -2920,16 +2875,17 @@ object ManifestFileSink {
     * [[compact]] counts as published (it is listed in a live manifest's
     * `folded` header) — otherwise a replay arriving after compaction
     * would republish its epoch under fresh task-file names, and the
-    * by-name dedup in [[visibleFiles]] could not catch the double-read. */
+    * by-name dedup in [[Snapshot.visible]] could not catch the double-read. */
   private[sources] def publish(
       path: String,
       name: String,
       schema: StructType,
       messages: Array[WriterCommitMessage],
       staged: Option[String] = None): Boolean = commitLock(path).synchronized {
-    if (Files.exists(Paths.get(path, name)) || foldedNames(path).contains(name))
-      return false
-    val lines = renderHeader(ManifestMeta(claimSeq(path), Nil, staged = staged)) +:
+    if (Files.exists(Paths.get(path, name))) return false
+    val log = Snapshot.headers(path)
+    if (log.folded.contains(name)) return false
+    val lines = renderHeader(ManifestMeta(claimSeq(log), Nil, staged = staged)) +:
       asNullable(schema).toDDL +: flattenCommits(messages).collect {
       case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
     }.toSeq
@@ -2987,20 +2943,20 @@ object ManifestFileSink {
     * the same supersede ledger as [[applyDeletes]]. Returns the number of
     * files rewritten. */
   def migrateSchema(path: String): Int = commitLock(path).synchronized {
-    val ms = orderedManifests(path)
-    if (ms.isEmpty) return 0
-    val latestDdl = schemaLine(ms.last)
+    val snap = Snapshot(path)
+    val ms = snap.manifests
+    val latestDdl = snap.ddl.getOrElse(return 0)
     val latest = asNullable(StructType.fromDDL(latestDdl))
-    if (ms.forall(m => schemaLine(m) == latestDdl)) return 0
+    if (ms.forall(_.ddl == latestDdl)) return 0
     val renames = scala.collection.mutable.Map.empty[String, String]
     val seen = scala.collection.mutable.Set.empty[String]
     var rewritten = 0
     val outLines = ms.flatMap { m =>
-      val ddl = schemaLine(m)
+      val ddl = m.ddl
       val fileSchema = asNullable(StructType.fromDDL(ddl))
-      validateEvolution(latest, fileSchema, s"manifest ${m.getName}")
+      validateEvolution(latest, fileSchema, s"manifest ${m.name}")
       val proj = evolutionProjection(latest, fileSchema)
-      Files.readAllLines(m.toPath).asScala.drop(readMeta(m).headerLines).flatMap { line =>
+      m.body.flatMap { line =>
         if (line.startsWith(DvPrefix) || ddl == latestDdl) Some(line)
         else {
           val parts = line.split("\t")
@@ -3037,20 +2993,8 @@ object ManifestFileSink {
         renames.get(parts(1)).fold(line)(nn => (parts(0) +: nn +: parts.drop(2)).mkString("\t"))
       }
     }
-    val metas = ms.map(readMeta)
-    val folded = ms.map(_.getName).zip(metas)
-      .flatMap { case (n, m) => n +: m.folded }.distinct
-    val fseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMinSeq)).min
-    val lseq = (metas.map(_.seq) ++ metas.flatMap(_.foldedMaxSeq)).max
-    val meta = ManifestMeta(claimSeq(path), folded,
-      foldedMinSeq = Some(fseq), foldedMaxSeq = Some(lseq))
-    val name = s"manifest-${java.util.UUID.randomUUID().toString}"
-    val tmp = Paths.get(path, s".$name.tmp")
-    Files.write(tmp, (renderHeader(meta) +: latestDdl +: patched).asJava,
-      StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(path, name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ms.foreach(m => Files.deleteIfExists(m.toPath))
+    writeManifest(path, foldMeta(Some(claimSeq(snap)), ms), latestDdl +: patched)
+    ms.foreach(m => Files.deleteIfExists(m.file.toPath))
     // Migrated originals stay for [[vacuum]] — deferred physical deletion
     // keeps in-flight scans of the prior snapshot readable to completion.
     rewritten
@@ -3095,14 +3039,10 @@ object ManifestFileSink {
       case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
     }.toSeq
     commitLock(path).synchronized {
-      val snap = snapshot(path, None)
-      val dvLines =
-        if (snap.isEmpty) Nil
-        else {
-          val current = asNullable(StructType.fromDDL(schemaLine(snap.last)))
-          matchPositions(path, org.apache.spark.sql.sources.AlwaysTrue(), current)
-        }
-      publishCommit(path, asNullable(schema).toDDL, dataLines, dvLines)
+      val snap = Snapshot(path)
+      val dvLines = snap.schema.fold(Seq.empty[(String, Array[Long])])(current =>
+        matchPositions(snap, org.apache.spark.sql.sources.AlwaysTrue(), current))
+      publishCommit(snap, asNullable(schema).toDDL, dataLines, dvLines)
     }
   }
 
@@ -3123,12 +3063,12 @@ object ManifestFileSink {
       case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
     }.toSeq
     commitLock(path).synchronized {
-      val snap = snapshot(path, None)
-      val schemaText = snap.lastOption.map(schemaLine).getOrElse(asNullable(schema).toDDL)
-      ensureSchemaUnchanged(path, "INSERT OVERWRITE", schema, schemaText, snap.nonEmpty)
+      val snap = Snapshot(path)
+      val schemaText = snap.ddl.getOrElse(asNullable(schema).toDDL)
+      ensureSchemaUnchanged(path, "INSERT OVERWRITE", schema, schemaText, snap.ddl.nonEmpty)
       val dvLines =
-        if (snap.isEmpty) Nil else matchPositions(path, filter, schema)
-      publishCommit(path, schemaText, dataLines, dvLines)
+        if (snap.ddl.isEmpty) Nil else matchPositions(snap, filter, schema)
+      publishCommit(snap, schemaText, dataLines, dvLines)
     }
   }
 
@@ -3143,7 +3083,8 @@ object ManifestFileSink {
       schema: StructType,
       pin: Option[String],
       messages: Array[WriterCommitMessage]): Unit = commitLock(path).synchronized {
-    if (latestManifest(path) != pin)
+    val log = Snapshot.headers(path)
+    if (log.published.lastOption.map(_.name) != pin)
       throw new IllegalStateException(
         s"table $path advanced past snapshot ${pin.getOrElse("<empty>")} during a " +
           "row-level operation: publish refused (task files stay invisible) — re-run")
@@ -3153,9 +3094,7 @@ object ManifestFileSink {
     }.toSeq
     val dvs = unionPositions(commits.flatMap(_.retractions)).toSeq.sortBy(_._1)
     if (dataLines.isEmpty && dvs.isEmpty) return
-    val schemaText = snapshot(path, None).lastOption.map(schemaLine)
-      .getOrElse(asNullable(schema).toDDL)
-    publishCommit(path, schemaText, dataLines, dvs)
+    publishCommit(log, log.ddl.getOrElse(asNullable(schema).toDDL), dataLines, dvs)
   }
 
   private[sources] def parseField(v: String, dt: DataType): Any =
@@ -3474,6 +3413,12 @@ private[sources] class ManifestTable(
           case _ => false
         }
       }
+      // The snapshot this query reads, resolved on first use and shared
+      // by the aggregate derivation, the reported schema and the scan —
+      // one listing, one read per manifest. Per BUILDER, never per table:
+      // a second action on the same DataFrame builds again and sees the
+      // commits that landed in between.
+      private lazy val snapshot = ManifestFileSink.Snapshot(path, asOf)
       private var aggResult: Option[(StructType, Seq[Seq[Any]])] = None
       override def supportCompletePushDown(
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -3483,22 +3428,28 @@ private[sources] class ManifestTable(
         aggResult = tryAgg(agg)
         aggResult.isDefined
       }
+      // Spark asks twice for one aggregate (complete pushdown, then push).
+      private var aggMemo: Option[(org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
+        Option[(StructType, Seq[Seq[Any]])])] = None
       private def tryAgg(
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
           : Option[(StructType, Seq[Seq[Any]])] =
         if (since.nonEmpty || weighted || pushed.nonEmpty) None
-        else ManifestFileSink.deriveAggregate(path, asOf, agg,
-          ManifestFileSink.storedSchema(path, asOf).getOrElse(new StructType()))
+        else aggMemo.collect { case (a, r) if a == agg => r }.getOrElse {
+          val r = ManifestFileSink.deriveAggregate(snapshot, agg,
+            snapshot.schema.getOrElse(new StructType()))
+          aggMemo = Some((agg, r))
+          r
+        }
       override def build(): Scan = aggResult match {
         case Some((aggSchema, values)) =>
           new ManifestAggScan(path, aggSchema, values)
         case None =>
-          val base = ManifestFileSink.storedSchema(path, asOf)
-            .getOrElse(new StructType())
+          val base = snapshot.schema.getOrElse(new StructType())
           val sch = if (weighted)
             base.add(ManifestFileSink.WeightCol, IntegerType, nullable = false)
           else base
-          new ManifestScan(path, required.getOrElse(sch), asOf, since, pushed,
+          new ManifestScan(snapshot, required.getOrElse(sch), since, pushed,
             ignoreDeletes, weighted,
             limit.filter(_ => pushed.isEmpty),
             topN.filter(_ => pushed.isEmpty))
@@ -4453,7 +4404,7 @@ private case class KeyedFileSplit(split: FileSplit, key: Seq[Any])
 }
 
 private class ManifestScan(
-    path: String, schema: StructType, asOf: Option[String] = None,
+    snapshot: ManifestFileSink.Snapshot, schema: StructType,
     since: Option[String] = None,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     ignoreDeletes: Boolean = false,
@@ -4465,6 +4416,15 @@ private class ManifestScan(
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering {
+  // Everything this scan knows of the table comes from `snapshot`, the
+  // [[ManifestFileSink.Snapshot]] its builder resolved ONCE for the whole
+  // query — the same one the aggregate derivation and the reported schema
+  // read — shared by the planner statistics, the static plan and any
+  // runtime re-plan: one listing, one read of each manifest, and no window
+  // in which a commit landing between two listings could pair one
+  // snapshot's files with another's vectors.
+  private val path = snapshot.path
+
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
 
@@ -4516,24 +4476,6 @@ private class ManifestScan(
     GraftTaskMetric("filesPruned", prunedFileCount),
     GraftTaskMetric("splitsPlanned", plannedSplitCount))
 
-  /** The snapshot this scan reads, resolved ONCE and shared by the
-    * planner statistics, the static plan and any runtime re-plan: one
-    * listing, one read of each manifest's entries and deletion vectors,
-    * and no window in which a commit landing between two listings could
-    * pair one snapshot's files with another's vectors. */
-  private lazy val snap: Seq[File] = ManifestFileSink.snapshot(path, asOf)
-
-  /** (file, rows, zone map, DDL) of every file the snapshot lists. */
-  private lazy val visible
-      : Seq[(String, Long, Option[Map[Int, ManifestFileSink.ColStats]], String)] =
-    snap.flatMap { m =>
-        val ddl = ManifestFileSink.schemaLine(m)
-        ManifestFileSink.entriesWithStats(m).map(e => (e._1, e._2, e._3, ddl))
-      }.distinctBy(_._1)
-
-  /** The snapshot's deletion vectors, per file. */
-  private lazy val snapDvs: Map[String, Array[Long]] = ManifestFileSink.deleteVectorsIn(snap)
-
   /** Planner statistics from metadata already in hand: live row counts
     * (manifest entries minus deletion vectors) and on-disk bytes of the
     * files that still hold live rows — a fully retracted file (every
@@ -4546,8 +4488,8 @@ private class ManifestScan(
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     var rows = 0L
     var bytes = 0L
-    visible.foreach { case (f, n, _, _) =>
-      val live = n - snapDvs.get(f).fold(0)(_.length)
+    snapshot.visible.foreach { case (f, n, _, _) =>
+      val live = n - snapshot.dvs.get(f).fold(0)(_.length)
       if (live > 0) {
         rows += live
         val file = Paths.get(path, "data", f)
@@ -4561,7 +4503,7 @@ private class ManifestScan(
     }
   }
   override def description(): String =
-    s"ManifestScan($path${asOf.fold("")(m => s", asOf=$m")}" +
+    s"ManifestScan($path${snapshot.asOf.fold("")(m => s", asOf=$m")}" +
       s"${since.fold("")(m => s", since=$m")}" +
       s"${if (filters.isEmpty) "" else filters.mkString(", PushedFilters: [", ", ", "]")})"
 
@@ -4717,10 +4659,10 @@ private class ManifestScan(
     // type in the same manifest. (Change-feed reads keep validating
     // everything: the weighted feed re-opens old files for retraction
     // images.)
-    val dvs = if (since.isEmpty) snapDvs else Map.empty[String, Array[Long]]
+    val dvs = if (since.isEmpty) snapshot.dvs else Map.empty[String, Array[Long]]
     // Type changes refuse at PLAN time — one loud driver-side error, never
     // a per-row parse failure on an executor.
-    visible
+    snapshot.visible
       .filter { case (f, rows, _, _) =>
         since.nonEmpty || dvs.getOrElse(f, Array.empty[Long]).length < rows }
       .map(_._4).distinct.foreach(ddl =>
@@ -4741,15 +4683,14 @@ private class ManifestScan(
       else ManifestFileSink.partitionFields(path).collect {
         case b: ManifestFileSink.BucketPart => b
       }
-    val fullSchema: StructType =
-      ManifestFileSink.storedSchema(path, asOf).getOrElse(schema)
+    val fullSchema: StructType = snapshot.schema.getOrElse(schema)
     val bucketTypes: Map[String, DataType] = allBucketFields.flatMap { b =>
       val i = fullSchema.fieldNames.indexOf(b.col)
       if (i < 0) None else Some(b.col -> fullSchema.fields(i).dataType)
     }.toMap
     val bucketNs: Map[String, Int] =
       allBucketFields.map(b => b.col -> b.n).toMap
-    val admitted = visible.filter { case (_, _, st, ddl) =>
+    val admitted = snapshot.visible.filter { case (_, _, st, ddl) =>
       val fs = schemaOf(ddl)
       lazy val pv = provenPartValues(st, fs)
       // Bucket tier: the attested bucket id refutes equality filters
@@ -4773,14 +4714,13 @@ private class ManifestScan(
       }
     }
     // Change feed: subtract the `since` snapshot's files. A retired
-    // `since` raises through snapshot() — the consumer's resume point was
+    // `since` raises in its resolution — the consumer's resume point was
     // compacted away, which must fail loudly (skipping would double-read,
     // silently narrowing would drop changes).
     val baseline = since.fold(Set.empty[String]) { m =>
       // An unknown resume point must also fail: treating it as "empty
       // snapshot" would replay the whole table into the consumer.
-      if (!ManifestFileSink.manifests(path).exists(_.getName == m) &&
-          !ManifestFileSink.foldedNames(path).contains(m))
+      if (!snapshot.all.exists(_.name == m) && !snapshot.folded.contains(m))
         throw new IllegalArgumentException(
           s"sinceManifest $m is not a published manifest of $path")
       // Delete fence: a DELETE commit in the unread window means the diff
@@ -4788,21 +4728,19 @@ private class ManifestScan(
       // opted into append-only semantics, or asked for the weighted feed
       // (which EXPRESSES retractions instead of dropping them).
       if (!ignoreDeletes && !weighted) {
-        ManifestFileSink.orderedManifests(path).find(_.getName == m)
-          .map(f => ManifestFileSink.readMeta(f).seq).foreach { sinceSeq =>
-            val offending = snap.filter(mf =>
-              ManifestFileSink.readMeta(mf).seq > sinceSeq &&
-                ManifestFileSink.hasDeleteVectors(mf))
+        snapshot.published.find(_.name == m).map(_.meta.seq).foreach { sinceSeq =>
+            val offending = snapshot.manifests.filter(mf =>
+              mf.meta.seq > sinceSeq && mf.hasDeleteVectors)
             if (offending.nonEmpty) throw new IllegalStateException(
               s"change feed window of $path contains row-level DELETE commits " +
-                s"(${offending.map(_.getName).mkString(",")}): the snapshot diff " +
+                s"(${offending.map(_.name).mkString(",")}): the snapshot diff " +
                 "carries appends only, so retractions would be silently dropped. " +
                 "Set option(\"ignoreDeletes\",\"true\") to accept append-only " +
                 "semantics, or diff full snapshots for true CDC.")
           }
       }
-      // A retired (compacted-away) resume point raises inside snapshot().
-      ManifestFileSink.visibleFiles(path, Some(m)).map(_._1).toSet
+      // A retired (compacted-away) resume point raises in its resolution.
+      snapshot.at(Some(m)).manifests.flatMap(_.entries).map(_.file).toSet
     }
     // Merge-on-read: attach each file's visible deletion vectors (fetched
     // above, before validation); a fully deleted file is dropped without
@@ -4849,26 +4787,23 @@ private class ManifestScan(
     // exactly like compact(aboveSeq) for streams.)
     val minus: Seq[InputPartition] =
       if (!weighted || since.isEmpty) Nil
-      else ManifestFileSink.orderedManifests(path)
-        .find(_.getName == since.get)
-        .map(f => ManifestFileSink.readMeta(f).seq) match {
+      else snapshot.published.find(_.name == since.get).map(_.meta.seq) match {
         case None => Nil // unknown/retired since raised above
         case Some(s0) =>
-          val visByFile = visible.map(v => v._1 -> v).toMap
-          lazy val ddlMap = ManifestFileSink.fileDdlMap(path)
-          ManifestFileSink.deleteVectorsIn(
-              snap.filter(m => ManifestFileSink.readMeta(m).seq > s0))
+          val visByFile = snapshot.visible.map(v => v._1 -> v).toMap
+          ManifestFileSink.unionPositions(
+              snapshot.manifests.filter(_.meta.seq > s0).flatMap(_.dvs))
             .toSeq.flatMap { case (f, ps) =>
               val (st, ddl) = visByFile.get(f)
                 .map(v => (v._3, v._4))
-                .getOrElse((None, ddlMap.getOrElse(f, "")))
+                .getOrElse((None, snapshot.fileDdls.getOrElse(f, "")))
               if (st.exists(s =>
                   !effFilters.forall(flt => ManifestFileSink.mayMatch(flt, s, schemaOf(ddl)))))
                 None
               else Some(FileSplit(f, ps, ddl, -1): InputPartition)
             }
       }
-    prunedFileCount = visible.size - admitted.size
+    prunedFileCount = snapshot.visible.size - admitted.size
     // SPJ eligibility: a plain batch read of a partitioned table where
     // EVERY live file proves its single value. One unprovable file (or
     // any retraction split) degrades the whole scan to unpartitioned —
@@ -5150,20 +5085,19 @@ private class ManifestMicroBatchStream(
     * manifests' synthesized negative seqs. */
   override def initialOffset(): streaming.Offset = SeqOffset(Long.MinValue)
 
-  private def pending(startSeq: Long): Seq[(File, ManifestFileSink.ManifestMeta)] = {
+  private def pending(log: ManifestFileSink.Snapshot,
+                      startSeq: Long): Seq[ManifestFileSink.Manifest] = {
     // Finality cap (advice-r18): never admit past a live in-flight claim
     // — once the checkpointed offset seals a seq, a commit retro-filling
     // below it would be skipped FOREVER (offsets only grow). Holding the
     // offset under the lowest pending claim makes the late commit land
     // above the boundary instead, where the next trigger reads it.
-    val ceil = ManifestFileSink.stableSeqCeiling(path)
-    val all = ManifestFileSink.orderedManifests(path)
-      .map(f => (f, ManifestFileSink.readMeta(f)))
-      .filter(m => m._2.seq > startSeq && m._2.seq <= ceil)
+    val ceil = ManifestFileSink.stableSeqCeiling(log)
+    val all = log.published.filter(m => m.meta.seq > startSeq && m.meta.seq <= ceil)
     // Trigger.AvailableNow: drain to the bound sealed at query start, in
     // admission-limited micro-batches; commits landing mid-drain wait for
     // the next query (they're after the bound).
-    availableNowBound.fold(all)(b => all.filter(_._2.seq <= b))
+    availableNowBound.fold(all)(b => all.filter(_.meta.seq <= b))
   }
 
   private var availableNowBound: Option[Long] = None
@@ -5176,7 +5110,7 @@ private class ManifestMicroBatchStream(
   override def latestOffset(start: streaming.Offset,
                             limit: streaming.ReadLimit): streaming.Offset = {
     val s = pos(start)
-    val p = pending(s)
+    val p = pending(ManifestFileSink.Snapshot.headers(path), s)
     if (p.isEmpty) return SeqOffset(s)
     // Whole-commit admission: walk commits in seq order accumulating their
     // row counts (already in the manifest — no data IO) until the budget
@@ -5187,7 +5121,7 @@ private class ManifestMicroBatchStream(
       case mr: streaming.ReadMaxRows =>
         var acc = 0L; var n = 0
         while (n < p.size && (n == 0 || acc < mr.maxRows())) {
-          acc += ManifestFileSink.entriesOf(p(n)._1).map(_._2).sum
+          acc += p(n).entries.map(_.rows).sum
           n += 1
         }
         n
@@ -5197,7 +5131,7 @@ private class ManifestMicroBatchStream(
         c.getReadLimits.toSeq.map(admit).min
       case _ => p.size
     }
-    SeqOffset(p(math.max(1, admit(limit)) - 1)._2.seq)
+    SeqOffset(p(math.max(1, admit(limit)) - 1).meta.seq)
   }
 
   override def latestOffset(): streaming.Offset =
@@ -5207,9 +5141,9 @@ private class ManifestMicroBatchStream(
   override def reportLatestOffset(): streaming.Offset = {
     // Same finality cap as [[pending]]: the reported latest (and with it
     // the AvailableNow drain bound) stops under any live in-flight claim.
-    val ceil = ManifestFileSink.stableSeqCeiling(path)
-    SeqOffset(ManifestFileSink.orderedManifests(path)
-      .map(ManifestFileSink.readMeta(_).seq).filter(_ <= ceil)
+    val log = ManifestFileSink.Snapshot.headers(path)
+    val ceil = ManifestFileSink.stableSeqCeiling(log)
+    SeqOffset(log.published.map(_.meta.seq).filter(_ <= ceil)
       .maxOption.getOrElse(Long.MinValue))
   }
 
@@ -5219,7 +5153,8 @@ private class ManifestMicroBatchStream(
   override def planInputPartitions(start: streaming.Offset,
                                    end: streaming.Offset): Array[InputPartition] = {
     val (s, e) = (pos(start), pos(end))
-    val window = pending(s).filter(_._2.seq <= e)
+    val log = ManifestFileSink.Snapshot.headers(path)
+    val window = pending(log, s).filter(_.meta.seq <= e)
     // Fold-window rule (the Iceberg skip-REPLACE idea, offset-exact): a
     // combined manifest adds no rows of its own — its entries are the
     // union of the commits it folded. Relative to the consumer's offset s:
@@ -5232,14 +5167,15 @@ private class ManifestMicroBatchStream(
     //     retired-snapshot error. `compact(path, aboveSeq)` exists so
     //     operators never create this case. A fold header predating the
     //     fseq/lseq fence is treated as straddling (conservative).
-    val readable = window.filter { case (f, m) =>
+    val readable = window.filter { mf =>
+      val m = mf.meta
       if (m.folded.isEmpty) true
       else if (s == Long.MinValue) true // fresh consumer: everything pending
       else (m.foldedMinSeq, m.foldedMaxSeq) match {
         case (Some(_), Some(l)) if l <= s => false // fully consumed: skip
         case (Some(fm), Some(_)) if fm > s => true // fully ahead: read
         case _ => throw new IllegalStateException(
-          s"compaction (${f.getName}) folded commits straddling the streaming " +
+          s"compaction (${mf.name}) folded commits straddling the streaming " +
             s"consumer's offset $s: resume window lost; restart the stream " +
             "from scratch, or compact with compact(path, aboveSeq) to stay " +
             "ahead of live consumers")
@@ -5250,10 +5186,10 @@ private class ManifestMicroBatchStream(
     // cannot express — fail loudly unless the consumer opted in, or the
     // WEIGHTED feed is on (retractions become −1 rows below).
     if (!ignoreDeletes && !weighted) {
-      val offending = readable.filter(w => ManifestFileSink.hasDeleteVectors(w._1))
+      val offending = readable.filter(_.hasDeleteVectors)
       if (offending.nonEmpty) throw new IllegalStateException(
         s"streaming window of $path contains row-level DELETE commits " +
-          s"(${offending.map(_._1.getName).mkString(",")}): the commit feed " +
+          s"(${offending.map(_.name).mkString(",")}): the commit feed " +
           "carries appends only, so retractions would be silently dropped. " +
           "Set option(\"ignoreDeletes\",\"true\") to accept append-only semantics.")
     }
@@ -5262,12 +5198,11 @@ private class ManifestMicroBatchStream(
     // Each file reads under the DDL of its committing manifest (schema
     // evolution), reconciled by name to the stream's schema.
     val dataCols = if (weighted) StructType(schema.fields.dropRight(1)) else schema
-    val plus = readable.flatMap { case (m, _) =>
-      val ddl = ManifestFileSink.schemaLine(m)
+    val plus = readable.flatMap { m =>
       ManifestFileSink.validateEvolution(dataCols,
-        ManifestFileSink.asNullable(StructType.fromDDL(ddl)),
-        s"streamed manifest ${m.getName}")
-      ManifestFileSink.entriesOf(m).map(e => (e._1, ddl))
+        ManifestFileSink.asNullable(StructType.fromDDL(m.ddl)),
+        s"streamed manifest ${m.name}")
+      m.entries.map(e => (e.file, m.ddl))
     }.distinctBy(_._1)
       .map { case (f, ddl) =>
         FileSplit(f, Array.empty, ddl, if (weighted) 1 else 0): InputPartition }
@@ -5278,10 +5213,9 @@ private class ManifestMicroBatchStream(
     val minus: Seq[InputPartition] =
       if (!weighted) Nil
       else {
-        lazy val ddlMap = ManifestFileSink.fileDdlMap(path)
-        ManifestFileSink.deleteVectorsIn(readable.map(_._1))
+        ManifestFileSink.unionPositions(readable.flatMap(_.dvs))
           .toSeq.map { case (f, ps) =>
-            FileSplit(f, ps, ddlMap.getOrElse(f, ""), -1): InputPartition
+            FileSplit(f, ps, log.fileDdls.getOrElse(f, ""), -1): InputPartition
           }
       }
     (plus ++ minus).toArray

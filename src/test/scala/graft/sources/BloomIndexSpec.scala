@@ -114,7 +114,7 @@ class BloomIndexSpec extends SparkTestBase {
     // Entry lines carry no bloom part (idx=min,max,null only).
     val m = ManifestFileSink.manifests(dir).head
     val entries = Files.readAllLines(m.toPath).asScala
-      .drop(ManifestFileSink.readMeta(m).headerLines)
+      .drop(ManifestFileSink.readManifest(m).meta.headerLines)
     entries.foreach { line =>
       line.split("\t")(2).split("\\|").foreach { part =>
         assert(part.count(_ == ',') === 2, s"unexpected bloom part in: $part")

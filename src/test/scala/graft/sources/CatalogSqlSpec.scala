@@ -35,7 +35,7 @@ class CatalogSqlSpec extends SparkTestBase {
 
     // The path API sees the same table: deletion vectors, not rewrites.
     val path = s"$root/db/people"
-    assert(ManifestFileSink.deleteVectors(path).nonEmpty,
+    assert(ManifestFileSink.Snapshot(path).dvs.nonEmpty,
       "SQL DELETE published deletion vectors on the same manifest table")
     assert(spark.read.format(classOf[ManifestFileSink].getName)
       .option("path", path).load().count() === 1)
@@ -162,7 +162,7 @@ class CatalogSqlSpec extends SparkTestBase {
 
     spark.sql("TRUNCATE TABLE graft.db.ow")
     assert(spark.sql("SELECT * FROM graft.db.ow").count() === 0)
-    assert(ManifestFileSink.deleteVectors(s"$root/db/ow").nonEmpty,
+    assert(ManifestFileSink.Snapshot(s"$root/db/ow").dvs.nonEmpty,
       "truncate is merge-on-read: vectors, not file deletion — history intact")
   }
 
@@ -178,7 +178,7 @@ class CatalogSqlSpec extends SparkTestBase {
       Seq((1L, "a", 1.0), (2L, "b!", 20.0), (3L, "c!", 30.0)))
     assert(ManifestFileSink.manifests(s"$root/db/up").size === before + 1,
       "the update (retractions + reinserts) is ONE commit")
-    assert(ManifestFileSink.deleteVectors(s"$root/db/up").values.map(_.length).sum === 2,
+    assert(ManifestFileSink.Snapshot(s"$root/db/up").dvs.values.map(_.length).sum === 2,
       "updated rows retract through deletion vectors, untouched rows stay in place")
     // No-match update publishes nothing.
     spark.sql("UPDATE graft.db.up SET score = 0.0 WHERE id = 999")

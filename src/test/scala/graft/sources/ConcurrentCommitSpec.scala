@@ -68,7 +68,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
   }
 
   private def publishedSeqs(dir: String): Seq[Long] =
-    ManifestFileSink.manifests(dir).map(ManifestFileSink.readMeta(_).seq)
+    ManifestFileSink.manifests(dir).map(ManifestFileSink.readManifest(_).meta.seq)
 
   test("two isolated driver worlds really have independent statics") {
     val mine = ManifestFileSink.getClass
@@ -107,8 +107,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     assert(seqs.sorted === (1L to total.toLong),
       "the published history must be one linear seq line")
     // Publication order is exactly seq order — no name-tiebreak rows.
-    val ordered = ManifestFileSink.orderedManifests(dir)
-      .map(ManifestFileSink.readMeta(_).seq)
+    val ordered = ManifestFileSink.Snapshot.headers(dir).published.map(_.meta.seq)
     assert(ordered === ordered.sorted && ordered.distinct.size === ordered.size)
   }
 
@@ -185,7 +184,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     d.publish(dir) // faster claimant takes 5
     assert(publishedSeqs(dir).sorted === Seq(1L, 2L, 3L, 5L))
     val bySeq = ManifestFileSink.manifests(dir)
-      .map(f => ManifestFileSink.readMeta(f).seq -> f.getName).toMap
+      .map(f => ManifestFileSink.readManifest(f).meta.seq -> f.getName).toMap
     // Raw latest sits ABOVE the in-flight claim; the stable handle does
     // not — a consumer pinning it cannot have seq 4 retro-fill into its
     // baseline.
@@ -209,16 +208,18 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     d.publish(dir) // seq 4
     // Direct prune (no compact — a fold's [fseq, lseq] range would
     // absorb the gap, compaction's documented quiescence edge): the
-    // retired claims 1/2/4 go, the live in-flight claim 3 stays.
-    assert(ManifestFileSink.pruneClaims(dir) === 3)
+    // retired claims 1/2 go, the live in-flight claim 3 stays, and so
+    // does the highest claim 4 (the floor of every later claim).
+    assert(ManifestFileSink.pruneClaims(ManifestFileSink.Snapshot.headers(dir)) === 2)
     assert(Files.exists(stalled),
       "a young unconsumed claim is in-flight evidence, not debris")
+    assert(Files.exists(Paths.get(dir, "_commits", f"${4L}%020d")))
     // Backdate past the TTL: the claimant is presumed dead, the marker
     // is debris.
     Files.setLastModifiedTime(stalled,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 3600000L))
-    assert(ManifestFileSink.pruneClaims(dir) === 1)
+    assert(ManifestFileSink.pruneClaims(ManifestFileSink.Snapshot.headers(dir)) === 1)
     assert(!Files.exists(stalled))
   }
 
@@ -229,13 +230,31 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val claims = Paths.get(dir, "_commits")
     assert(Files.list(claims).count() === 3)
     assert(ManifestFileSink.compact(dir) === 3) // folds 3 manifests, claims seq 4
-    // Claims 1–4 are all ≤ the published max (4) now: prune leaves zero.
+    // Claims 1–4 are all ≤ the published max (4) now: prune leaves only
+    // the highest, which every later claim must stay above.
     assert(ManifestFileSink.compact(dir) === 0) // second pass runs pruneClaims again
     val left = {
       val l = Files.list(claims)
       try l.iterator().asScala.map(_.getFileName.toString.toLong).toSeq
       finally l.close()
     }
-    assert(left.isEmpty, s"retired claims must be pruned, found $left")
+    assert(left === Seq(4L), s"retired claims must be pruned, found $left")
+  }
+
+  test("a claimer listing from before another driver's publish and vacuum never re-mints a seq") {
+    // A commit claims its seq over the listing it started with. If
+    // another driver publishes seq 3 and vacuums in between, the stale
+    // listing's floor is 3 again; only the surviving highest claim keeps
+    // the allocation above it.
+    val dir = freshDir()
+    val d = new Driver(getClass.getClassLoader)
+    (1 to 2).foreach(_ => d.publish(dir))
+    val stale = ManifestFileSink.Snapshot.headers(dir)
+    assert(stale.nextSeq === 3L)
+    new Driver(new IsolatedGraft).publish(dir) // seq 3
+    ManifestFileSink.vacuum(dir)
+    val s = ManifestFileSink.claimSeq(stale)
+    assert(!publishedSeqs(dir).contains(s), s"seq $s claimed twice")
+    assert(s === 4L)
   }
 }

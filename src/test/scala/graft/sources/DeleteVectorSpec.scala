@@ -111,7 +111,7 @@ class DeleteVectorSpec extends SparkTestBase {
       And(GreaterThan("id", 0L), Not(EqualTo("id", 3L)))) === 1) // deletes id=2 only
     // File 1 now fully deleted: the scan must plan zero splits for it.
     assert(ids(dir) === Seq(3L))
-    val dvs = ManifestFileSink.deleteVectors(dir)
+    val dvs = ManifestFileSink.Snapshot(dir).dvs
     assert(dvs.values.map(_.length).sum === 2)
   }
 
@@ -133,7 +133,7 @@ class DeleteVectorSpec extends SparkTestBase {
     assert(ManifestFileSink.applyDeletes(dir) === 2, "two files carried vectors")
 
     assert(ids(dir) === Seq(1L, 3L), "read unchanged by the purge")
-    assert(ManifestFileSink.deleteVectors(dir).isEmpty, "vectors folded away")
+    assert(ManifestFileSink.Snapshot(dir).dvs.isEmpty, "vectors folded away")
     assert(ManifestFileSink.manifests(dir).size === 1, "one combined manifest")
     // Originals stay for vacuum (deferred physical deletion protects
     // in-flight scans of the prior snapshot); unreferenced now.
@@ -233,6 +233,6 @@ class DeleteVectorSpec extends SparkTestBase {
     ManifestFileSink.deleteWhere(dir, EqualTo("id", 2L))
     assert(ManifestFileSink.compact(dir) === 3)
     assert(ids(dir) === Seq(1L, 3L), "vector lost in compaction")
-    assert(ManifestFileSink.deleteVectors(dir).values.map(_.length).sum === 1)
+    assert(ManifestFileSink.Snapshot(dir).dvs.values.map(_.length).sum === 1)
   }
 }

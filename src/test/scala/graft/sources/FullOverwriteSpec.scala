@@ -61,6 +61,9 @@ class FullOverwriteSpec extends SparkTestBase {
       .filter(_.startsWith(ManifestFileSink.DvMarker + "\t"))
       .map { l => val p = l.split("\t"); (p(1), p(2), p(3)) }.toSet
 
+  private def entries(dir: String, manifest: String): Seq[(String, Long)] =
+    ManifestFileSink.readManifest(new File(dir, manifest)).entries.map(e => (e.file, e.rows))
+
   private def wholeRun(rows: Long): String = if (rows == 1) "0" else s"0-${rows - 1}"
 
   test("path-API overwrite x3: readback, time travel, one run per file, one job, purge") {
@@ -69,7 +72,7 @@ class FullOverwriteSpec extends SparkTestBase {
     val published = scala.collection.mutable.ArrayBuffer.empty[String]
     pushes.foreach { rows =>
       val retracted = published.lastOption
-        .map(m => ManifestFileSink.entriesOf(new File(dir, m)).filter(_._2 > 0))
+        .map(m => entries(dir, m).filter(_._2 > 0))
         .getOrElse(Nil)
       val driverReads = ManifestFileSink.driverMatchFileReads.get()
       assert(jobsDuring(overwrite(dir, rows)) === 1,
@@ -86,12 +89,12 @@ class FullOverwriteSpec extends SparkTestBase {
       assert(read(dir, Some(m)) === rows, s"time travel to $m")
     }
 
-    val live = ManifestFileSink.entriesOf(new File(dir, published.last)).map(_._1).toSet
-    val old = published.init.flatMap(m => ManifestFileSink.entriesOf(new File(dir, m)))
+    val live = entries(dir, published.last).map(_._1).toSet
+    val old = published.init.flatMap(m => entries(dir, m))
       .map(_._1).toSet
     assert(ManifestFileSink.applyDeletes(dir) === old.size, "every old file dropped")
-    assert(ManifestFileSink.visibleFiles(dir).map(_._1).toSet === live)
-    assert(ManifestFileSink.deleteVectors(dir).isEmpty)
+    assert(ManifestFileSink.Snapshot(dir).visible.map(_._1).toSet === live)
+    assert(ManifestFileSink.Snapshot(dir).dvs.isEmpty)
     assert(read(dir) === pushes.last)
   }
 
@@ -101,19 +104,18 @@ class FullOverwriteSpec extends SparkTestBase {
     pushRows(0, 10).toDF("id", "name", "score").coalesce(1)
       .write.format(fmt).option("path", dir).mode("append").save()
     assert(ManifestFileSink.deleteWhere(dir, In("id", Array(3L, 4L))) === 2)
-    val file = ManifestFileSink.visibleFiles(dir).head._1
+    val file = ManifestFileSink.Snapshot(dir).visible.head._1
     overwrite(dir, pushRows(1, 5))
     assert(dvLines(dir, ManifestFileSink.latestManifest(dir).get) ===
       Set((file, "8", "0-2,5-9")))
-    assert(ManifestFileSink.deleteVectors(dir)(file).toSeq === (0L until 10L))
+    assert(ManifestFileSink.Snapshot(dir).dvs(file).toSeq === (0L until 10L))
     assert(read(dir) === pushRows(1, 5))
   }
 
   test("scan statistics count the bytes of files with live rows only") {
     val dir = freshDir()
     Seq(300, 500, 700).zipWithIndex.foreach { case (n, k) => overwrite(dir, pushRows(k, n)) }
-    val live = ManifestFileSink.entriesOf(
-      new File(dir, ManifestFileSink.latestManifest(dir).get)).map(_._1)
+    val live = entries(dir, ManifestFileSink.latestManifest(dir).get).map(_._1)
     val liveBytes = live.map(f => Files.size(Paths.get(dir, "data", f))).sum
     val stats = spark.read.format(fmt).option("path", dir).load()
       .queryExecution.optimizedPlan.collectFirst {

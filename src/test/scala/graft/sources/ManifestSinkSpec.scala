@@ -79,7 +79,7 @@ class ManifestSinkSpec extends SparkTestBase {
     }
     append(1L)
     append(2L)
-    val secondSnapshot = ManifestFileSink.orderedManifests(dir).last.getName
+    val secondSnapshot = ManifestFileSink.latestManifest(dir).get
     append(3L)
 
     val asOf = spark.read.format(fmt).option("path", dir)
@@ -104,7 +104,7 @@ class ManifestSinkSpec extends SparkTestBase {
     assert(ManifestFileSink.manifests(dir).size === 3)
     // Interrupted compaction: the combined manifest published but the
     // inputs were not yet deleted — every file is listed twice.
-    val combined = ManifestFileSink.orderedManifests(dir)
+    val combined = ManifestFileSink.Snapshot.headers(dir).published.map(_.file)
     val schemaLine = Files.readAllLines(combined.last.toPath).get(1)
     val allEntries = combined.flatMap(m =>
       scala.jdk.CollectionConverters.ListHasAsScala(
@@ -227,11 +227,11 @@ class ManifestSinkSpec extends SparkTestBase {
     // Coarse-mtime filesystem: every manifest lands in the same tick.
     val t = java.nio.file.attribute.FileTime.fromMillis(1700000000000L)
     ManifestFileSink.manifests(dir).foreach(m => Files.setLastModifiedTime(m.toPath, t))
-    val ordered = ManifestFileSink.orderedManifests(dir)
-    assert(ordered.map(m => ManifestFileSink.readMeta(m).seq) === Seq(1L, 2L, 3L, 4L),
+    val ordered = ManifestFileSink.Snapshot.headers(dir).published
+    assert(ordered.map(_.meta.seq) === Seq(1L, 2L, 3L, 4L),
       "publication order must come from the embedded sequence")
     // Time travel at the 2nd commit is exact despite identical mtimes.
-    val second = ordered(1).getName
+    val second = ordered(1).name
     assert(spark.read.format(fmt).option("path", dir)
       .option("asOfManifest", second).load().collect().map(_.getLong(0)).sorted
       === Array(1L, 2L))
@@ -284,7 +284,7 @@ class ManifestSinkSpec extends SparkTestBase {
       Seq((i, s"r$i", i.toDouble)).toDF("id", "name", "score")
         .write.format(fmt).option("path", dir).mode("append").save()
     }
-    val retired = ManifestFileSink.orderedManifests(dir).head.getName
+    val retired = ManifestFileSink.Snapshot.headers(dir).published.head.name
     ManifestFileSink.compact(dir)
     val e = intercept[IllegalArgumentException] {
       spark.read.format(fmt).option("path", dir)
@@ -317,7 +317,7 @@ class ManifestSinkSpec extends SparkTestBase {
       Seq((i, s"r$i", i.toDouble)).toDF("id", "name", "score")
         .write.format(fmt).option("path", dir).mode("append").save()
     }
-    val ordered = ManifestFileSink.orderedManifests(dir)
+    val ordered = ManifestFileSink.Snapshot.headers(dir).published.map(_.file)
     // Changes after commit 2 = commits 3 and 4.
     assert(spark.read.format(fmt).option("path", dir)
       .option("sinceManifest", ordered(1).getName).load()
@@ -370,7 +370,7 @@ class ManifestSinkSpec extends SparkTestBase {
     // The combined manifest is itself a valid time-travel anchor: it seals
     // epochs 0-1; the post-compaction snapshot timeline works across the
     // boundary (pre-compaction epoch manifests are retired by contract).
-    val ordered = ManifestFileSink.orderedManifests(dir)
+    val ordered = ManifestFileSink.Snapshot.headers(dir).published.map(_.file)
     assert(ordered.size === 3, s"combined + 2 fresh epochs, got ${ordered.map(_.getName)}")
     assert(spark.read.format(fmt).option("path", dir)
       .option("asOfManifest", ordered.head.getName).load()
@@ -412,15 +412,15 @@ class ManifestSinkSpec extends SparkTestBase {
     // First v2 commit over a v1 table: seq 1, publication-ordered LAST.
     Seq((3L, "c", 3.0)).toDF("id", "name", "score")
       .write.format(fmt).option("path", dir).mode("append").save()
-    val ordered = ManifestFileSink.orderedManifests(dir)
-    assert(ManifestFileSink.readMeta(ordered.last).seq === 1L,
+    val ordered = ManifestFileSink.Snapshot.headers(dir).published
+    assert(ordered.last.meta.seq === 1L,
       "first v2 seq over a v1 table must be 1 and order after every v1 commit")
     assert(spark.read.format(fmt).option("path", dir).load().count() === 3)
     // compact folds the mixed v1+v2 history into a single v2 manifest: the
     // free migration path.
     assert(ManifestFileSink.compact(dir) === 3)
-    val merged = ManifestFileSink.orderedManifests(dir)
-    assert(merged.size === 1 && ManifestFileSink.readMeta(merged.head).seq === 2L)
+    val merged = ManifestFileSink.Snapshot.headers(dir).published
+    assert(merged.size === 1 && merged.head.meta.seq === 2L)
     assert(spark.read.format(fmt).option("path", dir).load()
       .collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
   }
@@ -441,7 +441,7 @@ class ManifestSinkSpec extends SparkTestBase {
       }
       assert(futures.forall(_.get()), "every distinct-name publish must land")
     } finally pool.shutdown()
-    val seqs = ManifestFileSink.manifests(dir).map(ManifestFileSink.readMeta(_).seq)
+    val seqs = ManifestFileSink.manifests(dir).map(ManifestFileSink.readManifest(_).meta.seq)
     assert(seqs.sorted === (1L to n.toLong),
       s"concurrent publishes must serialize to dense unique seqs, got $seqs")
   }

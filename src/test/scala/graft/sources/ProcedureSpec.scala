@@ -79,7 +79,7 @@ class ProcedureSpec extends SparkTestBase {
     val purged = spark.sql("CALL gproc.system.apply_deletes(table => 'db.pt')")
       .head().getInt(0)
     assert(purged > 0)
-    assert(ManifestFileSink.deleteVectors(s"$root/db/pt").isEmpty,
+    assert(ManifestFileSink.Snapshot(s"$root/db/pt").dvs.isEmpty,
       "copy-on-write purge folds the vectors away")
     assert(spark.table("gproc.db.pt").orderBy("id").collect().map(_.getLong(0)).toSeq ===
       Seq(1L, 2L))
@@ -327,7 +327,7 @@ class ProcedureSpec extends SparkTestBase {
     assert(quiet.getInt(2) === 0)
     // A writer stalls in its claim->rename window; a faster one publishes.
     val next = ManifestFileSink.manifests(path)
-      .map(ManifestFileSink.readMeta(_).seq).max + 1
+      .map(ManifestFileSink.readManifest(_).meta.seq).max + 1
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "_commits"))
     java.nio.file.Files.createFile(
       java.nio.file.Paths.get(path, "_commits", f"$next%020d"))

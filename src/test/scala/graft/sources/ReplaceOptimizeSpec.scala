@@ -70,7 +70,7 @@ class ReplaceOptimizeSpec extends SparkTestBase {
     assert(produced > 0 && produced <= 3)
     assert(state(dir) === before, "optimize must not change visible rows")
     assert(ManifestFileSink.manifests(dir).size === 1, "one superseding manifest")
-    assert(ManifestFileSink.deleteVectors(dir).isEmpty, "vectors folded away")
+    assert(ManifestFileSink.Snapshot(dir).dvs.isEmpty, "vectors folded away")
     // Physical deletion is DEFERRED: superseded originals stay on disk so
     // an in-flight scan planned against the prior snapshot finishes its
     // read; they are unreferenced now and vacuum reclaims them.

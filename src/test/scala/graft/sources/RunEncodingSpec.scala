@@ -54,7 +54,7 @@ class RunEncodingSpec extends SparkTestBase {
       .select("id").collect().map(_.getLong(0)).toSeq.sorted
     val expected = Seq(0L, 1L, 5L, 6L, 8L, 9L)
     assert(ids() === expected)
-    val dvsBefore = ManifestFileSink.deleteVectors(dir).view.mapValues(_.toSeq).toMap
+    val dvsBefore = ManifestFileSink.Snapshot(dir).dvs.view.mapValues(_.toSeq).toMap
 
     val m = Paths.get(dir, ManifestFileSink.latestManifest(dir).get)
     val lines = Files.readAllLines(m).asScala.toSeq
@@ -65,7 +65,7 @@ class RunEncodingSpec extends SparkTestBase {
       if (l == dv.head) l.split("\t").take(3).mkString("\t") + "\t2,3,4,7" else l
     }.asJava)
     assert(ids() === expected)
-    assert(ManifestFileSink.deleteVectors(dir).view.mapValues(_.toSeq).toMap === dvsBefore)
+    assert(ManifestFileSink.Snapshot(dir).dvs.view.mapValues(_.toSeq).toMap === dvsBefore)
   }
 
   test("weighted change feed across a full overwrite: every old image at -1") {

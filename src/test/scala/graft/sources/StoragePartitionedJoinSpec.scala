@@ -41,7 +41,7 @@ class StoragePartitionedJoinSpec extends SparkTestBase {
       .select("c_custkey", "c_nationkey", "c_acctbal")
       .writeTo("gspj.spj.cust").append()
     val path = s"$root/spj/cust"
-    val files = ManifestFileSink.visibleFiles(path).map(_._1)
+    val files = ManifestFileSink.Snapshot(path).visible.map(_._1)
     assert(files.nonEmpty)
     // every file holds exactly one c_nationkey value
     val df = spark.read.format(classOf[ManifestFileSink].getName)
@@ -225,7 +225,7 @@ class StoragePartitionedJoinSpec extends SparkTestBase {
         |       id AS v
         |FROM range(60)""".stripMargin)
     val path = s"$root/spj/mc"
-    val files = ManifestFileSink.visibleFiles(path).map(_._1)
+    val files = ManifestFileSink.Snapshot(path).visible.map(_._1)
     assert(ManifestFileSink.partitionColumns(path) === Seq("k", "sub"))
     val perFile = spark.read.format(classOf[ManifestFileSink].getName)
       .option("path", path).load()
@@ -379,7 +379,7 @@ class StoragePartitionedJoinSpec extends SparkTestBase {
     // the bucket-clustered write distribution produced ONE file per
     // bucket — the whole point of the layout on a high-cardinality key
     // (identity demux would have written 200 files)
-    val files = ManifestFileSink.visibleFiles(path).map(_._1)
+    val files = ManifestFileSink.Snapshot(path).visible.map(_._1)
     assert(files.size === 4,
       s"bucket-clustered write should yield one file per bucket: ${files.size} vs 4")
     assert(spark.table("gspj.spj.bf").count() === 200)

@@ -36,7 +36,7 @@ class WapSpec extends SparkTestBase {
     assert(spark.table("gwap.db.t").count() == 2,
       "staged commits leaked into the main line")
     val path = s"$root/db/t"
-    assert(ManifestFileSink.stagedIds(path) == Seq("batch7"))
+    assert(ManifestFileSink.Snapshot.headers(path).stagedIds == Seq("batch7"))
     // The operability listing sees the stage: 2 commits, 3 rows.
     val stages = spark.sql("CALL gwap.system.wap_stages(table => 'db.t')").collect()
     assert(stages.length == 1 && stages.head.getString(0) == "batch7" &&
@@ -56,7 +56,7 @@ class WapSpec extends SparkTestBase {
       .head().getInt(0)
     assert(published == 2)
     assert(spark.table("gwap.db.t").count() == 6)
-    assert(ManifestFileSink.stagedIds(path).isEmpty)
+    assert(ManifestFileSink.Snapshot.headers(path).stagedIds.isEmpty)
     assert(spark.table("gwap.db.t").select("id").as[Long].collect().sorted
       === Array(1L, 2L, 3L, 10L, 11L, 12L))
 
@@ -79,7 +79,7 @@ class WapSpec extends SparkTestBase {
     val discarded = spark.sql(
       "CALL gwap.system.wap_discard(table => 'db.d', id => 'no')").head().getInt(0)
     assert(discarded == 1)
-    assert(ManifestFileSink.stagedIds(path).isEmpty)
+    assert(ManifestFileSink.Snapshot.headers(path).stagedIds.isEmpty)
     assert(new java.io.File(path, "data").listFiles().length < dataBefore,
       "the discarded stage's data files must be reclaimed")
     assert(spark.table("gwap.db.d").count() == 1)
@@ -114,7 +114,7 @@ class WapSpec extends SparkTestBase {
     // Invisible to the main line; visible to the audit view.
     assert(spark.table("gwap.db.s").count() == 1,
       "staged streaming epochs leaked into the main line")
-    assert(ManifestFileSink.stagedIds(path) == Seq("bg1"))
+    assert(ManifestFileSink.Snapshot.headers(path).stagedIds == Seq("bg1"))
     assert(spark.read.option("versionAsOf", "wap:bg1").table("gwap.db.s")
       .count() == 4)
 
@@ -125,7 +125,7 @@ class WapSpec extends SparkTestBase {
     assert(n == 2, s"expected 2 published epoch commits, got $n")
     assert(spark.table("gwap.db.s").orderBy("id").as[Long].collect().toSeq ===
       Seq(1L, 2L, 10L, 11L, 12L))
-    assert(ManifestFileSink.stagedIds(path).isEmpty)
+    assert(ManifestFileSink.Snapshot.headers(path).stagedIds.isEmpty)
   }
 
   test("WAP refuses non-append writes") {
@@ -139,7 +139,7 @@ class WapSpec extends SparkTestBase {
     }
     assert(err.getMessage.contains("appends only"))
     // And the refusal left nothing behind — no stage, no main-line change.
-    assert(ManifestFileSink.stagedIds(s"$root/db/r").isEmpty)
+    assert(ManifestFileSink.Snapshot.headers(s"$root/db/r").stagedIds.isEmpty)
     assert(spark.table("gwap.db.r").count() == 1)
   }
 }

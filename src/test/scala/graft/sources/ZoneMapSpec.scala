@@ -152,7 +152,7 @@ class ZoneMapSpec extends SparkTestBase {
     // Strip the stats field from every entry line — the pre-zone-map format.
     val m = ManifestFileSink.manifests(dir).head
     val lines = Files.readAllLines(m.toPath).asScala.toSeq
-    val meta = ManifestFileSink.readMeta(m)
+    val meta = ManifestFileSink.readManifest(m).meta
     val rewritten = lines.take(meta.headerLines) ++
       lines.drop(meta.headerLines).map(_.split("\t").take(2).mkString("\t"))
     Files.write(m.toPath, rewritten.asJava)
