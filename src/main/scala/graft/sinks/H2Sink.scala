@@ -71,9 +71,11 @@ object H2Sink {
   /** Reference semantics: an empty string loads as SQL NULL
     * (H2 CSVREAD behavior, asserted in H2DestinationSpec.scala:253–263). */
   def emptyStringsAsNull(df: DataFrame): DataFrame =
-    df.schema.fields.filter(_.dataType == StringType).foldLeft(df) { (d, f) =>
-      d.withColumn(f.name, when(length(col(f.name)) === 0, null).otherwise(col(f.name)))
-    }
+    df.select(df.schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name.replace("`", "``")}`")
+      if (f.dataType != StringType) c
+      else when(length(c) === 0, null).otherwise(c).as(f.name)
+    }: _*)
 
   /** Open one admin connection by instantiating the configured driver
     * directly (the same thing Spark's `DriverRegistry` does) — no

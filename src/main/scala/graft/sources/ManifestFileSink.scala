@@ -3494,7 +3494,7 @@ private[sources] class FilesPrunedMetric
 private[sources] class SplitsPlannedMetric
   extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "splitsPlanned"
-  override def description(): String = "file splits planned"
+  override def description(): String = "scan splits planned"
 }
 
 private case class GraftTaskMetric(metricName: String, metricValue: Long)
@@ -4358,7 +4358,49 @@ private class ManifestStreamingWriterFactory(
   * `deleted` are emitted (the retracted row images), with weight −1. */
 private case class FileSplit(
     file: String, deleted: Array[Long] = Array.empty,
-    ddl: String = "", weight: Int = 0) extends InputPartition
+    ddl: String = "", weight: Int = 0)
+
+/** One scan task's files, read one after another by one reader; each
+  * keeps its own vector, DDL, weight and `_file`/`_pos`. */
+private case class FileGroup(files: Seq[FileSplit]) extends InputPartition
+
+private object FileGroup {
+  /** On-disk bytes of a data file; a missing file counts 0. */
+  def bytes(path: String, file: String): Long =
+    try Files.size(Paths.get(path, "data", file))
+    catch { case _: java.nio.file.NoSuchFileException => 0L }
+
+  /** Packs splits into tasks by bytes, with the rule Spark's own file
+    * sources use (`FilePartition.maxSplitBytes` / `getFilePartitions`):
+    * each file costs its bytes plus `spark.sql.files.openCostInBytes`; a
+    * task holds at most `min(spark.sql.files.maxPartitionBytes,
+    * max(openCost, totalCost / minPartitionNum))`, where minPartitionNum
+    * is `spark.sql.files.minPartitionNum` or else the default
+    * parallelism; files are placed next-fit decreasing. Many small
+    * commits then read in about one task per core instead of one task per
+    * file, while files of about a core's share each keep a task. */
+  def pack(splits: Seq[FileSplit], bytesOf: String => Long): Array[InputPartition] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val minParts = conf.filesMinPartitionNum.getOrElse(
+      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+    val sized = splits.map(s => (s, bytesOf(s.file))).sortBy(-_._2)
+    val total = sized.iterator.map(_._2 + openCost).sum
+    val cap = math.min(conf.filesMaxPartitionBytes, math.max(openCost, total / minParts))
+    val groups = Array.newBuilder[InputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[FileSplit]
+    var curBytes = 0L
+    def close(): Unit = if (cur.nonEmpty) {
+      groups += FileGroup(cur.toSeq); cur.clear(); curBytes = 0L
+    }
+    sized.foreach { case (s, b) =>
+      if (curBytes + b > cap) close()
+      cur += s; curBytes += b + openCost
+    }
+    close()
+    groups.result()
+  }
+}
 
 /** The result rows of a metadata-answered aggregate
   * ([[ManifestFileSink.deriveAggregate]]): one row for a global
@@ -4476,6 +4518,12 @@ private class ManifestScan(
     GraftTaskMetric("filesPruned", prunedFileCount),
     GraftTaskMetric("splitsPlanned", plannedSplitCount))
 
+  /** On-disk bytes per data file, stat'ed once per scan and shared by
+    * the planner statistics and the split packing. */
+  private val fileBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def bytesOf(f: String): Long =
+    fileBytes.computeIfAbsent(f, f => FileGroup.bytes(path, f))
+
   /** Planner statistics from metadata already in hand: live row counts
     * (manifest entries minus deletion vectors) and on-disk bytes of the
     * files that still hold live rows — a fully retracted file (every
@@ -4492,8 +4540,7 @@ private class ManifestScan(
       val live = n - snapshot.dvs.get(f).fold(0)(_.length)
       if (live > 0) {
         rows += live
-        val file = Paths.get(path, "data", f)
-        if (Files.exists(file)) bytes += Files.size(file)
+        bytes += bytesOf(f)
       }
     }
     val (r, b) = (rows, bytes)
@@ -4637,7 +4684,15 @@ private class ManifestScan(
     * i.e. the `KeyGroupedPartitioning` this scan may report. Both
     * [[outputPartitioning]] and [[planInputPartitions]] read the shared
     * [[staticPlan]] so the reported grouping and the served splits can
-    * never disagree. */
+    * never disagree.
+    *
+    * A keyed (storage-partitioned) plan serves one file per split: the
+    * reported grouping needs one key per split and the reported ordering
+    * one file per group. Every other plan packs its files into
+    * [[FileGroup]]s by bytes ([[FileGroup.pack]]: Spark's file-source
+    * rule under `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum`), so a table of many small commits reads in about
+    * one task per core rather than one per file. */
   private def computeSplits(
       effFilters: Array[org.apache.spark.sql.sources.Filter])
       : (Array[InputPartition], Option[Int], Seq[String]) = {
@@ -4785,7 +4840,7 @@ private class ManifestScan(
     // rewrites fold history; the STREAMING feed's fold-window fence
     // detects that case. Batch consumers should diff around maintenance,
     // exactly like compact(aboveSeq) for streams.)
-    val minus: Seq[InputPartition] =
+    val minus: Seq[FileSplit] =
       if (!weighted || since.isEmpty) Nil
       else snapshot.published.find(_.name == since.get).map(_.meta.seq) match {
         case None => Nil // unknown/retired since raised above
@@ -4800,7 +4855,7 @@ private class ManifestScan(
               if (st.exists(s =>
                   !effFilters.forall(flt => ManifestFileSink.mayMatch(flt, s, schemaOf(ddl)))))
                 None
-              else Some(FileSplit(f, ps, ddl, -1): InputPartition)
+              else Some(FileSplit(f, ps, ddl, -1))
             }
       }
     prunedFileCount = snapshot.visible.size - admitted.size
@@ -4840,8 +4895,7 @@ private class ManifestScan(
             common.takeWhile(schema.fieldNames.contains)
           else Seq.empty
         (keyed.toArray, Some(nGroups), orderedCols)
-      } else
-        ((plus.map(_._1: InputPartition) ++ minus).toArray, None, Seq.empty[String])
+      } else (FileGroup.pack(plus.map(_._1) ++ minus, bytesOf), None, Seq.empty[String])
     plannedSplitCount = out._1.length
     out
   }
@@ -4896,6 +4950,8 @@ private class ManifestScan(
       case _ => Array.empty
     }
 
+  /** The static plan, or — when runtime filters arrived and the scan is
+    * not keyed — a re-plan under them, packed by the same byte rule. */
   override def planInputPartitions(): Array[InputPartition] =
     if (staticPlan._2.isDefined || runtimeFilters.isEmpty) staticPlan._1
     else computeSplits(filters ++ runtimeFilters)._1
@@ -4907,17 +4963,16 @@ private class ManifestScan(
     new ManifestMicroBatchStream(path, schema, ignoreDeletes, weighted)
 }
 
-/** Top-level (shipped to executors). Streamed, not slurped: a
-  * compacted/large append target would otherwise buffer an entire data
-  * file per executor thread. */
 /** Per-TASK cumulative reader metrics. Spark's DataSourceRDD metric
   * plumbing SETS the task's metric to the reader's reported value and
-  * sums across tasks — so when a storage-partitioned group hands one
-  * task SEVERAL splits (readers run sequentially), each reader's "1"
-  * would overwrite its siblings' and `filesRead` would undercount
-  * exactly the multi-file groups. Readers therefore bump a per-task
-  * counter here and report the CUMULATIVE value; a completion listener
-  * reclaims the slot. */
+  * sums across tasks. One task can read SEVERAL files: a packed
+  * [[FileGroup]] chains its files through one reader, and a
+  * storage-partitioned group hands one task several keyed splits, each
+  * with its own reader run in sequence. A per-reader count would then let
+  * the last reader's value overwrite its siblings' and undercount
+  * `filesRead` and `dvRowsSkipped`. Readers therefore bump a per-task
+  * counter here (one file each time a file is opened) and report the
+  * CUMULATIVE value; a completion listener reclaims the slot. */
 private object ManifestReaderTaskMetrics {
   private val files =
     new java.util.concurrent.ConcurrentHashMap[Long, java.util.concurrent.atomic.AtomicLong]()
@@ -4940,15 +4995,17 @@ private object ManifestReaderTaskMetrics {
   }
 }
 
+/** Top-level (shipped to executors). Reads a task's files one after
+  * another — a [[FileGroup]], or a keyed split as a group of one. Each
+  * file is streamed, not slurped: a compacted/large append target would
+  * otherwise buffer an entire data file per executor thread. */
 private class ManifestReaderFactory(path: String, schema: StructType)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val split = partition match {
-      case k: KeyedFileSplit => k.split
-      case f => f.asInstanceOf[FileSplit]
+    val files = partition match {
+      case k: KeyedFileSplit => Seq(k.split)
+      case g => g.asInstanceOf[FileGroup].files
     }
-    val reader = Files.newBufferedReader(
-      Paths.get(path, "data", split.file), StandardCharsets.UTF_8)
     // The read schema interleaves three kinds of columns:
     //   - DATA columns (parsed from the file, evolution-reconciled);
     //   - the weighted feed's `_change_weight` (filled from the split);
@@ -4958,74 +5015,102 @@ private class ManifestReaderFactory(path: String, schema: StructType)
     // the schema the file was WRITTEN with, CONVERT only the fields the
     // (possibly pruned) read schema asks for, by NAME — added columns
     // backfill NULL, dropped/pruned columns are never materialized, order
-    // is immaterial. Everything is precomputed once per split; the fast
-    // path (identical schemas, data-only) adds zero per-row work.
+    // is immaterial. The layout is computed once per distinct (DDL,
+    // weighted) pair in the task, so each DDL parses once however many
+    // files share it; the fast path (identical schemas, data-only) adds
+    // zero per-row work.
     val names = schema.fields.map(_.name)
     val isMeta = names.map(n =>
       n == ManifestFileSink.FileCol || n == ManifestFileSink.PosCol)
-    val isWeight = names.map(n => split.weight != 0 && n == ManifestFileSink.WeightCol)
-    val dataSchema = StructType(schema.fields.zipWithIndex.collect {
-      case (f, i) if !isMeta(i) && !isWeight(i) => f
-    })
-    val fileSchema = if (split.ddl.isEmpty) dataSchema
-      else ManifestFileSink.asNullable(StructType.fromDDL(split.ddl))
-    val plainData = fileSchema == dataSchema && dataSchema.length == schema.length
-    val proj = ManifestFileSink.evolutionProjection(dataSchema, fileSchema)
-    // For each read-schema position: the file-schema index to parse, or
-    // -1 (NULL backfill / non-data column handled explicitly below).
-    val srcIdx: Array[Int] = {
-      var di = 0
-      schema.fields.indices.map { i =>
-        if (isMeta(i) || isWeight(i)) -1
-        else { val fi = proj(di); di += 1; fi }
-      }.toArray
-    }
-    val fileName = UTF8String.fromString(split.file)
-    def project(line: String, pos: Long): InternalRow = {
-      if (plainData) return ManifestFileSink.parse(line, fileSchema)
-      val parts = line.split("\t", -1)
-      InternalRow.fromSeq(schema.fields.indices.map { i =>
-        schema.fields(i).name match {
-          case ManifestFileSink.FileCol if isMeta(i) => fileName
-          case ManifestFileSink.PosCol if isMeta(i)  => pos
-          case _ if isWeight(i)                      => split.weight
-          case _ =>
-            val fi = srcIdx(i)
-            if (fi < 0) null
-            else ManifestFileSink.parseField(parts(fi), fileSchema.fields(fi).dataType)
-        }
+    final class Layout(ddl: String, weighted: Boolean) {
+      val isWeight = names.map(n => weighted && n == ManifestFileSink.WeightCol)
+      private val dataSchema = StructType(schema.fields.zipWithIndex.collect {
+        case (f, i) if !isMeta(i) && !isWeight(i) => f
       })
+      val fileSchema = if (ddl.isEmpty) dataSchema
+        else ManifestFileSink.asNullable(StructType.fromDDL(ddl))
+      val plainData = fileSchema == dataSchema && dataSchema.length == schema.length
+      // For each read-schema position: the file-schema index to parse, or
+      // -1 (NULL backfill / non-data column handled explicitly below).
+      val srcIdx: Array[Int] = {
+        val proj = ManifestFileSink.evolutionProjection(dataSchema, fileSchema)
+        var di = 0
+        schema.fields.indices.map { i =>
+          if (isMeta(i) || isWeight(i)) -1
+          else { val fi = proj(di); di += 1; fi }
+        }.toArray
+      }
     }
+    val layouts = scala.collection.mutable.Map.empty[(String, Boolean), Layout]
     new PartitionReader[InternalRow] {
+      private val pending = files.iterator
+      // The open file and its layout; `split` is null between files.
+      private var split: FileSplit = _
+      private var reader: java.io.BufferedReader = _
+      private var layout: Layout = _
+      private var fileName: UTF8String = _
+      private var positions: Array[Long] = _
       private var cur: InternalRow = _
-      private val positions = split.deleted
       private var idx = -1L
       private var pi = 0
       private val (taskFiles, taskDv) = ManifestReaderTaskMetrics.forCurrentTask()
-      taskFiles.incrementAndGet()
+
+      private def openNext(): Boolean = pending.hasNext && {
+        split = pending.next()
+        reader = Files.newBufferedReader(
+          Paths.get(path, "data", split.file), StandardCharsets.UTF_8)
+        layout = layouts.getOrElseUpdate((split.ddl, split.weight != 0),
+          new Layout(split.ddl, split.weight != 0))
+        fileName = UTF8String.fromString(split.file)
+        positions = split.deleted
+        idx = -1L; pi = 0
+        taskFiles.incrementAndGet()
+        true
+      }
+      private def closeFile(): Unit = {
+        if (reader != null) reader.close()
+        reader = null; split = null
+      }
+
+      private def project(line: String, pos: Long): InternalRow = {
+        val l = layout
+        if (l.plainData) return ManifestFileSink.parse(line, l.fileSchema)
+        val parts = line.split("\t", -1)
+        InternalRow.fromSeq(schema.fields.indices.map { i =>
+          schema.fields(i).name match {
+            case ManifestFileSink.FileCol if isMeta(i) => fileName
+            case ManifestFileSink.PosCol if isMeta(i)  => pos
+            case _ if l.isWeight(i)                    => split.weight
+            case _ =>
+              val fi = l.srcIdx(i)
+              if (fi < 0) null
+              else ManifestFileSink.parseField(parts(fi), l.fileSchema.fields(fi).dataType)
+          }
+        })
+      }
+
       override def next(): Boolean = {
-        while (true) {
+        while (split != null || openNext()) {
           val line = reader.readLine()
-          if (line == null) return false
-          idx += 1
-          if (split.weight < 0) {
-            // Retraction split: EMIT exactly the vector's positions.
-            if (pi < positions.length && positions(pi) == idx) {
-              pi += 1; cur = project(line, idx); return true
-            } else if (pi >= positions.length) return false // past last hit
-          } else {
-            // Merge-on-read: one pointer walks the sorted deletion vector
-            // in lockstep with the line index — O(1) per row, no lookups.
-            if (pi < positions.length && positions(pi) == idx) {
+          if (line == null) closeFile()
+          else {
+            idx += 1
+            if (split.weight < 0) {
+              // Retraction split: EMIT exactly the vector's positions.
+              if (pi < positions.length && positions(pi) == idx) {
+                pi += 1; cur = project(line, idx); return true
+              } else if (pi >= positions.length) closeFile() // past last hit
+            } else if (pi < positions.length && positions(pi) == idx) {
+              // Merge-on-read: one pointer walks the sorted deletion vector
+              // in lockstep with the line index — O(1) per row, no lookups.
               pi += 1; taskDv.incrementAndGet() // dead
-            }
-            else { cur = project(line, idx); return true }
+            } else { cur = project(line, idx); return true }
           }
         }
         false
       }
       override def get(): InternalRow = cur
-      override def close(): Unit = reader.close()
+      override def close(): Unit = closeFile()
       override def currentMetricsValues()
           : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = Array(
         GraftTaskMetric("filesRead", taskFiles.get()),
@@ -5204,21 +5289,20 @@ private class ManifestMicroBatchStream(
         s"streamed manifest ${m.name}")
       m.entries.map(e => (e.file, m.ddl))
     }.distinctBy(_._1)
-      .map { case (f, ddl) =>
-        FileSplit(f, Array.empty, ddl, if (weighted) 1 else 0): InputPartition }
+      .map { case (f, ddl) => FileSplit(f, Array.empty, ddl, if (weighted) 1 else 0) }
     // Weighted feed: each window DELETE commit's vectors become −1 splits
     // reading back exactly the retracted row images — inserts and
     // retractions arrive through one uniform z-set stream within the
     // micro-batch's commit window.
-    val minus: Seq[InputPartition] =
+    val minus: Seq[FileSplit] =
       if (!weighted) Nil
       else {
         ManifestFileSink.unionPositions(readable.flatMap(_.dvs))
-          .toSeq.map { case (f, ps) =>
-            FileSplit(f, ps, log.fileDdls.getOrElse(f, ""), -1): InputPartition
-          }
+          .toSeq.map { case (f, ps) => FileSplit(f, ps, log.fileDdls.getOrElse(f, ""), -1) }
       }
-    (plus ++ minus).toArray
+    // A micro-batch admitting many small commits packs their files by
+    // bytes, as the batch scan does.
+    FileGroup.pack(plus ++ minus, FileGroup.bytes(path, _))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

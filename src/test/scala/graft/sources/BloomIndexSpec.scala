@@ -26,7 +26,7 @@ class BloomIndexSpec extends SparkTestBase {
 
   private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
     val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputRDD.getNumPartitions
+      case b: BatchScanExec => PlannedFiles.of(b)
     }
     assert(scans.nonEmpty, s"no BatchScanExec in:\n${df.queryExecution.executedPlan}")
     scans.sum
@@ -174,7 +174,7 @@ class BloomIndexSpec extends SparkTestBase {
       // 42 and 44 live in different residue files; every file's RANGE
       // admits both keys, so ≤3 partitions proves the BLOOMS did the
       // dynamic pruning (+1 fp slack).
-      assert(scans.exists(b => b.runtimeFilters.nonEmpty && b.inputRDD.getNumPartitions <= 3),
+      assert(scans.exists(b => b.runtimeFilters.nonEmpty && PlannedFiles.of(b) <= 3),
         "runtime IN over {42,44} must bloom-prune the non-holding files")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }

@@ -284,7 +284,7 @@ class CatalogSqlSpec extends SparkTestBase {
       assert(scans.nonEmpty)
       assert(scans.exists(_.runtimeFilters.nonEmpty),
         s"expected runtime filters on the manifest scan:\n${joined.queryExecution.executedPlan}")
-      assert(scans.exists(_.inputRDD.getNumPartitions === 1),
+      assert(scans.exists(PlannedFiles.of(_) === 1),
         "runtime key IN [1] must zone-map-prune to the single admitted file")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }

@@ -86,7 +86,7 @@ class ReplaceOptimizeSpec extends SparkTestBase {
     def planned(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.executedPlan.collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputRDD.getNumPartitions
+          PlannedFiles.of(b)
       }.sum
     val t = spark.read.format(fmt).option("path", dir).load()
     assert(planned(t.filter(col("id") === 1L)) === 1,

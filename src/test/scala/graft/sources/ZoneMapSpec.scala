@@ -24,7 +24,7 @@ class ZoneMapSpec extends SparkTestBase {
   /** Files the scan under `df`'s plan would actually open. */
   private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
     val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputRDD.getNumPartitions
+      case b: BatchScanExec => PlannedFiles.of(b)
     }
     assert(scans.nonEmpty, s"no BatchScanExec in:\n${df.queryExecution.executedPlan}")
     scans.sum
