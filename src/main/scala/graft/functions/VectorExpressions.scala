@@ -117,6 +117,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           children(0), children(1))))
     e.injectPlannerStrategy(_ => new graft.plans.TopKPerGroupStrategy)
+    e.injectPlannerStrategy(_ => new graft.sources.MetadataAnswerStrategy)
     e.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
     e.injectOptimizerRule(session => graft.plans.MaterializedRollupRewrite(session))
   }

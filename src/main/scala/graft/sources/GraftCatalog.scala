@@ -806,12 +806,12 @@ private[sources] class GraftProcedure(op: String, root: String)
     // Shared latest-listing-per-file policy (advice-r13) — this view and
     // partitionRowCounts must never disagree on a re-listed entry.
     val fileRows = snap.latestEntries
-      .map { case (f, n, st, _) =>
+      .map { case (f, n, e, _) =>
         org.apache.spark.sql.catalyst.InternalRow(
           UTF8String.fromString(f), n,
           dvs.get(f).map(_.length.toLong).getOrElse(0L),
-          st.isDefined,
-          st.exists(_.contains(ManifestFileSink.SortKeyStatsIdx)))
+          e.stats.isDefined,
+          e.stats.exists(_.contains(ManifestFileSink.SortKeyStatsIdx)))
       }.toArray
     val outSchema = StructType(Seq(
       org.apache.spark.sql.types.StructField("file", StringType, nullable = false),

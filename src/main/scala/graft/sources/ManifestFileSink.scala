@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, LocalScan, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -478,14 +478,16 @@ object ManifestFileSink {
       * merge-on-read scan of this snapshot subtracts. */
     lazy val dvs: Map[String, Array[Long]] = unionPositions(manifests.flatMap(_.dvs))
 
-    /** (file, rows, zone map, DDL of the listing manifest) of every visible
-      * file. Distinct by file name, first listing kept: task files are
-      * immutable once committed, so a file listed twice (e.g. by a
-      * [[compact]] that crashed between publishing the combined manifest
-      * and deleting its inputs) is the same data — deduping here makes
-      * that crash window harmless instead of a double-read. */
-    lazy val visible: Seq[(String, Long, Option[Map[Int, ColStats]], String)] =
-      manifests.flatMap(m => m.entries.map(e => (e.file, e.rows, e.stats, m.ddl)))
+    /** (file, rows, entry, DDL of the listing manifest) of every visible
+      * file. The entry's zone map is decoded only when `.stats` is read: a
+      * bare count or an unfiltered scan never decodes one. Distinct by
+      * file name, first listing kept: task files are immutable once
+      * committed, so a file listed twice (e.g. by a [[compact]] that
+      * crashed between publishing the combined manifest and deleting its
+      * inputs) is the same data — deduping here makes that crash window
+      * harmless instead of a double-read. */
+    lazy val visible: Seq[(String, Long, Entry, String)] =
+      manifests.flatMap(m => m.entries.map(e => (e.file, e.rows, e, m.ddl)))
         .distinctBy(_._1)
 
     /** Latest stats listing per visible file, sorted by file name — the
@@ -495,8 +497,8 @@ object ManifestFileSink {
       * divergence needs a re-listed entry, but two views of one snapshot
       * must never be able to disagree). "Latest" = last in manifest order —
       * the most recent manifest to claim the file owns its stats. */
-    lazy val latestEntries: Seq[(String, Long, Option[Map[Int, ColStats]], String)] =
-      manifests.flatMap(m => m.entries.map(e => (e.file, e.rows, e.stats, m.ddl)))
+    lazy val latestEntries: Seq[(String, Long, Entry, String)] =
+      manifests.flatMap(m => m.entries.map(e => (e.file, e.rows, e, m.ddl)))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.last)
 
@@ -918,20 +920,26 @@ object ManifestFileSink {
   private def matchCandidates(
       snap: Snapshot,
       prune: Option[org.apache.spark.sql.sources.Filter],
-      schema: StructType): Seq[MatchCandidate] =
-    snap.visible.flatMap { case (file, rows, st, ddl) =>
+      schema: StructType): Seq[MatchCandidate] = {
+    // One parse and one evolution check per distinct DDL, not per file.
+    val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
+    snap.visible.flatMap { case (file, rows, e, ddl) =>
         val deleted = snap.dvs.getOrElse(file, Array.empty[Long])
         // A fully-retracted file has no live rows to match — skip it
         // BEFORE evolution validation, so a post-RTAS mutation doesn't
         // trip over the replaced generation's incompatible legacy DDL.
         if (deleted.length >= rows) None
         else {
-          val fileSchema = asNullable(StructType.fromDDL(ddl))
-          validateEvolution(schema, fileSchema, s"data file $file")
-          if (prune.exists(f => st.exists(s => !mayMatch(f, s, fileSchema)))) None
+          val fileSchema = ddlCache.getOrElseUpdate(ddl, {
+            val fs = asNullable(StructType.fromDDL(ddl))
+            validateEvolution(schema, fs, s"data file $file")
+            fs
+          })
+          if (prune.exists(f => e.stats.exists(s => !mayMatch(f, s, fileSchema)))) None
           else Some(MatchCandidate(file, ddl, deleted, rows))
         }
       }
+  }
 
   /** Does `f` hold for every row without reading one? True for
     * `AlwaysTrue` and any `And`/`Or` tree of them — the shape a DSv2
@@ -2161,7 +2169,7 @@ object ManifestFileSink {
     def schemaOf(ddl: String): StructType =
       ddlCache.getOrElseUpdate(ddl, asNullable(StructType.fromDDL(ddl)))
     snap.latestEntries
-      .map { case (f, rows, st, ddl) =>
+      .map { case (f, rows, e, ddl) =>
         val live = math.max(0L, rows - dvs.getOrElse(f, Array.empty[Long]).length)
         // Stat indexes resolve against EACH FILE'S OWN write schema
         // (advice-r13: per-file zone maps are keyed by the writing
@@ -2174,7 +2182,7 @@ object ManifestFileSink {
         // trusted (a type-evolved column's old-type literal is not a
         // value of the current domain).
         val fs = schemaOf(ddl)
-        val key = st.flatMap { stats =>
+        val key = e.stats.flatMap { stats =>
           val vs = idCols.map { c =>
             val fi = fs.fieldNames.indexOf(c)
             if (fi < 0 || !curTypes.get(c).forall(_ == fs.fields(fi).dataType)) None
@@ -2283,13 +2291,13 @@ object ManifestFileSink {
       val dt = schema.fields(i0).dataType
       if (!Seq(LongType, IntegerType, DoubleType, StringType).contains(dt)) return None
       var acc: Any = null
-      entries.foreach { case (_, rows, st, ddl) =>
+      entries.foreach { case (_, rows, e, ddl) =>
         if (rows > 0) {
           val fs = schemaOf(ddl)
           val fi = fs.fieldNames.indexOf(name)
           if (fi >= 0) {
             if (fs.fields(fi).dataType != dt) return None
-            st.flatMap(_.get(fi)) match {
+            e.stats.flatMap(_.get(fi)) match {
               case None => return None // no claim recorded: must scan
               case Some(cs) if cs.rangeless => return None
               case Some(cs) if cs.min.isEmpty => () // all-NULL file: contributes nothing
@@ -2340,7 +2348,7 @@ object ManifestFileSink {
       path: String,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       schema: StructType,
-      entries: Seq[(String, Long, Option[Map[Int, ColStats]], String)],
+      entries: Seq[(String, Long, Entry, String)],
       schemaOf: String => StructType,
       colName: org.apache.spark.sql.connector.expressions.Expression => Option[String])
       : Option[(StructType, Seq[Seq[Any]])] = {
@@ -2390,10 +2398,10 @@ object ManifestFileSink {
     // Fold every live file into its (proven) group.
     val groups = scala.collection.mutable.LinkedHashMap
       .empty[Seq[Any], (Long, Array[Any])] // key -> (rows, extremes)
-    entries.foreach { case (_, rows, st, ddl) =>
+    entries.foreach { case (_, rows, e, ddl) =>
       if (rows > 0) {
         val fs = schemaOf(ddl)
-        val stats = st.getOrElse(return None)
+        val stats = e.stats.getOrElse(return None)
         val key = grpCols.zip(grpTypes).map { case (c, dt) =>
           val fi = fs.fieldNames.indexOf(c)
           if (fi < 0) return None
@@ -3367,8 +3375,11 @@ private[sources] class ManifestTable(
       // `SELECT count(*) / min(c) / max(c) FROM t` with no WHERE and no
       // GROUP BY resolves entirely from the manifest (counts from
       // entries, extremes from zone maps) — COMPLETE pushdown, one row,
-      // zero file IO. Catalyst only attempts this when every filter was
-      // fully consumed; this scan re-evaluates all filters post-scan
+      // zero file IO, no job: the row is planned on the driver
+      // ([[ManifestAggScan]] is a LocalScan; [[MetadataAnswerStrategy]]
+      // evaluates the projection and filters above it). Catalyst only
+      // attempts this when every filter was fully consumed; this scan
+      // re-evaluates all filters post-scan
       // (zone maps skip files, never rows), so `pushedFilters` non-empty
       // means residuals exist and Spark keeps the aggregate — the
       // correctness interplay is enforced by the engine's own gate, and
@@ -4402,35 +4413,19 @@ private object FileGroup {
   }
 }
 
-/** The result rows of a metadata-answered aggregate
-  * ([[ManifestFileSink.deriveAggregate]]): one row for a global
-  * aggregate, one row per group for a pushed GROUP BY over identity
-  * partition columns. Values ride the split in Catalyst form
-  * (Long / Int / Double / UTF8String / null). */
-private case class AggResultSplit(rows: Seq[Seq[Any]]) extends InputPartition
-
 /** Scan serving a COMPLETELY pushed-down aggregate from manifest
-  * metadata: one split, one row, zero data files opened. */
-private class ManifestAggScan(path: String, aggSchema: StructType, rows: Seq[Seq[Any]])
-  extends Scan with Batch {
+  * metadata. Its result rows ([[ManifestFileSink.deriveAggregate]]: one
+  * row for a global aggregate, one per group for a pushed GROUP BY over
+  * identity partition columns; values in Catalyst form, Long / Int /
+  * Double / UTF8String / null) exist at planning, so it is a `LocalScan`:
+  * [[MetadataAnswerStrategy]] plans it as a driver-side leaf that opens
+  * no data file and runs no Spark job. */
+private class ManifestAggScan(path: String, aggSchema: StructType, values: Seq[Seq[Any]])
+  extends LocalScan {
   override def readSchema(): StructType = aggSchema
-  override def toBatch: Batch = this
   override def description(): String =
     s"ManifestAggScan($path, metadata-answered: ${aggSchema.fieldNames.mkString(", ")})"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(AggResultSplit(rows))
-  override def createReaderFactory(): PartitionReaderFactory = new AggReaderFactory
-}
-
-private class AggReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val rows = partition.asInstanceOf[AggResultSplit].rows
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = InternalRow.fromSeq(rows(i))
-      override def close(): Unit = ()
-    }
+  override def rows(): Array[InternalRow] = values.map(InternalRow.fromSeq).toArray
 }
 
 /** A [[FileSplit]] of an identity-partitioned table, claiming its single
@@ -4603,11 +4598,11 @@ private class ManifestScan(
   }
 
   private def partitionKeyOf(
-      st: Option[Map[Int, ManifestFileSink.ColStats]],
+      e: ManifestFileSink.Entry,
       fileSchema: StructType): Option[Seq[Any]] = {
     if (partFields.isEmpty) return None
-    val pv = provenPartValues(st, fileSchema)
-    lazy val bk = provenBucketIds(st, partFields)
+    val pv = provenPartValues(e.stats, fileSchema)
+    lazy val bk = provenBucketIds(e.stats, partFields)
     val vals = partFields.map {
       case ManifestFileSink.IdentityPart(c) => pv.get(c)
       case b: ManifestFileSink.BucketPart   => bk.get(b.col).map(id => id: Any)
@@ -4625,11 +4620,9 @@ private class ManifestScan(
     * per-type compares (no double round-trip for longs); a file counts
     * never toward its own pruning. */
   private def topNPrune(
-      files: Seq[(FileSplit, Option[Seq[Any]], Long,
-        Option[Map[Int, ManifestFileSink.ColStats]], StructType)],
+      files: Seq[(FileSplit, Option[Seq[Any]], Long, ManifestFileSink.Entry, StructType)],
       colName: String, desc: Boolean, n: Int)
-      : Option[Seq[(FileSplit, Option[Seq[Any]], Long,
-          Option[Map[Int, ManifestFileSink.ColStats]], StructType)]] = {
+      : Option[Seq[(FileSplit, Option[Seq[Any]], Long, ManifestFileSink.Entry, StructType)]] = {
     val i0 = schema.fieldNames.indexOf(colName)
     if (i0 < 0) return None
     val dt = schema.fields(i0).dataType
@@ -4651,11 +4644,11 @@ private class ManifestScan(
     }
     // Mirror DESC into the ASC algorithm: swap bounds, flip the compare.
     def cmp(a: Any, b: Any): Int = if (desc) rawCmp(b, a) else rawCmp(a, b)
-    val bounds = files.map { case (_, _, live, st, fs) =>
+    val bounds = files.map { case (_, _, live, e, fs) =>
       val fi = fs.fieldNames.indexOf(colName)
       if (fi < 0) return None // NULL-backfilled column: rows are unranked
       if (fs.fields(fi).dataType != dt) return None
-      st.flatMap(_.get(fi)) match {
+      e.stats.flatMap(_.get(fi)) match {
         case Some(cs) if !cs.rangeless && !cs.hasNull && cs.min.nonEmpty =>
           val (lo, hi) = (parse(cs.min), parse(cs.max))
           if (desc) (hi, lo, live) else (lo, hi, live)
@@ -4745,13 +4738,13 @@ private class ManifestScan(
     }.toMap
     val bucketNs: Map[String, Int] =
       allBucketFields.map(b => b.col -> b.n).toMap
-    val admitted = snapshot.visible.filter { case (_, _, st, ddl) =>
+    val admitted = snapshot.visible.filter { case (_, _, e, ddl) =>
       val fs = schemaOf(ddl)
-      lazy val pv = provenPartValues(st, fs)
+      lazy val pv = provenPartValues(e.stats, fs)
       // Bucket tier: the attested bucket id refutes equality filters
       // whose literal hashes elsewhere (the point-lookup partition
       // pruning a hash layout owes its reads).
-      lazy val bk: Map[String, (Int, Int)] = provenBucketIds(st, allBucketFields)
+      lazy val bk: Map[String, (Int, Int)] = provenBucketIds(e.stats, allBucketFields)
         .flatMap { case (c, id) => bucketNs.get(c).map(n => c -> (n, id)) }
       effFilters.forall { f =>
         (if (partCols.nonEmpty) ManifestFileSink.partitionFilterDecide(f, pv)
@@ -4763,7 +4756,7 @@ private class ManifestScan(
             else None) match {
               case Some(b) => b
               // Zone maps are keyed by the FILE's column positions.
-              case None => st.forall(s => ManifestFileSink.mayMatch(f, s, fs))
+              case None => e.stats.forall(s => ManifestFileSink.mayMatch(f, s, fs))
             }
         }
       }
@@ -4803,11 +4796,11 @@ private class ManifestScan(
     // vector subtraction): its rows are the append deltas, and the delete
     // fence above governs retractions.
     val plusAll = admitted.filterNot(f => baseline.contains(f._1))
-      .flatMap { case (f, rows, st, ddl) =>
+      .flatMap { case (f, rows, e, ddl) =>
         val del = dvs.getOrElse(f, Array.empty[Long])
         if (del.length >= rows) None
         else Some((FileSplit(f, del, ddl, if (weighted) 1 else 0),
-          partitionKeyOf(st, schemaOf(ddl)), rows - del.length, st, schemaOf(ddl)))
+          partitionKeyOf(e, schemaOf(ddl)), rows - del.length, e, schemaOf(ddl)))
       }
     // Pushed ORDER BY col LIMIT n: zone-map-SOUND file pruning — a file
     // is prunable iff the OTHER files wholly on the extreme side of it
@@ -4850,7 +4843,7 @@ private class ManifestScan(
               snapshot.manifests.filter(_.meta.seq > s0).flatMap(_.dvs))
             .toSeq.flatMap { case (f, ps) =>
               val (st, ddl) = visByFile.get(f)
-                .map(v => (v._3, v._4))
+                .map(v => (v._3.stats, v._4))
                 .getOrElse((None, snapshot.fileDdls.getOrElse(f, "")))
               if (st.exists(s =>
                   !effFilters.forall(flt => ManifestFileSink.mayMatch(flt, s, schemaOf(ddl)))))
@@ -4883,7 +4876,7 @@ private class ManifestScan(
         // column (`_sort`) rides along and per-key windows drop their
         // sorts too.
         val srcCols = partFields.map(_.col)
-        val attested: Seq[Seq[String]] = plus.map(_._4.flatMap(
+        val attested: Seq[Seq[String]] = plus.map(_._4.stats.flatMap(
           _.get(ManifestFileSink.SortKeyStatsIdx).collect {
             case cs if !cs.rangeless => cs.min.split(",").toSeq
           }).getOrElse(Seq.empty))

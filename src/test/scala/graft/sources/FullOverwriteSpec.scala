@@ -2,12 +2,9 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualTo, In, Or}
 import graft.SparkTestBase
@@ -17,7 +14,7 @@ import graft.SparkTestBase
   * overwrite retracts the old generation from manifest metadata alone:
   * one job per overwrite (the write), no old data file opened, and one
   * `0-(n-1)` run per retracted file in the manifest. */
-class FullOverwriteSpec extends SparkTestBase {
+class FullOverwriteSpec extends SparkTestBase with JobCounting {
 
   private def fmt = classOf[ManifestFileSink].getName
 
@@ -40,19 +37,6 @@ class FullOverwriteSpec extends SparkTestBase {
     val r = spark.read.format(fmt).option("path", dir)
     asOf.fold(r)(m => r.option("asOfManifest", m)).load()
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sortBy(_._1)
-  }
-
-  /** Jobs started while `body` ran, counted by a SparkListener. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(l)
-    n.get
   }
 
   /** (file, count, runs) of every deletion-vector line of one manifest. */
