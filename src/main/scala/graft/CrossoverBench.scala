@@ -51,16 +51,7 @@ object CrossoverBench {
     val famFilter: Set[String] =
       if (args.length > 3) args(3).split(',').toSet else Set("equidepth", "conversion")
     val skip1x = args.length > 4 && args(4) == "skip1x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
 
     val big = s"$outDir/x$factor"
     val reps = spark.range(factor).select(col("id").as("__rep"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector / single-query profiler:
   * `runMain graft.Explain <queryName> [sfDir] [mode] [runs]`
   * Prints the formatted physical plan and cold+warm wall times. */
@@ -11,16 +9,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "formatted"
     val runs = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     // A comma-separated name list runs the queries in sequence in ONE JVM —
     // the A/B harness for session-global effects (registered rollups,
     // persisted kernels) that a standalone run can't reproduce.

@@ -69,16 +69,7 @@ object ScaleBench {
     val queries =
       if (args.length > 2) args(2).split(",").map(_.trim).toSeq else DefaultQueries
     val outDir = "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
 
     val big = s"$outDir/x$factor"
     buildReplica(spark, sfDir, big, factor)

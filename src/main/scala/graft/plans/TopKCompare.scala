@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -13,22 +12,12 @@ object TopKCompare {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val k = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      // The comparison needs the Window arm to STAY a Window: the
-      // globally-injected WindowTopKRewrite would otherwise rewrite the
-      // dead-rank idiom below into TopKPerGroup and we'd benchmark the
-      // custom operator against itself.
-      .config("spark.sql.optimizer.excludedRules",
-        "graft.plans.WindowTopKRewrite")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The comparison needs the Window arm to STAY a Window: the
+    // globally-injected WindowTopKRewrite would otherwise rewrite the
+    // dead-rank idiom below into TopKPerGroup and we'd benchmark the
+    // custom operator against itself.
+    val spark = graft.GraftSession(32,
+      "spark.sql.optimizer.excludedRules" -> "graft.plans.WindowTopKRewrite")
     val li = Tables(spark, sfDir).lineitem
       .select(col("l_partkey"), col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
 

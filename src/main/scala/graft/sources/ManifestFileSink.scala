@@ -18,6 +18,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import ManifestFileSink.{CommittedFile, CommittedFiles}
+
 /** DataSource V2 WRITE path with an explicit commit protocol — the shape a
   * bespoke destination (the reference is one) must implement to get
   * exactly-once batch writes out of Spark's task model:
@@ -292,29 +294,24 @@ object ManifestFileSink {
     * Every manifest is read through [[readManifest]] and parsed once into a
     * [[Manifest]]; an operation sees the table through one [[Snapshot]]. */
   private[sources] final case class ManifestMeta(
-      seq: Long, folded: Seq[String], headerLines: Int = 2,
+      seq: Long, folded: Seq[String],
       foldedMinSeq: Option[Long] = None, foldedMaxSeq: Option[Long] = None,
       staged: Option[String] = None)
 
-  /** Parse a manifest's header line. Version-tolerant: a v2 manifest
-    * carries the `#graft` header; a v1 manifest (written before the header
-    * existed) has the schema DDL on line 0 and no header — it gets a
-    * SYNTHESIZED seq from its mtime, shifted negative so every v1 commit
-    * orders before every v2 commit (v2 seqs are ≥ 1) and v1 commits order
-    * among themselves by mtime, exactly the v1 reader's rule. A
-    * pre-existing table thus stays readable across the format change; the
-    * first [[compact]] rewrites it to v2 (a free migration path). */
-  private def parseMeta(f: File, h: String): ManifestMeta =
-    if (h.startsWith("#graft")) {
-      val kv = h.split("\t").drop(1).map { p =>
-        val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1)
-      }.toMap
-      ManifestMeta(kv("seq").toLong,
-        kv.get("folded").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil),
-        foldedMinSeq = kv.get("fseq").map(_.toLong),
-        foldedMaxSeq = kv.get("lseq").map(_.toLong),
-        staged = kv.get("staged").filter(_.nonEmpty))
-    } else ManifestMeta(f.lastModified() - (1L << 62), Nil, headerLines = 1)
+  /** Parse a manifest's header line. A file without the `#graft` header
+    * is not a manifest this format can order, so it fails, naming the file. */
+  private def parseMeta(f: File, h: String): ManifestMeta = {
+    if (!h.startsWith("#graft"))
+      throw new IllegalStateException(s"not a graft manifest (no #graft header): $f")
+    val kv = h.split("\t").drop(1).map { p =>
+      val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1)
+    }.toMap
+    ManifestMeta(kv("seq").toLong,
+      kv.get("folded").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil),
+      foldedMinSeq = kv.get("fseq").map(_.toLong),
+      foldedMaxSeq = kv.get("lseq").map(_.toLong),
+      staged = kv.get("staged").filter(_.nonEmpty))
+  }
 
   /** Manifest files opened for reading. Every read goes through
     * [[readManifest]], so this counts the metadata plane's file opens;
@@ -358,16 +355,30 @@ object ManifestFileSink {
       if (statsText.isEmpty) None else Some(decodeStats(statsText))
   }
 
+  /** A task's committed data file, as its writer reports it at task commit
+    * (`stats`: the encoded zone map, empty when the file claims none).
+    * [[line]] is the one renderer of a manifest entry; [[Manifest.entries]]
+    * parses it back. */
+  private[sources] final case class CommittedFile(
+      file: String, rows: Long, stats: String = "") extends WriterCommitMessage {
+    def line: String = if (stats.isEmpty) s"$file\t$rows" else s"$file\t$rows\t$stats"
+  }
+
+  /** Task commit of a PARTITIONED batch write: one entry per partition value
+    * the task saw ([[ManifestPartitionedDataWriter]]). */
+  private[sources] final case class CommittedFiles(files: Seq[CommittedFile])
+    extends WriterCommitMessage
+
   /** One manifest, parsed once: header, DDL, data entries (zone maps
     * decoded on first use) and deletion vectors (runs decoded). */
   private[sources] final class Manifest(
       val file: File, val meta: ManifestMeta, read: Option[IndexedSeq[String]]) {
     def name: String = file.getName
     private lazy val lines: IndexedSeq[String] = read.getOrElse(readLines(file))
-    /** Schema DDL: line 1 under a v2 header, line 0 of a v1 manifest. */
-    lazy val ddl: String = lines(meta.headerLines - 1)
+    /** Schema DDL: the line under the header. */
+    lazy val ddl: String = lines(1)
     /** Entry and deletion-vector lines, as written. */
-    lazy val body: IndexedSeq[String] = lines.drop(meta.headerLines)
+    lazy val body: IndexedSeq[String] = lines.drop(2)
     lazy val entries: IndexedSeq[Entry] =
       body.filterNot(_.startsWith(DvPrefix)).map { line =>
         val parts = line.split("\t")
@@ -433,13 +444,11 @@ object ManifestFileSink {
 
     def stagedIds: Seq[String] = all.flatMap(_.meta.staged).distinct.sorted
 
-    /** Next commit sequence: one past the max published v2 seq (synthesized
-      * v1 seqs are negative — clamped out, so the first v2 commit over a
-      * v1 table is seq 1 and orders after every v1 manifest). This is only
+    /** Next commit sequence: one past the max seq on disk. This is only
       * the PUBLISHED floor — allocation goes through [[claimSeq]], which
       * raises it past any outstanding cross-process claims and CASes the
       * result. */
-    def nextSeq: Long = math.max(0L, all.map(_.meta.seq).maxOption.getOrElse(0L)) + 1L
+    def nextSeq: Long = all.map(_.meta.seq).maxOption.getOrElse(0L) + 1L
 
     /** The manifest set visible at `asOf`: every manifest published at or
       * before `asOf` (a manifest file name), in publication order — each
@@ -1171,9 +1180,7 @@ object ManifestFileSink {
       }.collect()
     val flat = flattenCommits(messages).toArray[WriterCommitMessage]
     val inserted = flat.collect { case CommittedFile(_, n, _) => n }.sum
-    val dataLines = flat.collect {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+    val dataLines = entryLines(flat)
     val newFiles = flat.collect { case CommittedFile(f, n, _) if n > 0 => f }.toSeq
     val prune = keyRangePrune(flat, key, schema)
     // Matched-key retraction + atomic publish, serialized with other commits.
@@ -1217,30 +1224,24 @@ object ManifestFileSink {
     val perFile = messages.collect { case CommittedFile(_, n, st) if n > 0 =>
       if (st.isEmpty) return None
       decodeStats(st).get(idx) match {
-        case Some(s) if s.min.nonEmpty => (s.min, s.max)
+        case Some(s) if s.min.nonEmpty =>
+          (Bound.decode(s.min, dt).getOrElse(return None),
+            Bound.decode(s.max, dt).getOrElse(return None))
         case Some(s) if s.hasNull => null // all-null keys: no live match possible
         case _ => return None
       }
     }.filter(_ != null)
     if (perFile.isEmpty) return None
-    def parseV(s: String): Option[Any] = dt match {
-      case LongType    => Some(s.toLong)
-      case IntegerType => Some(s.toInt)
-      case DoubleType  => Some(s.toDouble)
-      case StringType  => Some(s)
-      case _           => None
+    val lo = perFile.map(_._1).reduce((a, b) => if (Bound.compare(a, b, dt) <= 0) a else b)
+    val hi = perFile.map(_._2).reduce((a, b) => if (Bound.compare(a, b, dt) >= 0) a else b)
+    // The Filter carries a String literal, not the decoded UTF8String.
+    def literal(v: Any): Any = v match {
+      case u: UTF8String => u.toString
+      case other => other
     }
-    def lt(a: String, b: String): Boolean = dt match {
-      case LongType | IntegerType => a.toLong < b.toLong
-      case DoubleType             => a.toDouble < b.toDouble
-      case _ => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-    }
-    val lo = perFile.map(_._1).reduce((a, b) => if (lt(a, b)) a else b)
-    val hi = perFile.map(_._2).reduce((a, b) => if (lt(a, b)) b else a)
-    for { l <- parseV(lo); h <- parseV(hi) } yield
-      org.apache.spark.sql.sources.And(
-        org.apache.spark.sql.sources.GreaterThanOrEqual(key, l),
-        org.apache.spark.sql.sources.LessThanOrEqual(key, h))
+    Some(org.apache.spark.sql.sources.And(
+      org.apache.spark.sql.sources.GreaterThanOrEqual(key, literal(lo)),
+      org.apache.spark.sql.sources.LessThanOrEqual(key, literal(hi))))
   }
 
   /** INSERT OVERWRITE WHERE (Delta's `replaceWhere`) — the atomic backfill
@@ -1276,9 +1277,7 @@ object ManifestFileSink {
       }.collect()
     val flat = flattenCommits(messages).toArray[WriterCommitMessage]
     val inserted = flat.collect { case CommittedFile(_, n, _) => n }.sum
-    val dataLines = flat.collect {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+    val dataLines = entryLines(flat)
     commitLock(path).synchronized {
       val snap = Snapshot(path)
       val schemaText = snap.ddl.getOrElse(asNullable(schema).toDDL)
@@ -1485,9 +1484,7 @@ object ManifestFileSink {
           Iterator(w.commit())
         }
       }.collect()
-    val dataLines = flattenCommits(messages).collect {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+    val dataLines = entryLines(messages)
     commitLock(path).synchronized {
       // The rewrite read the pinned snapshot; a commit that landed since
       // would be silently swallowed by the fold (an append's rows dropped,
@@ -1784,6 +1781,37 @@ object ManifestFileSink {
         if (ps.length > 3 && ps(3).nonEmpty) Some(decodeBloom(ps(3))) else None,
         rangeless)
     }.toMap
+
+  /** The one reader of zone-map bounds: a bound's text as a typed
+    * Catalyst value under its column's type, and the order such values
+    * compare in — Long/Int as integers, Double by `Double.compare`,
+    * String as UTF8String bytes (the order the writers accumulated the
+    * bounds in and Spark compares strings in; UTF-16 order disagrees on
+    * supplementary characters). Text that does not parse under the type,
+    * or a type without ordered bounds, decodes to None: no claim, exactly
+    * as if the bound were missing. */
+  private[sources] object Bound {
+    def orderable(dt: DataType): Boolean = dt match {
+      case LongType | IntegerType | DoubleType | StringType => true
+      case _ => false
+    }
+
+    def decode(text: String, dt: DataType): Option[Any] = dt match {
+      case LongType    => text.toLongOption
+      case IntegerType => text.toIntOption
+      case DoubleType  => text.toDoubleOption
+      case StringType  => Some(UTF8String.fromString(text))
+      case _           => None
+    }
+
+    /** Only for two values [[decode]]d under the same `dt`. */
+    def compare(a: Any, b: Any, dt: DataType): Int = dt match {
+      case LongType    => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+      case IntegerType => Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
+      case DoubleType  => java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
+      case _           => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
+    }
+  }
 
   // ---------------------------------------------------- bloom file index
 
@@ -2176,7 +2204,7 @@ object ManifestFileSink {
         // manifest's column order — each manifest carries its own DDL —
         // so resolving against the CURRENT stored schema misreads a
         // different column's min==max as the partition value after
-        // position-shifting evolution; deriveGroupedAggregate always
+        // position-shifting evolution; deriveAggregate always
         // resolved per entry, this now does too), and the field's type
         // must still match the current column's before the claim is
         // trusted (a type-evolved column's old-type literal is not a
@@ -2229,155 +2257,61 @@ object ManifestFileSink {
 
   // ------------------------------------- metadata-answered aggregates
 
-  /** Answer `SELECT count(*) / min(c) / max(c) FROM t` (no GROUP BY, no
-    * WHERE) from MANIFEST METADATA alone — the Iceberg/Delta
+  /** Answer `SELECT [g, …,] count(*) / min(c) / max(c) FROM t [GROUP BY
+    * g, …]` (no WHERE) from MANIFEST METADATA alone — the Iceberg/Delta
     * metadata-query move: row counts come from the entries, extremes from
     * the zone maps, and NO data file is opened (at 100 TB that is
-    * milliseconds vs a full scan). Strictly conservative: any deletion
-    * vector (a deleted row may have been the extreme and falsifies
-    * counts), any file without the needed stats claim, or any
-    * type/evolution ambiguity returns None and the query runs as a
-    * normal scan. A file that predates the column (or holds only NULLs
-    * in it) contributes nothing to MIN/MAX — exactly the aggregate's
-    * null semantics. Returns the output schema + the single result row
-    * in Catalyst form. */
+    * milliseconds vs a full scan). One fold serves both shapes: every
+    * live file lands in its group and adds its rows and bounds there.
+    * With no group columns there is one group, seeded before the fold, so
+    * exactly one row comes out even when no file is visible (count 0,
+    * NULL extremes).
+    *
+    * GROUP BY is eligible over IDENTITY partition columns only, and every
+    * live file must PROVE a single value for each of them (the same
+    * min==max zone-map claim SPJ trusts): `SELECT cell, count(*) FROM t
+    * GROUP BY cell` then opens zero data files (the Iceberg
+    * partition-stats answer). One unprovable file refuses the whole
+    * derivation — the ordinary scan then answers, never a wrong group.
+    *
+    * Strictly conservative: any file without the needed stats claim, an
+    * unreadable bound ([[Bound.decode]]: no claim), or any type/evolution
+    * ambiguity returns None and the query runs as a normal scan. A file
+    * that predates a column (or holds only NULLs in it) contributes
+    * nothing to its MIN/MAX — exactly the aggregate's null semantics.
+    * Output schema order is the V2 contract: group columns first, then
+    * `agg_i` columns; returns it with the result rows in Catalyst form. */
   private[sources] def deriveAggregate(
       snap: Snapshot,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       schema: StructType): Option[(StructType, Seq[Seq[Any]])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    // Deletion vectors: a bare COUNT(*) stays exactly derivable (live =
-    // rows − |dv| per file; positions are distinct by construction), so
-    // row-level deletes don't cost the metadata-answered count. Every
-    // OTHER derivation refuses: a MIN/MAX claim may name a deleted row,
-    // and the grouped path would emit a zero-count row for a fully
-    // deleted file's group where the real aggregate emits nothing.
-    val dvs = snap.dvs
-    if (dvs.nonEmpty && (agg.groupByExpressions.nonEmpty ||
-        !agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])))
-      return None
-    // Shared latest-listing-per-file policy (advice-r13).
-    val entries = snap.latestEntries
-    val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
-    def schemaOf(ddl: String): StructType =
-      ddlCache.getOrElseUpdate(ddl, asNullable(StructType.fromDDL(ddl)))
-
     def colName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case r: org.apache.spark.sql.connector.expressions.NamedReference
             if r.fieldNames.length == 1 => Some(r.fieldNames()(0))
         case _ => None
       }
-    if (agg.groupByExpressions.nonEmpty)
-      return deriveGroupedAggregate(snap.path, agg, schema, entries, schemaOf, colName)
-    def parse(v: String, dt: DataType): Any = dt match {
-      case LongType    => v.toLong
-      case IntegerType => v.toInt
-      case DoubleType  => v.toDouble
-      case StringType  => UTF8String.fromString(v)
-      case other => throw new IllegalArgumentException(s"unexpected $other")
-    }
-    def cmp(a: Any, b: Any, dt: DataType): Int = dt match {
-      case LongType    => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-      case IntegerType => Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-      case DoubleType  => java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-      case StringType  => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-      case _ => throw new IllegalStateException("unreachable")
-    }
-    // One extreme over every file's recorded bound; None = cannot derive.
-    def extreme(name: String, wantMin: Boolean): Option[(DataType, Any)] = {
-      val i0 = schema.fieldNames.indexOf(name)
-      if (i0 < 0) return None
-      val dt = schema.fields(i0).dataType
-      if (!Seq(LongType, IntegerType, DoubleType, StringType).contains(dt)) return None
-      var acc: Any = null
-      entries.foreach { case (_, rows, e, ddl) =>
-        if (rows > 0) {
-          val fs = schemaOf(ddl)
-          val fi = fs.fieldNames.indexOf(name)
-          if (fi >= 0) {
-            if (fs.fields(fi).dataType != dt) return None
-            e.stats.flatMap(_.get(fi)) match {
-              case None => return None // no claim recorded: must scan
-              case Some(cs) if cs.rangeless => return None
-              case Some(cs) if cs.min.isEmpty => () // all-NULL file: contributes nothing
-              case Some(cs) =>
-                val v = parse(if (wantMin) cs.min else cs.max, dt)
-                if (acc == null || (if (wantMin) cmp(v, acc, dt) < 0 else cmp(v, acc, dt) > 0))
-                  acc = v
-            }
-          } // column absent in this file: NULL backfill, contributes nothing
-        }
-      }
-      Some((dt, acc))
-    }
-    val total = entries.map { case (f, rows, _, _) =>
-      rows - dvs.getOrElse(f, Array.empty[Long]).length
-    }.sum
-    val out = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => (LongType: DataType, total: Any, false)
-      case m: Min =>
-        val (dt, v) = colName(m.column).flatMap(extreme(_, wantMin = true))
-          .getOrElse(return None)
-        (dt, v, true)
-      case m: Max =>
-        val (dt, v) = colName(m.column).flatMap(extreme(_, wantMin = false))
-          .getOrElse(return None)
-        (dt, v, true)
-      case _ => return None
-    }
-    val outSchema = StructType(out.zipWithIndex.map { case ((dt, _, nullable), i) =>
-      org.apache.spark.sql.types.StructField(s"agg_$i", dt, nullable) })
-    Some((outSchema, Seq(out.map(_._2))))
-  }
-
-  /** GROUP BY pushdown over IDENTITY partition columns, answered from
-    * manifest metadata — the scan returns one row per partition value
-    * with counts/extremes read off the entries, and `SELECT cell,
-    * count(*) FROM t GROUP BY cell` at 100 TB opens ZERO data files
-    * (the Iceberg partition-stats answer). Eligibility is strict:
-    * every group-by expression names an identity partition column,
-    * every live file PROVES a single value for each of them (the same
-    * min==max zone-map claim SPJ trusts), aggregates are count(*) /
-    * min / max with per-file claims, no deletion vectors, no residual
-    * filters (the caller checks). One unprovable file refuses the whole
-    * derivation — the ordinary scan then answers, never a wrong group.
-    * Output schema order is the V2 contract: group columns first, then
-    * aggregate columns. */
-  private def deriveGroupedAggregate(
-      path: String,
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      schema: StructType,
-      entries: Seq[(String, Long, Entry, String)],
-      schemaOf: String => StructType,
-      colName: org.apache.spark.sql.connector.expressions.Expression => Option[String])
-      : Option[(StructType, Seq[Seq[Any]])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    val idCols = partitionFields(path).collect { case IdentityPart(c) => c }
+    def typeOf(c: String): Option[DataType] = schema.find(_.name == c).map(_.dataType)
     val grpCols = agg.groupByExpressions.toSeq.map(e => colName(e).getOrElse(return None))
-    if (!grpCols.forall(idCols.contains)) return None
-    val grpTypes = grpCols.map { c =>
-      val i = schema.fieldNames.indexOf(c)
-      if (i < 0) return None
-      schema.fields(i).dataType match {
-        case dt @ (LongType | IntegerType | StringType) => dt
-        case _ => return None
-      }
+    // Deletion vectors: a bare COUNT(*) stays exactly derivable (live =
+    // rows − |dv| per file; positions are distinct by construction), so
+    // row-level deletes don't cost the metadata-answered count. Every
+    // OTHER derivation refuses: a MIN/MAX claim may name a deleted row,
+    // and a grouped count would emit a zero-count row for a fully
+    // deleted file's group where the real aggregate emits nothing.
+    val dvs = snap.dvs
+    if (dvs.nonEmpty && (grpCols.nonEmpty ||
+        !agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])))
+      return None
+    if (grpCols.nonEmpty) {
+      val idCols = partitionFields(snap.path).collect { case IdentityPart(c) => c }
+      if (!grpCols.forall(idCols.contains)) return None
     }
-    def parse(v: String, dt: DataType): Any = dt match {
-      case LongType    => v.toLong
-      case IntegerType => v.toInt
-      case DoubleType  => v.toDouble
-      case StringType  => UTF8String.fromString(v)
-      case other => throw new IllegalArgumentException(s"unexpected $other")
-    }
-    def cmp(a: Any, b: Any, dt: DataType): Int = dt match {
-      case LongType    => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-      case IntegerType => Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-      case DoubleType  => java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-      case StringType  => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-      case _ => throw new IllegalStateException("unreachable")
-    }
+    val grpTypes = grpCols.map(c => typeOf(c) match {
+      case Some(dt @ (LongType | IntegerType | StringType)) => dt
+      case _ => return None
+    })
     // Aggregate spec: None = count(*), Some((col, wantMin)) = min/max.
     val aggSpecs: Seq[Option[(String, Boolean)]] = agg.aggregateExpressions.toSeq.map {
       case _: CountStar => None
@@ -2387,59 +2321,54 @@ object ManifestFileSink {
     }
     val aggTypes: Seq[DataType] = aggSpecs.map {
       case None => LongType
-      case Some((c, _)) =>
-        val i = schema.fieldNames.indexOf(c)
-        if (i < 0) return None
-        schema.fields(i).dataType match {
-          case dt @ (LongType | IntegerType | DoubleType | StringType) => dt
-          case _ => return None
-        }
+      case Some((c, _)) => typeOf(c).filter(Bound.orderable).getOrElse(return None)
     }
-    // Fold every live file into its (proven) group.
-    val groups = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[Any], (Long, Array[Any])] // key -> (rows, extremes)
-    entries.foreach { case (_, rows, e, ddl) =>
+    val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
+    def schemaOf(ddl: String): StructType =
+      ddlCache.getOrElseUpdate(ddl, asNullable(StructType.fromDDL(ddl)))
+    final class Group(var rows: Long) { val extremes = new Array[Any](aggSpecs.length) }
+    val groups = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Group]
+    if (grpCols.isEmpty) groups(Nil) = new Group(0L)
+    // Shared latest-listing-per-file policy (advice-r13). A count-only
+    // fold never reads `.stats`, so it decodes no zone map.
+    snap.latestEntries.foreach { case (f, rows, e, ddl) =>
       if (rows > 0) {
-        val fs = schemaOf(ddl)
-        val stats = e.stats.getOrElse(return None)
-        val key = grpCols.zip(grpTypes).map { case (c, dt) =>
+        lazy val fs = schemaOf(ddl)
+        // The file's own index of `c` (evolution: columns by name); -1 =
+        // absent, and None when it holds `c` under another type.
+        def fileIndex(c: String, dt: DataType): Option[Int] = {
           val fi = fs.fieldNames.indexOf(c)
-          if (fi < 0) return None
-          if (fs.fields(fi).dataType != dt) return None
-          stats.get(fi) match {
+          if (fi >= 0 && fs.fields(fi).dataType != dt) None else Some(fi)
+        }
+        val key = grpCols.zip(grpTypes).map { case (c, dt) =>
+          val fi = fileIndex(c, dt).filter(_ >= 0).getOrElse(return None)
+          e.stats.flatMap(_.get(fi)) match {
             case Some(cs) if !cs.hasNull && !cs.rangeless &&
-                cs.min.nonEmpty && cs.min == cs.max => parse(cs.min, dt)
+                cs.min.nonEmpty && cs.min == cs.max =>
+              Bound.decode(cs.min, dt).getOrElse(return None)
             case _ => return None // unprovable group: the scan answers
           }
         }
-        val exts: Seq[Option[Any]] = aggSpecs.zip(aggTypes).map {
-          case (None, _) => Some(null)
-          case (Some((c, wantMin)), dt) =>
-            val fi = fs.fieldNames.indexOf(c)
-            if (fi < 0) Some(null) // column absent: NULL backfill, no contribution
-            else if (fs.fields(fi).dataType != dt) return None
-            else stats.get(fi) match {
-              case None => return None
+        val g = groups.getOrElseUpdate(key, new Group(0L))
+        g.rows += rows - dvs.get(f).fold(0)(_.length)
+        aggSpecs.indices.foreach { i =>
+          aggSpecs(i).foreach { case (c, wantMin) =>
+            val dt = aggTypes(i)
+            val fi = fileIndex(c, dt).getOrElse(return None)
+            // fi < 0: column absent in this file, NULL backfill, no contribution
+            if (fi >= 0) e.stats.flatMap(_.get(fi)) match {
+              case None => return None // no claim recorded: must scan
               case Some(cs) if cs.rangeless => return None
-              case Some(cs) if cs.min.isEmpty => Some(null) // all-NULL file
-              case Some(cs) => Some(parse(if (wantMin) cs.min else cs.max, dt))
+              case Some(cs) if cs.min.isEmpty => () // all-NULL file: contributes nothing
+              case Some(cs) =>
+                val v = Bound.decode(if (wantMin) cs.min else cs.max, dt).getOrElse(return None)
+                val acc = g.extremes(i)
+                if (acc == null || (if (wantMin) Bound.compare(v, acc, dt) < 0
+                                    else Bound.compare(v, acc, dt) > 0))
+                  g.extremes(i) = v
             }
-        }
-        val (accRows, accExt) = groups.getOrElseUpdate(key,
-          (0L, Array.fill[Any](aggSpecs.length)(null)))
-        var i = 0
-        while (i < aggSpecs.length) {
-          (aggSpecs(i), exts(i)) match {
-            case (Some((_, wantMin)), Some(v)) if v != null =>
-              if (accExt(i) == null ||
-                  (if (wantMin) cmp(v, accExt(i), aggTypes(i)) < 0
-                   else cmp(v, accExt(i), aggTypes(i)) > 0))
-                accExt(i) = v
-            case _ =>
           }
-          i += 1
         }
-        groups.update(key, (accRows + rows, accExt))
       }
     }
     val outSchema = StructType(
@@ -2448,13 +2377,10 @@ object ManifestFileSink {
       } ++ aggSpecs.zip(aggTypes).zipWithIndex.map { case ((spec, dt), i) =>
         org.apache.spark.sql.types.StructField(s"agg_$i", dt, spec.isDefined)
       })
-    val rows = groups.toSeq.map { case (key, (n, exts)) =>
-      key ++ aggSpecs.zipWithIndex.map {
-        case (None, _)    => n: Any
-        case (Some(_), i) => exts(i)
-      }
+    val out = groups.toSeq.map { case (key, g) =>
+      key ++ aggSpecs.indices.map(i => if (aggSpecs(i).isEmpty) g.rows else g.extremes(i))
     }
-    Some((outSchema, rows))
+    Some((outSchema, out))
   }
 
   /** A partitioned write's task commit carries one [[CommittedFile]] per
@@ -2465,6 +2391,19 @@ object ManifestFileSink {
     messages.flatMap {
       case CommittedFiles(fs) => fs
       case m => Seq(m)
+    }
+
+  /** The manifest entry lines of a job's task commits. */
+  private def entryLines(messages: Array[WriterCommitMessage]): Seq[String] =
+    flattenCommits(messages).collect { case c: CommittedFile => c.line }.toSeq
+
+  /** Delete the data files a job's task commits name — the abort of a
+    * write whose manifest will never publish (the files stay invisible
+    * either way; this only reclaims their space). */
+  private[sources] def deleteCommitted(path: String, messages: Array[WriterCommitMessage]): Unit =
+    flattenCommits(messages).foreach {
+      case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
+      case _ =>
     }
 
   /** SplitMix64 finalizer — the avalanche both hash paths share. */
@@ -2584,38 +2523,39 @@ object ManifestFileSink {
     // None ⇒ incomparable (empty bounds / unsupported type) — caller keeps.
     def relate(v: Any, s: ColStats, dt: DataType): Option[(Int, Int)] =
       if (s.min.isEmpty) None
-      else try dt match {
-        case LongType | IntegerType =>
-          // Exact decimal-space compare against the bounds — must agree
-          // with evalFilter's compareLongLiteral, or a fractional literal
-          // (`n < 2.5` over a file spanning [2,7]) would wrongly prune.
-          if (!v.isInstanceOf[Number]) return None
-          for {
-            lo <- compareLongLiteral(s.min.toLong, v).map(-_)
-            hi <- compareLongLiteral(s.max.toLong, v).map(-_)
-          } yield (lo, hi)
-        case DoubleType =>
-          val x = v match { case n: Number => n.doubleValue(); case _ => return None }
-          if (x.isNaN) return None
-          // Signed zero normalizes (Spark equality: -0.0 = 0.0) — a file
-          // whose only value is -0.0 must admit an = 0.0 probe.
-          def nz(d: Double): Double = if (d == 0.0) 0.0 else d
-          Some((java.lang.Double.compare(nz(x), nz(s.min.toDouble)),
-                java.lang.Double.compare(nz(x), nz(s.max.toDouble))))
-        case StringType =>
-          // Bounds were accumulated in UTF8String BINARY order — the same
-          // order Spark's own string comparisons use, so pruning decisions
-          // agree with row-level filter semantics (UTF-16 compareTo would
-          // disagree on supplementary characters).
-          val x = v match {
-            case str: String => UTF8String.fromString(str)
-            case u: UTF8String => u
-            case _ => return None
-          }
-          Some((x.compareTo(UTF8String.fromString(s.min)),
-                x.compareTo(UTF8String.fromString(s.max))))
+      else (Bound.decode(s.min, dt), Bound.decode(s.max, dt)) match {
+        case (Some(min), Some(max)) => dt match {
+          case LongType | IntegerType =>
+            // Exact decimal-space compare against the bounds — must agree
+            // with evalFilter's compareLongLiteral, or a fractional literal
+            // (`n < 2.5` over a file spanning [2,7]) would wrongly prune.
+            // An infinite literal has no decimal form: no claim.
+            if (!v.isInstanceOf[Number]) return None
+            try for {
+              lo <- compareLongLiteral(min.asInstanceOf[Number].longValue, v).map(-_)
+              hi <- compareLongLiteral(max.asInstanceOf[Number].longValue, v).map(-_)
+            } yield (lo, hi)
+            catch { case _: NumberFormatException => None }
+          case DoubleType =>
+            val x = v match { case n: Number => n.doubleValue(); case _ => return None }
+            if (x.isNaN) return None
+            // Signed zero normalizes (Spark equality: -0.0 = 0.0) — a file
+            // whose only value is -0.0 must admit an = 0.0 probe.
+            def nz(d: Double): Double = if (d == 0.0) 0.0 else d
+            Some((java.lang.Double.compare(nz(x), nz(min.asInstanceOf[Double])),
+                  java.lang.Double.compare(nz(x), nz(max.asInstanceOf[Double]))))
+          case _ =>
+            // The literal meets the bounds in their own (byte) order, so
+            // pruning agrees with row-level filter semantics.
+            val x = v match {
+              case str: String => UTF8String.fromString(str)
+              case u: UTF8String => u
+              case _ => return None
+            }
+            Some((Bound.compare(x, min, dt), Bound.compare(x, max, dt)))
+        }
         case _ => None
-      } catch { case _: NumberFormatException => None }
+      }
     filter match {
       case EqualTo(c, v) => colStats(c) match {
         case Some((s, _)) if s.min.isEmpty && !s.rangeless => false // no non-null values at all
@@ -2894,9 +2834,7 @@ object ManifestFileSink {
     val log = Snapshot.headers(path)
     if (log.folded.contains(name)) return false
     val lines = renderHeader(ManifestMeta(claimSeq(log), Nil, staged = staged)) +:
-      asNullable(schema).toDDL +: flattenCommits(messages).collect {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+      asNullable(schema).toDDL +: entryLines(messages)
     val tmp = Paths.get(path, s".$name.tmp")
     Files.deleteIfExists(tmp)
     Files.write(tmp, lines.asJava, StandardCharsets.UTF_8,
@@ -3043,9 +2981,7 @@ object ManifestFileSink {
       path: String,
       schema: StructType,
       messages: Array[WriterCommitMessage]): Unit = {
-    val dataLines = flattenCommits(messages).collect {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+    val dataLines = entryLines(messages)
     commitLock(path).synchronized {
       val snap = Snapshot(path)
       val dvLines = snap.schema.fold(Seq.empty[(String, Array[Long])])(current =>
@@ -3067,9 +3003,7 @@ object ManifestFileSink {
       schema: StructType,
       filter: org.apache.spark.sql.sources.Filter,
       messages: Array[WriterCommitMessage]): Unit = {
-    val dataLines = flattenCommits(messages).collect {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+    val dataLines = entryLines(messages)
     commitLock(path).synchronized {
       val snap = Snapshot(path)
       val schemaText = snap.ddl.getOrElse(asNullable(schema).toDDL)
@@ -3097,9 +3031,7 @@ object ManifestFileSink {
         s"table $path advanced past snapshot ${pin.getOrElse("<empty>")} during a " +
           "row-level operation: publish refused (task files stay invisible) — re-run")
     val commits = messages.collect { case d: DeltaTaskCommit => d }
-    val dataLines = commits.flatMap(_.inserted).map {
-      case CommittedFile(f, n, st) => if (st.isEmpty) s"$f\t$n" else s"$f\t$n\t$st"
-    }.toSeq
+    val dataLines = commits.flatMap(_.inserted).map(_.line).toSeq
     val dvs = unionPositions(commits.flatMap(_.retractions)).toSeq.sortBy(_._1)
     if (dataLines.isEmpty && dvs.isEmpty) return
     publishCommit(log, log.ddl.getOrElse(asNullable(schema).toDDL), dataLines, dvs)
@@ -3255,54 +3187,10 @@ private[sources] class ManifestTable(
         overwriteFilter = Some(filters.foldLeft(AlwaysTrue(): Filter)(And(_, _)))
         this
       }
-      // A partitioned table ASKS Spark to cluster incoming rows by the
-      // partition column (advisory, not strict): the pre-write shuffle
-      // sends each partition value to one task, so the demux writer
-      // emits one file per value instead of |tasks|×|values| shards.
-      // Unpartitioned tables report an unspecified distribution — no
-      // behavioral change.
-      override def build(): Write = new Write
-        with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        // CATALOG-door writes (acceptAnySchema = false) cluster by the
-        // DECLARED transforms — a bucket field shuffles by its bucket
-        // id (the catalog's FunctionCatalog resolves the transform), so
-        // one task owns one bucket and writes ONE file. PATH-door
-        // writes have no FunctionCatalog to resolve a bucket transform,
-        // so they cluster by identity(col) — a refinement of
-        // bucket-clustering (equal keys still co-locate); the demux
-        // writer groups each task's values into its buckets.
-        private val pfields = ManifestFileSink.partitionFields(path)
-          .filter(f => info.schema().fieldNames.contains(f.col))
-        override def requiredDistribution()
-            : org.apache.spark.sql.connector.distributions.Distribution =
-          if (pfields.nonEmpty)
-            org.apache.spark.sql.connector.distributions.Distributions
-              .clustered(pfields.map {
-                case ManifestFileSink.BucketPart(n, c) if !acceptAnySchema =>
-                  org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)
-                    : org.apache.spark.sql.connector.expressions.Expression
-                case f =>
-                  org.apache.spark.sql.connector.expressions.Expressions.identity(f.col)
-                    : org.apache.spark.sql.connector.expressions.Expression
-              }.toArray)
-          else
-            org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-        override def distributionStrictlyRequired(): Boolean = false
-        // Task-local sort on the partition SOURCE columns (then any
-        // declared sort columns): each demuxed file then receives its
-        // rows in non-decreasing key order, the writer's row-by-row
-        // verification attests it, and the scan can report a
-        // per-partition ordering — co-partitioned sort-merge joins drop
-        // BOTH their exchanges and their sorts, and per-key windows over
-        // a declared sort column drop theirs too. One in-memory sort per
-        // write task buys every future join's/window's sort back.
-        override def requiredOrdering()
-            : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          (pfields.map(_.col) ++ ManifestFileSink.sortColumns(path)
-            .filter(info.schema().fieldNames.contains)).distinct.map(c =>
-            org.apache.spark.sql.connector.expressions.Expressions.sort(
-              org.apache.spark.sql.connector.expressions.Expressions.identity(c),
-              org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
+      // Only the CATALOG door (acceptAnySchema = false) has the
+      // FunctionCatalog that resolves a bucket transform.
+      override def build(): Write = new ManifestWrite(path, info.schema(),
+          ManifestFileSink.partitionFields(path), bucketByTransform = !acceptAnySchema) {
         override def toBatch: BatchWrite = overwriteFilter match {
           case Some(f) =>
             if (wapId.isDefined) throw new UnsupportedOperationException(
@@ -3372,10 +3260,11 @@ private[sources] class ManifestTable(
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = Some(requiredSchema)
       // Metadata-answered aggregates (SupportsPushDownAggregates):
-      // `SELECT count(*) / min(c) / max(c) FROM t` with no WHERE and no
-      // GROUP BY resolves entirely from the manifest (counts from
-      // entries, extremes from zone maps) — COMPLETE pushdown, one row,
-      // zero file IO, no job: the row is planned on the driver
+      // `SELECT count(*) / min(c) / max(c) FROM t` with no WHERE, and
+      // GROUP BY only over identity partition columns, resolves entirely
+      // from the manifest (counts from entries, extremes from zone maps;
+      // [[ManifestFileSink.deriveAggregate]]) — COMPLETE pushdown, zero
+      // file IO, no job: the rows exist at planning time
       // ([[ManifestAggScan]] is a LocalScan; [[MetadataAnswerStrategy]]
       // evaluates the projection and filters above it). Catalyst only
       // attempts this when every filter was fully consumed; this scan
@@ -3467,13 +3356,6 @@ private[sources] class ManifestTable(
       }
     }
 }
-
-private case class CommittedFile(
-    file: String, rows: Long, stats: String = "") extends WriterCommitMessage
-
-/** Task commit of a PARTITIONED batch write: one entry per partition value
-  * the task saw ([[ManifestPartitionedDataWriter]]). */
-private case class CommittedFiles(files: Seq[CommittedFile]) extends WriterCommitMessage
 
 /** DSv2 scan observability (CustomMetric): these surface in the Spark UI's
   * SQL tab on every BatchScan node over a manifest table, which is how an
@@ -3661,43 +3543,10 @@ private[sources] class StagedManifestTable(
           "a staged REPLACE TABLE write can only overwrite everything")
         this
       }
-      // Partitioned CTAS/RTAS asks for the same clustered distribution as
-      // a partitioned INSERT (advisory) — the demux writer remains the
-      // correctness backstop either way.
-      override def build(): Write = new Write
-        with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        override def requiredDistribution()
-            : org.apache.spark.sql.connector.distributions.Distribution = {
-          // Staged (CTAS/RTAS) writes are always catalog-door: bucket
-          // fields cluster by their transform (one task = one bucket).
-          val pfields = partitionCols.map(ManifestFileSink.parsePartField)
-            .filter(f => stagedSchema.fieldNames.contains(f.col))
-          if (pfields.nonEmpty)
-            org.apache.spark.sql.connector.distributions.Distributions
-              .clustered(pfields.map {
-                case ManifestFileSink.BucketPart(n, c) =>
-                  org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)
-                    : org.apache.spark.sql.connector.expressions.Expression
-                case f =>
-                  org.apache.spark.sql.connector.expressions.Expressions.identity(f.col)
-                    : org.apache.spark.sql.connector.expressions.Expression
-              }.toArray)
-          else
-            org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-        }
-        override def distributionStrictlyRequired(): Boolean = false
-        // Same task-local sort request as the path-door write: CTAS/RTAS
-        // files land sorted and attested from birth.
-        override def requiredOrdering()
-            : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-          val pfields = partitionCols.map(ManifestFileSink.parsePartField)
-            .filter(f => stagedSchema.fieldNames.contains(f.col))
-          (pfields.map(_.col) ++ ManifestFileSink.sortColumns(path)
-            .filter(stagedSchema.fieldNames.contains)).distinct.map(c =>
-            org.apache.spark.sql.connector.expressions.Expressions.sort(
-              org.apache.spark.sql.connector.expressions.Expressions.identity(c),
-              org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
-        }
+      // CTAS/RTAS files land clustered, sorted and attested from birth;
+      // staged writes are always catalog-door.
+      override def build(): Write = new ManifestWrite(path, stagedSchema,
+          partitionCols.map(ManifestFileSink.parsePartField), bucketByTransform = true) {
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
             new ManifestWriterFactory(path, stagedSchema, partitionCols,
@@ -3705,10 +3554,7 @@ private[sources] class StagedManifestTable(
           override def commit(messages: Array[WriterCommitMessage]): Unit =
             staged.set(messages) // deferred to commitStagedChanges
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            ManifestFileSink.flattenCommits(messages).foreach {
-              case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
-              case _ =>
-            }
+            ManifestFileSink.deleteCommitted(path, messages)
         }
       }
     }
@@ -3741,10 +3587,7 @@ private[sources] class StagedManifestTable(
   }
 
   override def abortStagedChanges(): Unit = {
-    ManifestFileSink.flattenCommits(staged.get).foreach {
-      case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
-      case _ =>
-    }
+    ManifestFileSink.deleteCommitted(path, staged.get)
     // A CTAS-created dir with nothing published disappears entirely.
     if (createdDir && ManifestFileSink.manifests(path).isEmpty) {
       val p = Paths.get(path)
@@ -3756,6 +3599,51 @@ private[sources] class StagedManifestTable(
       }
     }
   }
+}
+
+/** The layout every manifest write asks Spark for. A partitioned table
+  * asks to cluster incoming rows by its partition fields (advisory, not
+  * strict): the pre-write shuffle sends each partition value to one task,
+  * so the demux writer emits one file per value instead of |tasks|×|values|
+  * shards; the demux writer stays the correctness backstop either way. An
+  * unpartitioned table reports an unspecified distribution. With
+  * `bucketByTransform` (the catalog door, whose FunctionCatalog resolves
+  * the transform) a bucket field clusters by its bucket id, so one task
+  * owns one bucket and writes ONE file; otherwise (the path door) by
+  * identity(col) — a refinement of bucket-clustering (equal keys still
+  * co-locate), and the demux writer groups each task's values into its
+  * buckets.
+  *
+  * Each task then sorts on the partition SOURCE columns (then any declared
+  * sort columns): each demuxed file receives its rows in non-decreasing
+  * key order, the writer's row-by-row verification attests it, and the
+  * scan can report a per-partition ordering — co-partitioned sort-merge
+  * joins drop BOTH their exchanges and their sorts, and per-key windows
+  * over a declared sort column drop theirs too. One in-memory sort per
+  * write task buys every future join's/window's sort back. */
+private[sources] abstract class ManifestWrite(
+    path: String, schema: StructType, fields: Seq[ManifestFileSink.PartField],
+    bucketByTransform: Boolean)
+  extends Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder}
+
+  private val pfields = fields.filter(f => schema.fieldNames.contains(f.col))
+
+  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
+    if (pfields.nonEmpty)
+      org.apache.spark.sql.connector.distributions.Distributions.clustered(pfields.map {
+        case ManifestFileSink.BucketPart(n, c) if bucketByTransform =>
+          Expressions.bucket(n, c): Expression
+        case f => Expressions.identity(f.col): Expression
+      }.toArray)
+    else org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+
+  override def distributionStrictlyRequired(): Boolean = false
+
+  override def requiredOrdering(): Array[SortOrder] =
+    (pfields.map(_.col) ++ ManifestFileSink.sortColumns(path)
+      .filter(schema.fieldNames.contains)).distinct.map(c =>
+      Expressions.sort(Expressions.identity(c), SortDirection.ASCENDING)).toArray
 }
 
 private class ManifestBatchWrite(path: String, schema: StructType,
@@ -3779,10 +3667,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
       staged = wapId)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    ManifestFileSink.flattenCommits(messages).foreach {
-      case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
-      case _ =>
-    }
+    ManifestFileSink.deleteCommitted(path, messages)
 }
 
 /** INSERT OVERWRITE's BatchWrite: task mechanics identical to append
@@ -3804,10 +3689,7 @@ private class ManifestOverwriteBatchWrite(
     ManifestFileSink.commitOverwrite(path, schema, filter, messages)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    ManifestFileSink.flattenCommits(messages).foreach {
-      case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
-      case _ =>
-    }
+    ManifestFileSink.deleteCommitted(path, messages)
 }
 
 /** Delta-based row-level operation (SQL UPDATE / MERGE INTO / DELETE):
@@ -4325,17 +4207,11 @@ private class ManifestStreamingWrite(path: String, schema: StructType,
       f"manifest-wap-$id-e$epochId%012d")
     val published = ManifestFileSink.publish(
       path, name, schema, messages, staged = wapId)
-    if (!published) ManifestFileSink.flattenCommits(messages).foreach {
-      case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
-      case _ =>
-    }
+    if (!published) ManifestFileSink.deleteCommitted(path, messages)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    ManifestFileSink.flattenCommits(messages).foreach {
-      case CommittedFile(f, _, _) => Files.deleteIfExists(Paths.get(path, "data", f))
-      case _ =>
-    }
+    ManifestFileSink.deleteCommitted(path, messages)
 }
 
 /** Top-level (not an inner class of the non-serializable write) — it is
@@ -4566,10 +4442,8 @@ private class ManifestScan(
         else st.flatMap(_.get(i)).flatMap { cs =>
           if (cs.hasNull || cs.rangeless || cs.min.isEmpty || cs.min != cs.max) None
           else fileSchema.fields(i).dataType match {
-            case LongType    => cs.min.toLongOption
-            case IntegerType => cs.min.toIntOption.map(v => v: Any)
-            case StringType  => Some(UTF8String.fromString(cs.min))
-            case _           => None
+            case DoubleType => None // never a partition layout
+            case dt         => ManifestFileSink.Bound.decode(cs.min, dt)
           }
         }
       v.map(c -> _)
@@ -4626,49 +4500,37 @@ private class ManifestScan(
     val i0 = schema.fieldNames.indexOf(colName)
     if (i0 < 0) return None
     val dt = schema.fields(i0).dataType
-    if (!Seq[DataType](LongType, IntegerType, DoubleType, StringType).contains(dt))
-      return None
-    def parse(v: String): Any = dt match {
-      case LongType    => v.toLong
-      case IntegerType => v.toInt
-      case DoubleType  => v.toDouble
-      case StringType  => UTF8String.fromString(v)
-      case _           => throw new IllegalStateException("unreachable")
-    }
-    def rawCmp(a: Any, b: Any): Int = dt match {
-      case LongType    => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-      case IntegerType => Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-      case DoubleType  => java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-      case StringType  => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-      case _           => throw new IllegalStateException("unreachable")
-    }
+    if (!ManifestFileSink.Bound.orderable(dt)) return None
     // Mirror DESC into the ASC algorithm: swap bounds, flip the compare.
-    def cmp(a: Any, b: Any): Int = if (desc) rawCmp(b, a) else rawCmp(a, b)
+    def order(a: Any, b: Any): Int =
+      if (desc) ManifestFileSink.Bound.compare(b, a, dt)
+      else ManifestFileSink.Bound.compare(a, b, dt)
     val bounds = files.map { case (_, _, live, e, fs) =>
       val fi = fs.fieldNames.indexOf(colName)
       if (fi < 0) return None // NULL-backfilled column: rows are unranked
       if (fs.fields(fi).dataType != dt) return None
       e.stats.flatMap(_.get(fi)) match {
         case Some(cs) if !cs.rangeless && !cs.hasNull && cs.min.nonEmpty =>
-          val (lo, hi) = (parse(cs.min), parse(cs.max))
+          val lo = ManifestFileSink.Bound.decode(cs.min, dt).getOrElse(return None)
+          val hi = ManifestFileSink.Bound.decode(cs.max, dt).getOrElse(return None)
           if (desc) (hi, lo, live) else (lo, hi, live)
         case _ => return None
       }
     }
-    val byHi = bounds.sortWith((x, y) => cmp(x._2, y._2) < 0)
+    val byHi = bounds.sortWith((x, y) => order(x._2, y._2) < 0)
     val prefixLive = byHi.scanLeft(0L)(_ + _._3)
     def below(lo: Any): Long = {
       // live rows in files whose hi ≤ lo (binary search over byHi)
       var l = 0; var r = byHi.length
       while (l < r) {
         val m = (l + r) / 2
-        if (cmp(byHi(m)._2, lo) <= 0) l = m + 1 else r = m
+        if (order(byHi(m)._2, lo) <= 0) l = m + 1 else r = m
       }
       prefixLive(l)
     }
     Some(files.zip(bounds).collect {
       case (f, (lo, hi, live))
-          if below(lo) - (if (cmp(hi, lo) <= 0) live else 0L) < n => f
+          if below(lo) - (if (order(hi, lo) <= 0) live else 0L) < n => f
     })
   }
 
@@ -5159,8 +5021,7 @@ private class ManifestMicroBatchStream(
     case other        => other.json().toLong
   }
 
-  /** Nothing consumed: orders before every commit, including v1
-    * manifests' synthesized negative seqs. */
+  /** Nothing consumed: orders before every commit. */
   override def initialOffset(): streaming.Offset = SeqOffset(Long.MinValue)
 
   private def pending(log: ManifestFileSink.Snapshot,

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Metadata-answered aggregates (SupportsPushDownAggregates):
@@ -18,6 +19,25 @@ class AggPushdownSpec extends SparkTestBase {
 
   private def load(path: String) =
     spark.read.format(classOf[ManifestFileSink].getName).option("path", path).load()
+
+  private def append(path: String, df: DataFrame): Unit =
+    df.coalesce(1).write.format(classOf[ManifestFileSink].getName)
+      .option("path", path).mode("append").save()
+
+  /** `agg` answered from metadata (asserted from the plan) and through the
+    * real scan: the table's rows collected, then aggregated by Spark over
+    * a local relation. Rows are compared in a stable order. */
+  private def assertSameAnswer(path: String)(agg: DataFrame => DataFrame): Seq[Row] = {
+    val pushed = agg(load(path))
+    assert(pushed.queryExecution.executedPlan.toString.contains("ManifestAggScan"),
+      "expected a metadata answer:\n" + pushed.queryExecution.executedPlan)
+    val got = pushed.collect().toSeq.sortBy(_.toString)
+    val rows = load(path).collect().toSeq
+    val local = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), load(path).schema)
+    assert(got === agg(local).collect().toSeq.sortBy(_.toString),
+      "metadata answer must equal the scanned aggregate")
+    got
+  }
 
   test("count/min/max answer from metadata even with data files gone") {
     val path = Files.createTempDirectory("graft-aggpd").toString
@@ -140,5 +160,61 @@ class AggPushdownSpec extends SparkTestBase {
     val walk = Files.list(Paths.get(path, "data"))
     try walk.forEach(f => { Files.delete(f); () }) finally walk.close()
     assert(load(path).agg(count(lit(1))).head().getLong(0) === 35)
+  }
+
+  test("MIN/MAX over a column an older file lacks match the scan") {
+    val path = Files.createTempDirectory("graft-aggpd6").toString
+    append(path, Seq(1L, 50L).toDF("id"))
+    append(path, Seq((2L, 7.5, "k"), (9L, -1.0, "a")).toDF("id", "v", "s"))
+    append(path, Seq((3L, 0.25, "m")).toDF("id", "v", "s"))
+    assertSameAnswer(path)(_.agg(count(lit(1)), min($"id"), max($"id"),
+      min($"v"), max($"v"), min($"s"), max($"s")))
+  }
+
+  test("a file whose column is all NULL contributes no extreme") {
+    val path = Files.createTempDirectory("graft-aggpd7").toString
+    append(path, Seq[(Long, Option[Double], Option[String])](
+      (1L, None, None), (2L, None, None)).toDF("id", "v", "s"))
+    val onlyNulls = assertSameAnswer(path)(_.agg(count(lit(1)), min($"v"), max($"s")))
+    assert(onlyNulls === Seq(Row(2L, null, null)))
+    append(path, Seq[(Long, Option[Double], Option[String])](
+      (3L, Some(2.5), Some("b")), (4L, Some(-0.5), None)).toDF("id", "v", "s"))
+    assertSameAnswer(path)(_.agg(count(lit(1)), min($"v"), max($"v"), min($"s"), max($"s")))
+  }
+
+  test("a table emptied by overwrite and applyDeletes answers one row") {
+    val path = Files.createTempDirectory("graft-aggpd8").toString
+    append(path, Seq((1L, 1.5, "a"), (2L, 2.5, "b")).toDF("id", "v", "s"))
+    append(path, Seq((3L, 3.5, "c")).toDF("id", "v", "s"))
+    Seq.empty[(Long, Double, String)].toDF("id", "v", "s")
+      .write.format(classOf[ManifestFileSink].getName)
+      .option("path", path).mode("overwrite").save()
+    ManifestFileSink.applyDeletes(path)
+    assert(ManifestFileSink.Snapshot(path).dvs.isEmpty)
+    val r = assertSameAnswer(path)(_.agg(count(lit(1)), min($"id"), max($"v"), max($"s")))
+    assert(r === Seq(Row(0L, null, null, null)))
+  }
+
+  test("count() over a BOOLEAN-only table answers without a zone map") {
+    val path = Files.createTempDirectory("graft-aggpd9").toString
+    append(path, Seq(true, false, true).toDF("b"))
+    append(path, Seq(false).toDF("b"))
+    assert(ManifestFileSink.Snapshot(path).visible.forall(_._3.statsText.isEmpty),
+      "a BOOLEAN column records no zone map")
+    assert(assertSameAnswer(path)(_.agg(count(lit(1)))) === Seq(Row(4L)))
+    assert(load(path).count() === 4L)
+  }
+
+  test("grouped MAX over a Double and a String column match the scan") {
+    val path = Files.createTempDirectory("graft-aggpd10").toString
+    ManifestFileSink.setPartitionColumns(path, Seq("g"))
+    // Two files per group. U+FF21 sorts below U+1F600 in UTF-8 byte
+    // order but above it in UTF-16 code-unit order.
+    append(path, Seq((0L, -2.5, "\uFF21"), (1L, 4.0, "b"), (0L, 1.0, "a"))
+      .toDF("g", "d", "s"))
+    append(path, Seq((0L, -7.0, "\uD83D\uDE00"), (1L, 9.5, "\uFF21z"), (1L, -1.0, "c"))
+      .toDF("g", "d", "s"))
+    val r = assertSameAnswer(path)(_.groupBy($"g").agg(max($"d"), max($"s"), min($"d"), min($"s")))
+    assert(r === Seq(Row(0L, 1.0, "\uD83D\uDE00", -7.0, "a"), Row(1L, 9.5, "\uFF21z", -1.0, "b")))
   }
 }

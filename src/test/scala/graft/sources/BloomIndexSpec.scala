@@ -113,8 +113,7 @@ class BloomIndexSpec extends SparkTestBase {
     assert(t.filter(col("id") === 42L).count() === 1)
     // Entry lines carry no bloom part (idx=min,max,null only).
     val m = ManifestFileSink.manifests(dir).head
-    val entries = Files.readAllLines(m.toPath).asScala
-      .drop(ManifestFileSink.readManifest(m).meta.headerLines)
+    val entries = ManifestFileSink.readManifest(m).body
     entries.foreach { line =>
       line.split("\t")(2).split("\\|").foreach { part =>
         assert(part.count(_ == ',') === 2, s"unexpected bloom part in: $part")

@@ -381,48 +381,25 @@ class ManifestSinkSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
   }
 
-  test("v1 headerless manifests stay readable; v2 commits order after; compact migrates") {
+  test("a manifest without a #graft header fails, naming the file") {
     import spark.implicits._
     val dir = freshDir()
     Seq((1L, "a", 1.0)).toDF("id", "name", "score")
       .write.format(fmt).option("path", dir).mode("append").save()
-    Thread.sleep(5)
-    Seq((2L, "b", 2.0)).toDF("id", "name", "score")
-      .write.format(fmt).option("path", dir).mode("append").save()
-    // Strip the #graft headers to reconstruct the v1 on-disk format
-    // (schema DDL on line 0), preserving each file's relative mtime order.
-    ManifestFileSink.manifests(dir).foreach { m =>
-      val mtime = m.lastModified()
-      val lines = Files.readAllLines(m.toPath)
-      assert(lines.get(0).startsWith("#graft"))
-      Files.write(m.toPath, lines.subList(1, lines.size()))
-      m.setLastModified(mtime)
-    }
-    // ... and the seq-claim markers: the v1 format predates the
-    // cross-process commit fence, so a genuine v1 table has none.
-    val claims = Paths.get(dir, "_commits")
-    if (Files.isDirectory(claims)) {
-      val l = Files.list(claims)
-      try l.forEach(p => Files.deleteIfExists(p)) finally l.close()
-      Files.deleteIfExists(claims)
-    }
-    // A pre-existing v1 table reads completely — not "not a graft manifest".
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .collect().map(_.getLong(0)).sorted === Array(1L, 2L))
-    // First v2 commit over a v1 table: seq 1, publication-ordered LAST.
-    Seq((3L, "c", 3.0)).toDF("id", "name", "score")
-      .write.format(fmt).option("path", dir).mode("append").save()
-    val ordered = ManifestFileSink.Snapshot.headers(dir).published
-    assert(ordered.last.meta.seq === 1L,
-      "first v2 seq over a v1 table must be 1 and order after every v1 commit")
-    assert(spark.read.format(fmt).option("path", dir).load().count() === 3)
-    // compact folds the mixed v1+v2 history into a single v2 manifest: the
-    // free migration path.
-    assert(ManifestFileSink.compact(dir) === 3)
-    val merged = ManifestFileSink.Snapshot.headers(dir).published
-    assert(merged.size === 1 && merged.head.meta.seq === 2L)
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
+    // Strip the header line: the schema DDL is then line 0.
+    val m = ManifestFileSink.manifests(dir).head
+    val lines = Files.readAllLines(m.toPath)
+    assert(lines.get(0).startsWith("#graft"))
+    Files.write(m.toPath, lines.subList(1, lines.size()))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    val readErr = intercept[Exception](
+      spark.read.format(fmt).option("path", dir).load().collect())
+    assert(messages(readErr).contains(s"no #graft header): $m"), messages(readErr))
+    val writeErr = intercept[Exception](Seq((2L, "b", 2.0)).toDF("id", "name", "score")
+      .write.format(fmt).option("path", dir).mode("append").save())
+    assert(messages(writeErr).contains(m.getName), messages(writeErr))
+    assert(ManifestFileSink.manifests(dir) === Seq(m), "the refused append published nothing")
   }
 
   test("concurrent publishes mint distinct, dense seq values (commit lock)") {

@@ -153,4 +153,21 @@ class MergeUpsertSpec extends SparkTestBase {
     assert(ManifestFileSink.applyDeletes(dir) === 1)
     assert(state(dir) === Seq((1L, "a2", 11.0), (2L, "b", 2.0)))
   }
+
+  test("merge keyed on a String column retracts every matched key") {
+    import spark.implicits._
+    val dir = freshDir()
+    // One file per key. U+FF21 sorts below U+1F600 in UTF-8 byte order
+    // (the zone maps' order) but above it in UTF-16 code-unit order.
+    Seq((1L, "a", 1.0), (2L, "\uFF21x", 2.0), (3L, "\uD83D\uDE00y", 3.0))
+      .foreach(r => append(dir, Seq(r)))
+    // Two source files, so the key range folds across files.
+    val batch = spark.sparkContext
+      .parallelize(Seq((12L, "\uFF21x", 12.0), (13L, "\uD83D\uDE00y", 13.0)), 2)
+      .toDF("id", "name", "score")
+    assert(batch.rdd.getNumPartitions === 2)
+    assert(ManifestFileSink.mergeUpsert(dir, batch, "name") === ((2L, 2L)))
+    assert(state(dir) === Seq((1L, "a", 1.0), (12L, "\uFF21x", 12.0),
+      (13L, "\uD83D\uDE00y", 13.0)))
+  }
 }

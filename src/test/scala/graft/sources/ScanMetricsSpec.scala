@@ -85,4 +85,54 @@ class ScanMetricsSpec extends SparkTestBase {
       assert(scanOf(top15).metrics("filesRead").value === 2)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
+
+  /** Top-N over `col` against a full sort of the collected rows, with the
+    * number of files the pruned scan opened. */
+  private def topNFilesRead(
+      path: String, order: org.apache.spark.sql.Column, n: Int): (Seq[Any], Seq[Any], Long) = {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val load = spark.read.format(classOf[ManifestFileSink].getName).option("path", path).load()
+      val top = load.orderBy(order).limit(n)
+      val got = top.collect().map(_.get(0)).toSeq
+      val all = load.collect().toSeq
+      val truth = spark.createDataFrame(spark.sparkContext.parallelize(all, 1), load.schema)
+        .orderBy(order).limit(n).collect().map(_.get(0)).toSeq
+      (got, truth, scanOf(top).metrics("filesRead").value)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("top-N over a String column prunes by zone maps in byte order") {
+    val path = Files.createTempDirectory("graft-topn-s").toString
+    // Three range-disjoint files. In UTF-8 byte order "a…" < "\uFF21…" <
+    // "\uD83D\uDE00…"; UTF-16 code-unit order puts the last two the other way.
+    Seq("a", "\uFF21", "\uD83D\uDE00").foreach { p =>
+      (1 to 5).map(i => s"$p$i").toDF("s").coalesce(1)
+        .write.format(classOf[ManifestFileSink].getName)
+        .option("path", path).mode("append").save()
+    }
+    val (desc, descTruth, descFiles) = topNFilesRead(path, $"s".desc, 3)
+    assert(desc === descTruth)
+    assert(desc === Seq("\uD83D\uDE005", "\uD83D\uDE004", "\uD83D\uDE003"))
+    assert(descFiles === 1, "descending top-3 must open only the highest-range file")
+    val (asc, ascTruth, ascFiles) = topNFilesRead(path, $"s", 7)
+    assert(asc === ascTruth)
+    assert(ascFiles === 2, "ascending top-7 needs the two lowest-range files")
+  }
+
+  test("top-N over a Double column prunes by zone maps") {
+    val path = Files.createTempDirectory("graft-topn-d").toString
+    Seq(Seq(10.0, 20.0, 15.5), Seq(-5.5, -1.0, -3.25), Seq(0.5, 4.5, 2.0)).foreach { vs =>
+      vs.toDF("d").coalesce(1)
+        .write.format(classOf[ManifestFileSink].getName)
+        .option("path", path).mode("append").save()
+    }
+    val (asc, ascTruth, ascFiles) = topNFilesRead(path, $"d", 2)
+    assert(asc === ascTruth && asc === Seq(-5.5, -3.25))
+    assert(ascFiles === 1, "ascending top-2 must open only the lowest-range file")
+    val (desc, descTruth, descFiles) = topNFilesRead(path, $"d".desc, 4)
+    assert(desc === descTruth && desc === Seq(20.0, 15.5, 10.0, 4.5))
+    assert(descFiles === 2)
+  }
 }

@@ -152,9 +152,9 @@ class ZoneMapSpec extends SparkTestBase {
     // Strip the stats field from every entry line — the pre-zone-map format.
     val m = ManifestFileSink.manifests(dir).head
     val lines = Files.readAllLines(m.toPath).asScala.toSeq
-    val meta = ManifestFileSink.readManifest(m).meta
-    val rewritten = lines.take(meta.headerLines) ++
-      lines.drop(meta.headerLines).map(_.split("\t").take(2).mkString("\t"))
+    val body = ManifestFileSink.readManifest(m).body
+    val rewritten = lines.dropRight(body.size) ++
+      body.map(_.split("\t").take(2).mkString("\t"))
     Files.write(m.toPath, rewritten.asJava)
     val t = spark.read.format(fmt).option("path", dir).load()
     assert(plannedFiles(t.filter(col("id") === 99L)) === 1,
