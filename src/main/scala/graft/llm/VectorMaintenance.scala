@@ -2,7 +2,7 @@ package graft.llm
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dotp
@@ -32,11 +32,19 @@ import graft.sources.{ManifestFileSink, Tables}
   * Transaction shape (the [[IndexMaintenance]] discipline, two tables
   * instead of five): stage batch corpus rows + batch assignment rows
   * under one `wap-id`; audit via `VERSION AS OF 'wap:'` (batch vec_ids
-  * disjoint from the corpus, each table grew by exactly the batch's
-  * computed rows); publish or discard as one decision; fences advance
-  * LAST to the corpus table's manifest-chain fingerprint — a refused
-  * audit leaves both the chain and the fence untouched (the r16 fence
-  * rule), out-of-band corpus writes still read as drift.
+  * disjoint from the corpus, each table grew by exactly the rows its
+  * write job delivered); publish or discard as one decision; fences
+  * advance LAST to the corpus table's manifest-chain fingerprint — a
+  * refused audit leaves both the chain and the fence untouched (the r16
+  * fence rule), out-of-band corpus writes still read as drift.
+  *
+  * Audits prove themselves from facts the verb already holds, each still
+  * comparing two independent derivations: the rows a write job
+  * delivered, observed on that job ([[observedWrite]]), against the rows
+  * the sink staged; and the victims the zone maps count
+  * ([[ManifestFileSink.strictCounts]]) against the rows the delete's
+  * match scan reads. A table the zone maps cannot decide falls back to
+  * counting queries.
   *
   * Entry split: the managed corpus is `vec_id % 13 ≠ 6`, the maintained
   * append is class 6, so the served universe is ALL vectors — and the
@@ -44,11 +52,17 @@ import graft.sources.{ManifestFileSink, Tables}
   * (base) CTE, the final assignment runs over full `e`
   * ([[Similarity.kmeansCtes]] parametrized train/assign).
   *
-  * At 100 TB: per-batch cost is ONE map pass over the batch (the
-  * centroid list is broadcast-sized by construction) plus two bounded
-  * appends — no shuffle, no corpus read; the clustered assigned-table
-  * write demuxes per-cell files so serve's partition pruning is
-  * unchanged after any number of appends. */
+  * At 100 TB: an ingest batch costs one centroid read, one map pass over
+  * the batch per staged table (the centroid list is broadcast-sized by
+  * construction), and one shuffle: the clustered assigned-table write,
+  * which demuxes per-cell files so serve's partition pruning is unchanged
+  * after any number of appends. The batch's partial sums fold in one
+  * task, with no shuffle (a batch is bounded by its caller). The corpus
+  * is read only when its zone maps admit a file for the batch's id
+  * range, and then only that range. A delete costs the two tables' match
+  * scans, one read of the victims' assigned rows for their negated
+  * partials, and the ledger row; it counts its victims from the zone
+  * maps unless a live file straddles a window. */
 object VectorMaintenance {
 
   private def fmt = classOf[ManifestFileSink].getName
@@ -233,8 +247,9 @@ object VectorMaintenance {
     * full [[ensureRetrained]] was the last O(corpus) maintenance verb.
     * A cell whose members all retracted (Σn ≤ 0) drops out, exactly as
     * an emptied cell drops from the full train. Idempotent via the
-    * marker; a pre-v2 base (no cstats) falls back THROUGH the full
-    * door. Returns true iff an update ran. */
+    * marker. A base of another layout (no cstats) refuses: rebuild it
+    * through [[ensureBaseAt]]'s layout gate first. Returns true iff an
+    * update ran. */
   def retrainIncremental(s: SparkSession, base: String): Boolean =
     MaintenanceLease.withLease(base, "retrainIncremental")(
       retrainIncrementalImpl(s, base))
@@ -242,25 +257,26 @@ object VectorMaintenance {
   private def retrainIncrementalImpl(s: SparkSession, base: String): Boolean = synchronized {
     val ct = corpusTable(base)
     val ip = vecPath(base)
+    val layout = IndexFence.readLayout(ip)
+    if (layout != LayoutVersion) throw new IllegalStateException(
+      s"vector base $base has index layout v$layout, not v$LayoutVersion: " +
+        "rebuild it with ensureBaseAt before an incremental retrain")
     // Same preamble as ingestAppend/deleteRanges (advice-r18 #1): a crash
     // mid-publish of a sibling verb leaves the newest cstats suffix staged
     // and invisible — folding WITHOUT rolling it forward would advance the
     // trained-over marker past partials the fold never saw, silently wrong
     // centroids until the next drift. Runs BEFORE the fingerprint read so
     // the idempotence check sees the rolled-forward corpus.
-    if (IndexFence.readLayout(ip) == LayoutVersion) {
-      recoverTorn(s, base)
-      reconcileFence(s, base)
-      for (st <- IndexFence.staleness(ip))
-        if (st) throw new IllegalStateException(
-          s"vector index at $ip is STALE (out-of-band corpus drift): " +
-            "rebuild before maintaining.")
-    }
+    recoverTorn(s, base)
+    reconcileFence(s, base)
+    for (st <- IndexFence.staleness(ip))
+      if (st) throw new IllegalStateException(
+        s"vector index at $ip is STALE (out-of-band corpus drift): " +
+          "rebuild before maintaining.")
     val cur = IndexFence.fingerprint(ct)
     val tf = Paths.get(trainedFile(ip))
     if (Files.isRegularFile(tf) && Files.readString(tf) == cur.toString) return false
-    if (IndexFence.readLayout(ip) != LayoutVersion)
-      return ensureRetrained(s, base) // fallback door: full retrain
+    // rewriteTable evaluates the fold exactly once, inside its own job.
     val folded = s.read.format(fmt).option("path", cstatsTable(ip)).load()
       .groupBy(col("cell"), col("j"))
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
@@ -271,10 +287,7 @@ object VectorMaintenance {
       .select(col("cell").as("cent_id"),
         transform(col("jm"), x => x.getField("m")).as("cv"))
       .select(col("cent_id"), VectorIndex.enc(col("cv")).as("cvenc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    folded.count()
     ManifestFileSink.rewriteTable(s, s"$ip/cents", _ => folded, numFiles = 1)
-    folded.unpersist()
     s.catalog.refreshByPath(s"$ip/cents")
     Files.writeString(tf, cur.toString)
     true
@@ -326,6 +339,30 @@ object VectorMaintenance {
     consistent
   }
 
+  /** How long a write's observed metrics may trail the write's return:
+    * they arrive through the session's listener bus. */
+  private val ObservedWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** Run `write` over `df` with `metrics` observed on that write's own
+    * job, and return them: what the query DELIVERED to the sink, counted
+    * as it was delivered and never read back from the sink's commit
+    * messages, so an audit of it against the staged rows still compares
+    * two independent derivations. A map stage that Spark re-executes (a
+    * lost shuffle output) adds its rows to the observation again, so the
+    * figure can only over-count: the audit then refuses the transaction,
+    * never admits a bad one. An observation that never arrives refuses
+    * the same way. */
+  private def observedWrite(df: DataFrame, metric: Column, more: Column*)(
+      write: DataFrame => Unit): Row = {
+    val obs = Observation()
+    write(df.observe(obs, metric, more: _*))
+    try scala.concurrent.Await.result(obs.future, ObservedWait)
+    catch {
+      case _: java.util.concurrent.TimeoutException => throw new IllegalStateException(
+        s"maintenance audit failed: no observed row count from a write within $ObservedWait")
+    }
+  }
+
   /** Has the standard append batch already been ingested? */
   def batchApplied(s: SparkSession, base: String): Boolean =
     !readCorpus(s, base)
@@ -359,13 +396,15 @@ object VectorMaintenance {
       val bAssigned = VectorIndex.assignNew(s, ip, b)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // The batch's per-cell partial sums — what keeps the incremental
-      // retrain a metadata fold ([[retrainIncremental]]).
-      val bCstats = cellPartials(bAssigned
-          .select(col("cell"), VectorIndex.dec(col("vnenc")).as("vn")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // retrain a metadata fold ([[retrainIncremental]]) — folded in one
+      // task: the batch is bounded, so the fold needs no shuffle.
+      val bCstats = cellPartials(bAssigned.coalesce(1)
+        .select(col("cell"), VectorIndex.dec(col("vnenc")).as("vn")))
       def stage(df: DataFrame, path: String): Unit =
         df.write.format(fmt).option("path", path).option("wap-id", wapId)
           .mode("append").save()
+      def stageCounted(df: DataFrame, path: String): Long =
+        observedWrite(df, count(lit(1)))(stage(_, path)).getLong(0)
       def wapView(path: String): DataFrame =
         s.read.format(fmt).option("path", path)
           .option("asOfManifest", s"wap:$wapId").load()
@@ -373,19 +412,34 @@ object VectorMaintenance {
         s.read.format(fmt).option("path", path).load().count()
       try {
         val pre = allTables.map(p => p -> mainCount(p)).toMap
-        stage(encodeRows(b), ct)
-        stage(bAssigned, assignedT)
-        stage(bCstats, cstatsT)
+        // Stage order is publish order (corpus first): each write reports
+        // the rows it delivered; the corpus write also the batch's id range.
+        val corpusObs = observedWrite(encodeRows(b), count(lit(1)),
+          min(col("vec_id")), max(col("vec_id")))(stage(_, ct))
+        val nAssigned = stageCounted(bAssigned, assignedT)
+        val nCstats = stageCounted(bCstats, cstatsT)
         // AUDIT 1: batch vec_ids are NEW (per-vector rows are exact
-        // under appends ONLY because ids never replay).
-        val collisions = readCorpus(s, base).join(
-          b.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
-        if (collisions > 0) throw new IllegalStateException(
-          s"ingest audit failed: $collisions batch vec_ids already in " +
-            "the corpus — appends must be new vectors")
-        // AUDIT 2: exact growth per table.
-        val expected = Map(ct -> b.count(), assignedT -> bAssigned.count(),
-          cstatsT -> bCstats.count())
+        // under appends ONLY because ids never replay). Only a corpus file
+        // whose zone map admits the batch's [min, max] can hold one of its
+        // ids: a fresh-id batch opens no corpus file, and otherwise the
+        // semi-join reads that range alone.
+        if (!corpusObs.isNullAt(1)) {
+          val lo = corpusObs.getAs[Number](1).longValue
+          val hi = corpusObs.getAs[Number](2).longValue
+          val range = org.apache.spark.sql.sources.And(
+            org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", lo),
+            org.apache.spark.sql.sources.LessThanOrEqual("vec_id", hi))
+          if (!ManifestFileSink.strictCounts(ct, Seq(range)).contains(Seq(0L))) {
+            val collisions = readCorpus(s, base).filter(col("vec_id").between(lo, hi))
+              .join(b.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
+            if (collisions > 0) throw new IllegalStateException(
+              s"ingest audit failed: $collisions batch vec_ids already in " +
+                "the corpus — appends must be new vectors")
+          }
+        }
+        // AUDIT 2: each table grew by exactly the rows its write delivered.
+        val expected = Map(ct -> corpusObs.getLong(0), assignedT -> nAssigned,
+          cstatsT -> nCstats)
         for (p <- allTables) {
           val grew = wapView(p).count() - pre(p)
           if (grew != expected(p)) throw new IllegalStateException(
@@ -395,13 +449,13 @@ object VectorMaintenance {
       } catch {
         case e: Throwable =>
           ManifestFileSink.wapAbort(allTables, wapId)
-          b.unpersist(); bAssigned.unpersist(); bCstats.unpersist()
+          b.unpersist(); bAssigned.unpersist()
           throw e
       }
       // Fence advances LAST to the corpus chain's new state.
       s.catalog.refreshByPath(ct)
       IndexFence.write(ip, ct, IndexFence.fingerprint(ct))
-      b.unpersist(); bAssigned.unpersist(); bCstats.unpersist()
+      b.unpersist(); bAssigned.unpersist()
     }
 
   /** One streaming vector epoch — [[IndexMaintenance.applyEpoch]]'s
@@ -726,33 +780,38 @@ object VectorMaintenance {
       ManifestFileSink.wapAbort(allTables, wapId)
       val pred = windows.map { case (lo, hi) =>
         col("vec_id") >= lo && col("vec_id") < hi }.reduce(_ || _)
-      val filt = windows.map { case (lo, hi) =>
+      val winFilters = windows.map { case (lo, hi) =>
         org.apache.spark.sql.sources.And(
           org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", lo),
           org.apache.spark.sql.sources.LessThan("vec_id", hi))
           : org.apache.spark.sql.sources.Filter
-      }.reduce(org.apache.spark.sql.sources.Or(_, _))
-      val winCol = windows.zipWithIndex.foldLeft(lit(-1)) {
-        case (acc, ((lo, hi), i)) =>
-          when(col("vec_id") >= lo && col("vec_id") < hi, lit(i)).otherwise(acc)
       }
-      val perWin = readCorpus(s, base).filter(pred)
-        .groupBy(winCol.as("w")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val counts = windows.indices.map(i => perWin.getOrElse(i, 0L))
+      val filt = winFilters.reduce(org.apache.spark.sql.sources.Or(_, _))
+      // Victim counts from the zone maps when they decide every live file
+      // (the delete's match scans below read the rows and must agree);
+      // counting queries when one straddles a window.
+      val counts = ManifestFileSink.strictCounts(ct, winFilters).getOrElse {
+        val winCol = windows.zipWithIndex.foldLeft(lit(-1)) {
+          case (acc, ((lo, hi), i)) =>
+            when(col("vec_id") >= lo && col("vec_id") < hi, lit(i)).otherwise(acc)
+        }
+        val perWin = readCorpus(s, base).filter(pred)
+          .groupBy(winCol.as("w")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+        windows.indices.map(i => perWin.getOrElse(i, 0L))
+      }
       val nVecs = counts.sum
       if (nVecs == 0) return counts // replay or empty windows: no-op
-      val nAssigned = s.read.format(fmt).option("path", assignedT).load()
-        .filter(pred).count()
+      val nAssigned = ManifestFileSink.strictCounts(assignedT, Seq(filt))
+        .fold(s.read.format(fmt).option("path", assignedT).load().filter(pred).count())(_.head)
       // NEGATED per-cell partial sums from the victims' still-visible
       // assigned rows — the incremental-retrain fold absorbs the
-      // retraction exactly as the text index's df partials do.
+      // retraction exactly as the text index's df partials do. The
+      // windows bound the victims, so they fold in one task, no shuffle.
       val negCstats = cellPartials(
-          s.read.format(fmt).option("path", assignedT).load().filter(pred)
+          s.read.format(fmt).option("path", assignedT).load().filter(pred).coalesce(1)
             .select(col("cell"), VectorIndex.dec(col("vnenc")).as("vn")))
         .select(col("cell"), col("j"), (-col("s")).as("s"), (-col("n")).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nNegCstats = negCstats.count()
       import s.implicits._
       val applied = windows.zip(counts).filter(_._2 > 0)
       val delRow = applied.map { case ((lo, hi), n) => (lo, hi, n) }
@@ -764,16 +823,22 @@ object VectorMaintenance {
         s.read.format(fmt).option("path", path).load().count()
       try {
         val pre = allTables.map(p => p -> mainCount(p)).toMap
-        val dCorpus = ManifestFileSink.deleteWhereStaged(ct, filt, wapId)
-        val dAssigned = ManifestFileSink.deleteWhereStaged(assignedT, filt, wapId)
-        negCstats.write.format(fmt).option("path", cstatsT)
-          .option("wap-id", wapId).mode("append").save()
+        // Each match scan is audited before the next table stages: a
+        // corpus scan that staged nothing must leave no later stage
+        // behind, or the abort would read the unstaged head as a publish
+        // already under way and roll the rest forward.
+        def matchAudit(table: String, staged: Long, expected: Long): Unit =
+          if (staged != expected) throw new IllegalStateException(
+            s"vector delete audit failed: $table match scan staged $staged " +
+              s"deletions, expected $expected")
+        matchAudit(ct, ManifestFileSink.deleteWhereStaged(ct, filt, wapId), nVecs)
+        matchAudit(assignedT,
+          ManifestFileSink.deleteWhereStaged(assignedT, filt, wapId), nAssigned)
+        val nNegCstats = observedWrite(negCstats, count(lit(1)))(
+          _.write.format(fmt).option("path", cstatsT)
+            .option("wap-id", wapId).mode("append").save()).getLong(0)
         delRow.write.format(fmt).option("path", dt).option("wap-id", wapId)
           .mode("append").save()
-        if (dCorpus != nVecs || dAssigned != nAssigned)
-          throw new IllegalStateException(
-            s"vector delete audit failed: staged $dCorpus/$dAssigned " +
-              s"deletions, expected $nVecs/$nAssigned")
         val expected = Map(ct -> -nVecs, assignedT -> -nAssigned,
           cstatsT -> nNegCstats, dt -> applied.size.toLong)
         for (p <- allTables) {
@@ -787,7 +852,7 @@ object VectorMaintenance {
         case e: Throwable =>
           ManifestFileSink.wapAbort(allTables, wapId)
           throw e
-      } finally negCstats.unpersist()
+      }
       allTables.foreach(s.catalog.refreshByPath)
       IndexFence.write(ip, ct, IndexFence.fingerprint(ct))
       counts

@@ -2624,6 +2624,77 @@ object ManifestFileSink {
     }
   }
 
+  /** Strict file-level predicate evaluation, the dual of [[mayMatch]] (as
+    * Iceberg's StrictMetricsEvaluator is to its inclusive evaluator): does
+    * EVERY row of a file with these stats satisfy `filter`? True only when
+    * the zone map proves it: the column is Long or Int, records no NULL,
+    * has readable bounds, and both bounds satisfy the comparison (range
+    * comparisons under And/Or). Any other shape, type or missing claim
+    * answers false, which means "not proven", never "no row matches".
+    * Bounds cover every row ever written to the file, so the proof also
+    * holds for its rows that survive a deletion vector. Double (NaN
+    * order) and String (byte order) bounds make no claim here. */
+  private[sources] def mustMatch(
+      filter: org.apache.spark.sql.sources.Filter,
+      stats: Map[Int, ColStats],
+      schema: StructType): Boolean = {
+    import org.apache.spark.sql.sources._
+    def bounds(c: String): Option[(Long, Long)] = {
+      val i = schema.fieldNames.indexOf(c)
+      if (i < 0) return None
+      val dt = schema.fields(i).dataType
+      def asLong(text: String): Option[Long] =
+        Bound.decode(text, dt).map(_.asInstanceOf[Number].longValue)
+      stats.get(i).filter(s => !s.hasNull && !s.rangeless && s.min.nonEmpty) match {
+        case Some(s) if dt == LongType || dt == IntegerType =>
+          for (lo <- asLong(s.min); hi <- asLong(s.max)) yield (lo, hi)
+        case _ => None
+      }
+    }
+    // A bound against the literal, in mayMatch's exact decimal space; an
+    // incomparable literal (a string, an infinity) proves nothing.
+    def rel(x: Long, v: Any): Option[Int] =
+      try compareLongLiteral(x, v)
+      catch { case _: IllegalArgumentException => None } // incl. NumberFormatException
+    filter match {
+      case GreaterThan(c, v) => bounds(c).exists(b => rel(b._1, v).exists(_ > 0))
+      case GreaterThanOrEqual(c, v) => bounds(c).exists(b => rel(b._1, v).exists(_ >= 0))
+      case LessThan(c, v) => bounds(c).exists(b => rel(b._2, v).exists(_ < 0))
+      case LessThanOrEqual(c, v) => bounds(c).exists(b => rel(b._2, v).exists(_ <= 0))
+      case And(l, r) => mustMatch(l, stats, schema) && mustMatch(r, stats, schema)
+      case Or(l, r) => mustMatch(l, stats, schema) || mustMatch(r, stats, schema)
+      case _ => false
+    }
+  }
+
+  /** Live rows of the table that satisfy each filter, counted from
+    * METADATA alone: a live file that [[mayMatch]] refutes adds 0, one
+    * that [[mustMatch]] proves all-in adds its rows minus its
+    * deletion-vector positions. None when any live file is undecided for
+    * any filter (it straddles a bound, lacks a zone map, predates the
+    * column, or holds a type with no strict claim): only a query can
+    * count it. One snapshot answers every filter. */
+  def strictCounts(
+      path: String,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Seq[Long]] = {
+    val snap = Snapshot(path)
+    val dvs = snap.dvs
+    val ddlCache = scala.collection.mutable.Map.empty[String, StructType]
+    val counts = Array.fill(filters.size)(0L)
+    snap.visible.foreach { case (file, rows, e, ddl) =>
+      val live = rows - dvs.get(file).fold(0)(_.length)
+      if (live > 0) {
+        val fs = ddlCache.getOrElseUpdate(ddl, asNullable(StructType.fromDDL(ddl)))
+        val st = e.stats.getOrElse(return None)
+        filters.indices.foreach { i =>
+          if (mustMatch(filters(i), st, fs)) counts(i) += live
+          else if (mayMatch(filters(i), st, fs)) return None
+        }
+      }
+    }
+    Some(counts.toSeq)
+  }
+
   /** Trigram-bloom admission for a substring needle against column `c` —
     * true when no index claim exists (absent bloom, short needle). */
   private def trgmAdmits0(

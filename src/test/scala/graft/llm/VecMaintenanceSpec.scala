@@ -2,8 +2,11 @@ package graft.llm
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
-import graft.sources.ManifestFileSink
+import graft.sources.{JobCounting, ManifestFileSink}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The vector-maintenance contract (the trilogy's third leg): the
@@ -12,7 +15,7 @@ import org.apache.spark.sql.functions._
   * full pipeline row-for-row; the fence accepts maintained drift,
   * refuses out-of-band drift, and a refused audit leaves the index
   * fresh, servable, and physically untouched. */
-class VecMaintenanceSpec extends SparkTestBase {
+class VecMaintenanceSpec extends SparkTestBase with JobCounting {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -29,6 +32,18 @@ class VecMaintenanceSpec extends SparkTestBase {
   }
 
   private def embAll(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
+
+  /** Batch `k` of 8 fresh vectors, ids `1000000 + 1000k + i`, as a local
+    * DataFrame (the benchmark's ingest shape): the first 8 embeddings
+    * under new ids, so their bytes are real and the ids never collide. */
+  private def freshBatch(dir: String, k: Int): DataFrame = {
+    val src = embAll(dir).orderBy(col("vec_id")).limit(8)
+      .select((col("vec_id") + (1000000L + k * 1000L)).as("vec_id"), col("embedding"))
+    spark.createDataFrame(src.collect().toSeq.asJava, src.schema)
+  }
+
+  private def tableCount(p: String): Long =
+    spark.read.format(fmt).option("path", p).load().count()
 
   test("maintained serve equals the frozen-centroid pipeline, hash-strict") {
     val dir = freshDir()
@@ -335,5 +350,112 @@ class VecMaintenanceSpec extends SparkTestBase {
     assert(IndexFence.staleness(ip).contains(false),
       "recovery re-derives the fence the crash lost")
     b2Assigned.unpersist()
+  }
+
+  test("job counts at the benchmark's shape: ingest <= 8, delete <= 4, retrain <= 3") {
+    val dir = freshDir()
+    val base = VectorMaintenance.ensureBaseAt(spark, dir,
+      Files.createTempDirectory("graft-vecmaint-jobs").toString)
+    VectorMaintenance.ingestAppend(spark, base, freshBatch(dir, 0), "jobs-0")
+    val b1 = freshBatch(dir, 1)
+    val ingest = jobsDuring(VectorMaintenance.ingestAppend(spark, base, b1, "jobs-1"))
+    var gone = Seq.empty[Long]
+    val delete = jobsDuring {
+      gone = VectorMaintenance.deleteRanges(spark, base, Seq((1000000L, 1000008L)))
+    }
+    assert(gone === Seq(8L))
+    VectorMaintenance.purgeDeletes(spark, base)
+    var retrained = false
+    val retrain = jobsDuring {
+      retrained = VectorMaintenance.retrainIncremental(spark, base)
+    }
+    assert(retrained)
+    assert(ingest <= 8, s"ingestAppend ran $ingest jobs")
+    assert(delete <= 4, s"deleteRanges ran $delete jobs")
+    assert(retrain <= 3, s"retrainIncremental ran $retrain jobs")
+  }
+
+  test("ingest audit: a leftover stage under the ingest's WAP id refuses and is discarded") {
+    val dir = freshDir()
+    val base = VectorMaintenance.ensureBaseAt(spark, dir,
+      Files.createTempDirectory("graft-vecmaint-leftover").toString)
+    val ip = VectorMaintenance.vecPath(base)
+    val ct = VectorMaintenance.corpusTable(base)
+    val wapId = "vecingest-leftover"
+    val pre = Seq(ct, s"$ip/assigned").map(p => p -> tableCount(p)).toMap
+    // A crashed attempt's corpus rows, left staged under the same id.
+    freshBatch(dir, 9).limit(2)
+      .select(col("vec_id"),
+        VectorIndex.enc(transform(col("embedding"), _.cast("double"))).as("embenc"))
+      .write.format(fmt).option("path", ct).option("wap-id", wapId)
+      .mode("append").save()
+    assert(ManifestFileSink.hasStage(ct, wapId))
+    val e = intercept[IllegalStateException](
+      VectorMaintenance.ingestAppend(spark, base, freshBatch(dir, 1), wapId))
+    assert(e.getMessage.matches(s"(?s).*ingest audit failed: .*corpus staged 10 rows, expected 8.*"),
+      e.getMessage)
+    assert(!ManifestFileSink.hasStage(ct, wapId), "the refusal discards the leftover stage")
+    pre.foreach { case (p, n) => assert(tableCount(p) === n, s"$p must not grow") }
+    assert(IndexFence.staleness(ip).contains(false))
+  }
+
+  test("delete audit: a zone map claiming a window its file does not hold refuses the delete") {
+    val dir = freshDir()
+    val base = VectorMaintenance.ensureBaseAt(spark, dir,
+      Files.createTempDirectory("graft-vecmaint-zonelie").toString)
+    val ip = VectorMaintenance.vecPath(base)
+    val ct = VectorMaintenance.corpusTable(base)
+    VectorMaintenance.ingestAppend(spark, base, freshBatch(dir, 0), "zonelie-0")
+    // Re-label the batch file that holds the batch's lowest id so its
+    // vec_id zone map (column 0) claims [2000000, hi'] instead.
+    val manifests = new java.io.File(ct).listFiles()
+      .filter(f => f.isFile && f.getName.startsWith("manifest-"))
+    val edited = manifests.count { f =>
+      val text = Files.readString(f.toPath)
+      val lied = text.replaceAll("\t0=1000000,1000(\\d+),", "\t0=2000000,2000$1,")
+      if (lied != text) Files.writeString(f.toPath, lied)
+      lied != text
+    }
+    assert(edited === 1, "exactly one manifest lists the batch's lowest id")
+    val pre = Seq(ct, s"$ip/assigned").map(p => p -> tableCount(p)).toMap
+    val tables = Seq(ct, s"$ip/assigned", VectorMaintenance.cstatsTable(ip),
+      IndexMaintenance.delsTable(base))
+    val preCommits = tables.map(ManifestFileSink.publishedManifestCount)
+    val window = Seq((2000000L, 2000008L))
+    assert(ManifestFileSink.strictCounts(ct, window.map { case (lo, hi) =>
+      org.apache.spark.sql.sources.And(
+        org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", lo),
+        org.apache.spark.sql.sources.LessThan("vec_id", hi))
+    }).exists(_.head > 0), "the edited zone map proves victims the file does not hold")
+    val e = intercept[IllegalStateException](
+      VectorMaintenance.deleteRanges(spark, base, window))
+    assert(e.getMessage.contains("vector delete audit failed"), e.getMessage)
+    pre.foreach { case (p, n) => assert(tableCount(p) === n, s"$p must not shrink") }
+    assert(tables.map(ManifestFileSink.publishedManifestCount) === preCommits,
+      "a refused delete publishes nothing, the ledger row included")
+    tables.foreach(p => assert(!ManifestFileSink.hasStage(p, "vecdelete-2000000-2000008")))
+  }
+
+  test("a delete window that cuts through a corpus file counts by query, exactly") {
+    val dir = freshDir()
+    val base = VectorMaintenance.ensureBaseAt(spark, dir,
+      Files.createTempDirectory("graft-vecmaint-straddle").toString)
+    val ct = VectorMaintenance.corpusTable(base)
+    VectorMaintenance.ingestAppend(spark, base, freshBatch(dir, 0), "straddle-0")
+    val windows = Seq((10L, 20L), (1000000L, 1000004L))
+    def window(lo: Long, hi: Long) = org.apache.spark.sql.sources.And(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", lo),
+      org.apache.spark.sql.sources.LessThan("vec_id", hi))
+    assert(ManifestFileSink.strictCounts(ct, windows.map((window _).tupled)).isEmpty,
+      "[10, 20) cuts through the base file: the zone maps cannot decide it")
+    val corpus = spark.read.format(fmt).option("path", ct).load()
+    val want = windows.map { case (lo, hi) =>
+      corpus.filter(col("vec_id") >= lo && col("vec_id") < hi).count() }
+    assert(want.forall(_ > 0))
+    val preCorpus = tableCount(ct)
+    assert(VectorMaintenance.deleteRanges(spark, base, windows) === want)
+    assert(tableCount(ct) === preCorpus - want.sum)
+    assert(VectorMaintenance.deleteRanges(spark, base, windows) === Seq(0L, 0L),
+      "a replay finds only masked victims")
   }
 }
