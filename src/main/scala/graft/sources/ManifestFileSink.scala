@@ -631,22 +631,40 @@ object ManifestFileSink {
     sb.toString
   }
 
-  /** Inverse of [[encodeRuns]]. */
+  /** Inverse of [[encodeRuns]]. The runs are parsed first and the
+    * positions then filled into one exactly-sized array: a full-file
+    * retraction such as `0-39999` allocates its 40,000 positions once,
+    * with no growth copies. */
   private[sources] def decodeRuns(s: String): Array[Long] = {
-    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    val firsts = new scala.collection.mutable.ArrayBuilder.ofLong
+    val lasts = new scala.collection.mutable.ArrayBuilder.ofLong
+    var n = 0L
     var i = 0
     while (i < s.length) {
       var end = s.indexOf(',', i)
       if (end < 0) end = s.length
       val dash = s.indexOf('-', i)
       if (dash >= 0 && dash < end) {
-        var p = s.substring(i, dash).toLong
+        val first = s.substring(i, dash).toLong
         val last = s.substring(dash + 1, end).toLong
-        while (p <= last) { out += p; p += 1 }
-      } else if (end > i) out += s.substring(i, end).toLong
+        if (last >= first) { firsts += first; lasts += last; n += last - first + 1 }
+      } else if (end > i) {
+        val p = s.substring(i, end).toLong
+        firsts += p; lasts += p; n += 1
+      }
       i = end + 1
     }
-    out.result()
+    val fs = firsts.result()
+    val ls = lasts.result()
+    val out = new Array[Long](Math.toIntExact(n))
+    var k = 0
+    var r = 0
+    while (r < fs.length) {
+      var p = fs(r)
+      while (p <= ls(r)) { out(k) = p; k += 1; p += 1 }
+      r += 1
+    }
+    out
   }
 
   /** Sort and dedupe in place; returns the distinct prefix. */
@@ -661,11 +679,22 @@ object ManifestFileSink {
     if (n == a.length) a else java.util.Arrays.copyOf(a, n)
   }
 
-  /** Per-file union of position deltas: sorted, distinct, unboxed. */
+  /** Per-file union of position deltas: sorted, distinct, unboxed. A
+    * file with one delta that is already strictly ascending (every vector
+    * [[encodeRuns]] wrote) keeps that array as is, uncopied: callers only
+    * read the union. */
   private[sources] def unionPositions(
       dvs: Iterable[(String, Array[Long])]): Map[String, Array[Long]] =
-    dvs.groupMap(_._1)(_._2)
-      .map { case (f, ps) => f -> sortedDistinct(Array.concat(ps.toSeq: _*)) }
+    dvs.groupMap(_._1)(_._2).map {
+      case (f, ps) if ps.sizeIs == 1 && strictlyAscending(ps.head) => f -> ps.head
+      case (f, ps) => f -> sortedDistinct(Array.concat(ps.toSeq: _*))
+    }
+
+  private def strictlyAscending(a: Array[Long]): Boolean = {
+    var i = 1
+    while (i < a.length && a(i - 1) < a(i)) i += 1
+    i >= a.length
+  }
 
   /** Positions of `[0, rows)` not in the sorted distinct `deleted`: what
     * retracting every live row of a file writes. */

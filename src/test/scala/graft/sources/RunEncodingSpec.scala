@@ -44,6 +44,15 @@ class RunEncodingSpec extends SparkTestBase {
     assert(u.view.mapValues(_.toSeq).toMap === Map("f" -> Seq(1L, 3L, 5L), "g" -> Seq(2L)))
   }
 
+  test("a file's one ascending delta is its union, uncopied; any other delta is sorted") {
+    val full = ManifestFileSink.decodeRuns("0-9999")
+    assert(full.length === 10000 && full.last === 9999L)
+    val u = ManifestFileSink.unionPositions(Seq("f" -> full, "g" -> Array(4L, 2L, 2L)))
+    assert(u("f") eq full)
+    assert(u("g").toSeq === Seq(2L, 4L))
+    assert(ManifestFileSink.decodeRuns("7-5,3").toSeq === Seq(3L), "an empty run adds nothing")
+  }
+
   test("a manifest hand-written in the old comma-list form reads the same rows") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-runs").toString
